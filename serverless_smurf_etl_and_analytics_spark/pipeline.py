@@ -24,6 +24,16 @@ Scale notes (100 TB):
   the fact table is scanned a constant number of times per run;
 - the ledger is append-only, one row per run — read it with a filter
   on run_date (partition-prunable if grown large).
+
+Each output is written once, and none is read back just to count it.
+The ledger's ``*_rows`` counts come from an ``Observation`` on each
+full-overwrite table's own write (no listing, no extra job).
+``store_daily`` is read back once, persisted, and counted; the count
+fills the cache that every later step reads. The partition-overwrite
+sketch layers keep their table-level count, read with the schema they
+were just written with, as are the insight tables the exports read, so
+no footer-inference job runs. The ledger row itself is built in the
+JVM (``spark.range``), so recording a run starts no Python worker.
 """
 
 from __future__ import annotations
@@ -32,8 +42,9 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
 
 from . import tables
@@ -53,6 +64,8 @@ from .operators.insights import (
 )
 
 LEDGER_DIR = "run_ledger"
+LEDGER_COLUMNS = ("run_date", "status", "stats", "recorded_at")
+LEDGER_SCHEMA = ", ".join(f"{c} string" for c in LEDGER_COLUMNS)
 
 
 def _ledger_path(out_dir: str) -> str:
@@ -60,11 +73,12 @@ def _ledger_path(out_dir: str) -> str:
 
 
 def read_ledger(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The run ledger, or None before the first recorded run."""
+    """The run ledger, or None before the first recorded run. Read with
+    the declared schema, so no footer-inference job runs."""
     path = _ledger_path(out_dir)
     if not os.path.isdir(path):
         return None
-    return spark.read.parquet(path)
+    return spark.read.schema(LEDGER_SCHEMA).parquet(path)
 
 
 def already_succeeded(
@@ -77,15 +91,9 @@ def already_succeeded(
     led = read_ledger(spark, out_dir)
     if led is None:
         return False
-    return (
-        led.filter(
-            (F.col("run_date") == run_date)
-            & (F.col("status") == "succeeded")
-        )
-        .limit(1)
-        .count()
-        > 0
-    )
+    return not led.filter(
+        (F.col("run_date") == run_date) & (F.col("status") == "succeeded")
+    ).isEmpty()
 
 
 def record_run(
@@ -96,19 +104,59 @@ def record_run(
     stats: dict,
 ) -> None:
     """Append one ledger row (run_date, status, stats json, recorded
-    UTC timestamp)."""
-    row = [
-        (
-            run_date,
-            status,
-            json.dumps(stats, sort_keys=True),
-            time.strftime("%Y-%m-%dT%H:%M:%S", time.gmtime()),
-        )
-    ]
-    df = spark.createDataFrame(
-        row, "run_date string, status string, stats string, recorded_at string"
+    UTC timestamp). The row is built in the JVM from literals, so no
+    Python worker starts; ``when(id == 0, ...)`` keeps the columns
+    nullable (parquet OPTIONAL, the ledger's layout), where a bare
+    literal would be written REQUIRED."""
+    values = (
+        run_date,
+        status,
+        json.dumps(stats, sort_keys=True),
+        time.strftime("%Y-%m-%dT%H:%M:%S", time.gmtime()),
     )
-    df.coalesce(1).write.mode("append").parquet(_ledger_path(out_dir))
+    row = spark.range(1, numPartitions=1).select(
+        *[
+            F.when(F.col("id") == 0, F.lit(v)).alias(c)
+            for c, v in zip(LEDGER_COLUMNS, values)
+        ]
+    )
+    row.write.mode("append").parquet(_ledger_path(out_dir))
+
+
+def _write_counted(df: DataFrame, path: str) -> int:
+    """Overwrite ``path`` with ``df`` and return the rows written, taken
+    from an observation on the write itself: no read-back, no extra
+    job."""
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+        "overwrite"
+    ).parquet(path)
+    return obs.get["rows"]
+
+
+def _read_partitioned(
+    spark: SparkSession, path: str, written: StructType
+) -> DataFrame:
+    """A sale_date-partitioned table read with the schema it was
+    written with (data columns, then the partition column), so no
+    footer-inference job runs."""
+    data = [f for f in written.fields if f.name != "sale_date"]
+    return spark.read.schema(
+        StructType(data + [written["sale_date"]])
+    ).parquet(path)
+
+
+def _overwrite_partitions(df: DataFrame, path: str) -> int:
+    """Dynamically overwrite ``df``'s sale_date partitions at ``path``
+    and return the TABLE's row count (every partition, not just the
+    rewritten ones)."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("sale_date")
+        .parquet(path)
+    )
+    return _read_partitioned(df.sparkSession, path, df.schema).count()
 
 
 def materialize_store_daily(df: DataFrame, path: str) -> None:
@@ -167,183 +215,177 @@ def run_daily_pipeline(
 
     txns = tables.transactions(spark, sf_dir)
     stats: dict = {"run_date": run_date, "skipped": False}
+    # every frame this run persists, released on success AND failure
+    persisted: list[DataFrame] = []
 
-    # 1. store_daily — the central MV, nested serving shape, one
-    #    partition per day. Incremental runs aggregate run_date's rows
-    #    only (every store_daily column is a per-(store, day) quantity,
-    #    so single-date aggregation is exact) and rewrite one
-    #    partition; the bootstrap aggregates all history. At 100 TB the
-    #    fact side of an incremental run is one day's slice — with a
-    #    date-partitioned fact layout (the S5 sink's shape) the scan
-    #    prunes to that day's files.
-    sd_path = os.path.join(out_dir, "store_daily")
-    bootstrap = full_refresh or not os.path.isdir(sd_path)
-    mv_input = (
-        txns if bootstrap else txns.filter(F.col("sale_date") == run_date)
-    )
-    stats["store_daily_mode"] = "bootstrap" if bootstrap else "incremental"
-    materialize_store_daily(metrics.store_daily_nested(mv_input), sd_path)
-    # partition-column type inference reads sale_date back as DATE;
-    # cast to string so MV consumers see the canonical column type
-    store_daily = spark.read.parquet(sd_path).withColumn(
-        "sale_date", F.col("sale_date").cast("string")
-    )
-    stats["store_daily_rows"] = store_daily.count()
+    def keep(df: DataFrame) -> DataFrame:
+        persisted.append(df.persist(StorageLevel.MEMORY_AND_DISK))
+        return df
 
-    # 2. company_daily — rolls up the MATERIALIZED store_daily
-    #    (calc-company-metrics consumes the persisted summaries, never
-    #    the fact table)
-    co_path = os.path.join(out_dir, "company_daily")
-    metrics.company_daily(store_daily).write.mode("overwrite").parquet(
-        co_path
-    )
-    stats["company_daily_rows"] = spark.read.parquet(co_path).count()
+    try:
+        # 1. store_daily — the central MV, nested serving shape, one
+        #    partition per day. Incremental runs aggregate run_date's rows
+        #    only (every store_daily column is a per-(store, day) quantity,
+        #    so single-date aggregation is exact) and rewrite one
+        #    partition; the bootstrap aggregates all history. At 100 TB the
+        #    fact side of an incremental run is one day's slice — with a
+        #    date-partitioned fact layout (the S5 sink's shape) the scan
+        #    prunes to that day's files.
+        sd_path = os.path.join(out_dir, "store_daily")
+        bootstrap = full_refresh or not os.path.isdir(sd_path)
+        mv_input = (
+            txns if bootstrap else txns.filter(F.col("sale_date") == run_date)
+        )
+        stats["store_daily_mode"] = "bootstrap" if bootstrap else "incremental"
+        sd_new = metrics.store_daily_nested(mv_input)
+        materialize_store_daily(sd_new, sd_path)
+        # read the whole table back ONCE (an incremental run rewrote one
+        # partition of it) and persist it: the table-level count fills the
+        # cache, and every later consumer reads the cached frame
+        store_daily = keep(_read_partitioned(spark, sd_path, sd_new.schema))
+        stats["store_daily_rows"] = store_daily.count()
 
-    # 3. product_daily — top-5 parity rollup from the MATERIALIZED
-    #    nested top_products lists (calc-product-metrics consumes each
-    #    store's top-5, SURVEY A6 parity trap)
-    pd_path = os.path.join(out_dir, "product_daily")
-    top_long = store_daily.select(
-        "store_id", "sale_date", F.explode("top_products").alias("tp")
-    ).select(
-        "store_id",
-        "sale_date",
-        F.col("tp.item_sku").alias("item_sku"),
-        F.col("tp.units").alias("units"),
-        F.col("tp.revenue").alias("revenue"),
-    )
-    product_daily = top_long.groupBy("sale_date", "item_sku").agg(
-        F.sum("units").alias("units_sold"),
-        (
-            F.sum(F.round(F.col("revenue") * 100).cast("long")).cast("long")
-            / 100.0
-        ).cast("double").alias("revenue"),
-        F.countDistinct("store_id").alias("store_count"),
-        F.concat_ws(",", F.sort_array(F.collect_set("store_id"))).alias(
-            "stores_sold_at"
-        ),
-    )
-    product_daily.write.mode("overwrite").parquet(pd_path)
-    stats["product_daily_rows"] = spark.read.parquet(pd_path).count()
-
-    # 3b. sku_sketches — the per-(store, day) KMV sketch layer (one
-    #     bounded row per store-day, <= 64 hashes). Incremental like
-    #     store_daily: a daily run sketches run_date's slice only and
-    #     dynamically overwrites that one partition. Range
-    #     distinct-SKU questions then merge sketches via
-    #     ``distinct_skus_for_range`` below — zero fact-table reads.
-    sk_path = os.path.join(out_dir, "sku_sketches")
-    (
-        kmv_daily_sketches(mv_input)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("sale_date")
-        .parquet(sk_path)
-    )
-    stats["sku_sketch_rows"] = spark.read.parquet(sk_path).count()
-
-    # 3c. hll_registers — the per-(payment_method, day) HLL register
-    #     layer (<= 256 bounded rows per method-day), same incremental
-    #     contract as 3b; range distinct-transaction questions merge
-    #     registers via ``distinct_transactions_for_range`` below.
-    hr_path = os.path.join(out_dir, "hll_registers")
-    (
-        hll_daily_registers(mv_input)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("sale_date")
-        .parquet(hr_path)
-    )
-    stats["hll_register_rows"] = spark.read.parquet(hr_path).count()
-
-    # 3d. cents_histograms — the per-(payment_method, day) power-of-two
-    #     histogram layer (<= 64 bounded rows per method-day), same
-    #     incremental contract as 3b/3c; range median questions merge
-    #     bins via ``median_cents_for_range`` below. Third member of
-    #     the materialize+merge family: KMV (distincts), HLL
-    #     (distincts at constant state), histograms (quantiles).
-    ch_path = os.path.join(out_dir, "cents_histograms")
-    (
-        daily_log2_histograms(mv_input)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("sale_date")
-        .parquet(ch_path)
-    )
-    stats["cents_histogram_rows"] = spark.read.parquet(ch_path).count()
-
-    # 4. insights — ONE persisted daily-cents + ONE persisted anomaly
-    #    set feed all three classifiers (no duplicate window chains).
-    #    daily-cents is DERIVED FROM THE MATERIALIZED MV, not the fact
-    #    table: sales_c/txn_count round-trip exactly through the
-    #    persisted total_sales/transaction_count (integer-cents rule),
-    #    so the window chain reads |stores| x |days| rows instead of
-    #    rescanning raw transactions (detect-anomalies reads the
-    #    persisted summaries too, lambda_function.py:64-135).
-    daily = store_daily.select(
-        "store_id",
-        "sale_date",
-        cents(F.col("total_sales")).alias("sales_c"),
-        F.col("transaction_count").alias("txn_count"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    anomalies = classify_anomalies_from_daily(daily).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    trends = trend_insights_from_daily(daily)
-    recs = recommendations_from(anomalies)
-    ins_path = os.path.join(out_dir, "insights")
-    for name, df in (
-        ("anomalies", anomalies),
-        ("trends", trends),
-        ("recommendations", recs),
-    ):
-        df.write.mode("overwrite").parquet(os.path.join(ins_path, name))
-        stats[f"{name}_rows"] = (
-            spark.read.parquet(os.path.join(ins_path, name)).count()
+        # 2. company_daily — rolls up the MATERIALIZED store_daily
+        #    (calc-company-metrics consumes the persisted summaries, never
+        #    the fact table)
+        stats["company_daily_rows"] = _write_counted(
+            metrics.company_daily(store_daily),
+            os.path.join(out_dir, "company_daily"),
         )
 
-    # 5. daily report for run_date (O5/O9 string layer); the
-    #    recommendations section reuses the persisted anomaly set
-    #    instead of re-running the window chain over the fact table
-    rpt_path = os.path.join(out_dir, "report")
-    report.daily_report_lines(
-        txns, run_date, recs=recs
-    ).coalesce(1).write.mode("overwrite").parquet(rpt_path)
-    stats["report_lines"] = spark.read.parquet(rpt_path).count()
-
-    # 6. BI exports (S7) from the MATERIALIZED tables
-    an_mv = spark.read.parquet(os.path.join(ins_path, "anomalies"))
-    tr_mv = spark.read.parquet(os.path.join(ins_path, "trends"))
-    re_mv = spark.read.parquet(os.path.join(ins_path, "recommendations"))
-    start = export_start or run_date
-    end = export_end or run_date
-    datasets = {
-        "store_summaries": store_daily.filter(
-            F.col("sale_date").between(start, end)
+        # 3. product_daily — top-5 parity rollup from the MATERIALIZED
+        #    nested top_products lists (calc-product-metrics consumes each
+        #    store's top-5, SURVEY A6 parity trap)
+        top_long = store_daily.select(
+            "store_id", "sale_date", F.explode("top_products").alias("tp")
         ).select(
-            F.col("sale_date").alias("date"),
             "store_id",
-            F.concat(F.lit("Store "), F.col("store_id")).alias("store_name"),
-            "total_sales",
-            F.col("transaction_count").alias("transactions"),
-            F.col("item_count").alias("items_sold"),
-            F.col("avg_transaction").alias("average_transaction"),
-        ),
-        "top_products": top_long.filter(
-            F.col("sale_date").between(start, end)
-        ),
-        "anomalies": export._export_anomalies_from(an_mv),
-        "trends": export._export_trends_from(tr_mv),
-        "recommendations": export._export_recommendations_from(re_mv),
-    }
-    manifest = export.write_ndjson_export(
-        datasets, os.path.join(out_dir, "exports")
-    )
-    stats["export_datasets"] = len(manifest["datasets"])
+            "sale_date",
+            F.col("tp.item_sku").alias("item_sku"),
+            F.col("tp.units").alias("units"),
+            F.col("tp.revenue").alias("revenue"),
+        )
+        product_daily = top_long.groupBy("sale_date", "item_sku").agg(
+            F.sum("units").alias("units_sold"),
+            (
+                F.sum(F.round(F.col("revenue") * 100).cast("long"))
+                .cast("long")
+                / 100.0
+            ).cast("double").alias("revenue"),
+            F.countDistinct("store_id").alias("store_count"),
+            F.concat_ws(",", F.sort_array(F.collect_set("store_id"))).alias(
+                "stores_sold_at"
+            ),
+        )
+        stats["product_daily_rows"] = _write_counted(
+            product_daily, os.path.join(out_dir, "product_daily")
+        )
 
-    record_run(spark, out_dir, run_date, "succeeded", stats)
-    daily.unpersist()
-    anomalies.unpersist()
+        # 3b. sku_sketches — the per-(store, day) KMV sketch layer (one
+        #     bounded row per store-day, <= 64 hashes). Incremental like
+        #     store_daily: a daily run sketches run_date's slice only and
+        #     dynamically overwrites that one partition. Range
+        #     distinct-SKU questions then merge sketches via
+        #     ``distinct_skus_for_range`` below — zero fact-table reads.
+        stats["sku_sketch_rows"] = _overwrite_partitions(
+            kmv_daily_sketches(mv_input), os.path.join(out_dir, "sku_sketches")
+        )
+
+        # 3c. hll_registers — the per-(payment_method, day) HLL register
+        #     layer (<= 256 bounded rows per method-day), same incremental
+        #     contract as 3b; range distinct-transaction questions merge
+        #     registers via ``distinct_transactions_for_range`` below.
+        stats["hll_register_rows"] = _overwrite_partitions(
+            hll_daily_registers(mv_input),
+            os.path.join(out_dir, "hll_registers"),
+        )
+
+        # 3d. cents_histograms — the per-(payment_method, day) power-of-two
+        #     histogram layer (<= 64 bounded rows per method-day), same
+        #     incremental contract as 3b/3c; range median questions merge
+        #     bins via ``median_cents_for_range`` below. Third member of
+        #     the materialize+merge family: KMV (distincts), HLL
+        #     (distincts at constant state), histograms (quantiles).
+        stats["cents_histogram_rows"] = _overwrite_partitions(
+            daily_log2_histograms(mv_input),
+            os.path.join(out_dir, "cents_histograms"),
+        )
+
+        # 4. insights — ONE persisted daily-cents + ONE persisted anomaly
+        #    set feed all three classifiers (no duplicate window chains).
+        #    daily-cents is DERIVED FROM THE MATERIALIZED MV, not the fact
+        #    table: sales_c/txn_count round-trip exactly through the
+        #    persisted total_sales/transaction_count (integer-cents rule),
+        #    so the window chain reads |stores| x |days| rows instead of
+        #    rescanning raw transactions (detect-anomalies reads the
+        #    persisted summaries too, lambda_function.py:64-135).
+        daily = keep(
+            store_daily.select(
+                "store_id",
+                "sale_date",
+                cents(F.col("total_sales")).alias("sales_c"),
+                F.col("transaction_count").alias("txn_count"),
+            )
+        )
+        anomalies = keep(classify_anomalies_from_daily(daily))
+        recs = recommendations_from(anomalies)
+        ins_path = os.path.join(out_dir, "insights")
+        insights = {
+            "anomalies": anomalies,
+            "trends": trend_insights_from_daily(daily),
+            "recommendations": recs,
+        }
+        for name, df in insights.items():
+            stats[f"{name}_rows"] = _write_counted(
+                df, os.path.join(ins_path, name)
+            )
+
+        # 5. daily report for run_date (O5/O9 string layer); the
+        #    recommendations section reuses the persisted anomaly set
+        #    instead of re-running the window chain over the fact table
+        stats["report_lines"] = _write_counted(
+            report.daily_report_lines(txns, run_date, recs=recs).coalesce(1),
+            os.path.join(out_dir, "report"),
+        )
+
+        # 6. BI exports (S7) from the MATERIALIZED tables; the insight
+        #    tables are read with the schemas they were written with
+        an_mv, tr_mv, re_mv = (
+            spark.read.schema(df.schema).parquet(os.path.join(ins_path, name))
+            for name, df in insights.items()
+        )
+        start = export_start or run_date
+        end = export_end or run_date
+        datasets = {
+            "store_summaries": store_daily.filter(
+                F.col("sale_date").between(start, end)
+            ).select(
+                F.col("sale_date").alias("date"),
+                "store_id",
+                F.concat(F.lit("Store "), F.col("store_id")).alias(
+                    "store_name"
+                ),
+                "total_sales",
+                F.col("transaction_count").alias("transactions"),
+                F.col("item_count").alias("items_sold"),
+                F.col("avg_transaction").alias("average_transaction"),
+            ),
+            "top_products": top_long.filter(
+                F.col("sale_date").between(start, end)
+            ),
+            "anomalies": export._export_anomalies_from(an_mv),
+            "trends": export._export_trends_from(tr_mv),
+            "recommendations": export._export_recommendations_from(re_mv),
+        }
+        manifest = export.write_ndjson_export(
+            datasets, os.path.join(out_dir, "exports")
+        )
+        stats["export_datasets"] = len(manifest["datasets"])
+
+        record_run(spark, out_dir, run_date, "succeeded", stats)
+    finally:
+        for df in persisted:
+            df.unpersist()
     return stats
 
 

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import FILENAME_PATTERN, PAYMENT_METHODS, TXN_READ_SCHEMA
@@ -96,11 +96,23 @@ def validation_errors() -> F.Column:
     return F.filter(F.array(*checks), lambda x: x.isNotNull())
 
 
-def validate_split(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """S3+S4: one scan, two streams — (valid, rejected-with-errors)."""
+def validate_split(
+    raw: DataFrame, counts: Observation | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """S3+S4: one scan, two streams — (valid, rejected-with-errors).
+
+    ``counts``: optionally an observation that the valid stream's
+    first action fills with the ``valid`` and ``rejected`` row counts.
+    It sits below the valid filter, which Catalyst does not push
+    through an observation, so that one scan sees every row."""
     checked = raw.withColumn("_errors", validation_errors())
+    observed = checked if counts is None else checked.observe(
+        counts,
+        F.count_if(F.size("_errors") == 0).alias("valid"),
+        F.count_if(F.size("_errors") > 0).alias("rejected"),
+    )
     valid = (
-        checked.filter(F.size("_errors") == 0)
+        observed.filter(F.size("_errors") == 0)
         .withColumn(
             "ts",
             F.try_to_timestamp(
@@ -163,13 +175,14 @@ def ingest(
 ) -> tuple[int, int]:
     """End-to-end S1->S5. Returns (valid_rows, rejected_rows)."""
     raw = read_uploads(spark, upload_dir)
-    valid, rejected = validate_split(raw)
+    # THIS run's rows, counted by the partitioned write's own scan
+    # (counting processed_dir after a dynamic overwrite would also
+    # count untouched partitions from earlier runs)
+    counts = Observation()
+    valid, rejected = validate_split(raw, counts)
     write_partitioned(valid, processed_dir)
-    # count THIS run's valid rows (counting processed_dir after a
-    # dynamic overwrite would also count untouched partitions from
-    # earlier runs)
-    n_valid = valid.count()
-    n_rejected = rejected.count()
+    got = counts.get
+    n_valid, n_rejected = got["valid"], got["rejected"]
     if rejected_dir and n_rejected:
         write_quarantine(rejected, rejected_dir)
     return n_valid, n_rejected

@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from serverless_smurf_etl_and_analytics_spark.sources import ingest
@@ -100,6 +101,36 @@ def test_validate_split_and_partitioned_write(spark, upload_dir, tmp_path):
     got = {r["_file_name"]: r for r in files.collect()}
     assert "store_0042_2001-11-04.json" in got
     assert got["store_0042_2001-11-04.json"]["bad_rows"] == 5
+
+
+def test_ingest_counts_both_streams_during_the_write(
+    spark, upload_dir, tmp_path
+):
+    """ingest() takes the valid and rejected counts from one
+    observation on the partitioned write. They equal separate counts of
+    the two streams, because Catalyst keeps the valid filter above the
+    observation, which therefore sees every row."""
+    raw = ingest.read_uploads(spark, str(upload_dir))
+    valid, rejected = ingest.validate_split(raw)
+    want = (valid.count(), rejected.count())
+    assert want[0] > 0 and want[1] > 0
+    quarantine = tmp_path / "quarantine"
+    got = ingest.ingest(
+        spark, str(upload_dir), str(tmp_path / "processed"), str(quarantine)
+    )
+    assert got == want
+    assert quarantine.is_dir()
+
+    observed, _ = ingest.validate_split(raw, Observation())
+    plan = observed._jdf.queryExecution().optimizedPlan().toString()
+    lines = plan.splitlines()
+    metrics = [i for i, line in enumerate(lines) if "CollectMetrics" in line]
+    filters = [
+        i for i, line in enumerate(lines)
+        if "Filter" in line and "_errors" in line
+    ]
+    assert len(metrics) == 1 and filters
+    assert max(filters) < metrics[0], plan
 
 
 def test_dynamic_partition_overwrite_idempotency(spark, upload_dir, tmp_path):

@@ -5,7 +5,10 @@ S10 run-ledger idempotency (``infrastructure/eventbridge.tf:81-148``).
 from __future__ import annotations
 
 import os
+import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from serverless_smurf_etl_and_analytics_spark import pipeline, tables
@@ -34,6 +37,99 @@ def test_pipeline_materializes_all_tables(spark, out_dir):
     assert stats["report_lines"] >= 2
     assert stats["export_datasets"] == 5
     assert os.path.exists(os.path.join(d, "exports", "manifest.json"))
+
+
+# every ledger stat that counts a table's rows, and that table's path
+# below the output directory
+COUNTED_TABLES = {
+    "store_daily_rows": ("store_daily",),
+    "company_daily_rows": ("company_daily",),
+    "product_daily_rows": ("product_daily",),
+    "sku_sketch_rows": ("sku_sketches",),
+    "hll_register_rows": ("hll_registers",),
+    "cents_histogram_rows": ("cents_histograms",),
+    "anomalies_rows": ("insights", "anomalies"),
+    "trends_rows": ("insights", "trends"),
+    "recommendations_rows": ("insights", "recommendations"),
+    "report_lines": ("report",),
+}
+
+
+def _counts_on_disk(spark, d):
+    return {
+        stat: spark.read.parquet(os.path.join(d, *path)).count()
+        for stat, path in COUNTED_TABLES.items()
+    }
+
+
+def _counted_stats(stats):
+    assert {
+        k for k in stats if k.endswith("_rows") or k == "report_lines"
+    } == set(COUNTED_TABLES)
+    return {k: stats[k] for k in COUNTED_TABLES}
+
+
+def test_ledger_counts_equal_fresh_table_counts(spark, out_dir, tmp_path):
+    """Law: every row count a run records equals a fresh count of that
+    table on disk, after the bootstrap run and after an incremental run
+    on top of it. The counts come from write observations and the
+    cached store_daily, not from reading the tables back, and the
+    partition-overwrite tables must still report TABLE-level rows."""
+    d, boot = out_dir
+    assert boot["store_daily_mode"] == "bootstrap"
+    assert _counted_stats(boot) == _counts_on_disk(spark, d)
+
+    # the incremental run works on a copy, so the shared fixture's
+    # tables and ledger stay as the bootstrap left them
+    inc_dir = str(tmp_path / "incremental")
+    shutil.copytree(d, inc_dir)
+    inc = pipeline.run_daily_pipeline(spark, SF_DIR, inc_dir, "2001-06-16")
+    assert inc["store_daily_mode"] == "incremental"
+    assert _counted_stats(inc) == _counts_on_disk(spark, inc_dir)
+
+
+def test_failed_run_releases_cache_and_records_nothing(
+    spark, out_dir, tmp_path
+):
+    """A run that fails part-way (here the export sink's directory is a
+    regular file) raises, appends no ledger row, and leaves the
+    persisted blocks as they were before the run."""
+    d, _ = out_dir
+    fail_dir = str(tmp_path / "failing")
+    shutil.copytree(d, fail_dir)
+    exports = os.path.join(fail_dir, "exports")
+    shutil.rmtree(exports)
+    open(exports, "w").close()
+    jsc = spark.sparkContext._jsc.sc()
+
+    def cached_rdds():
+        return sorted(i.id() for i in jsc.getRDDStorageInfo())
+
+    ledger_rows = pipeline.read_ledger(spark, fail_dir).count()
+    before = cached_rdds()
+    with pytest.raises(Exception, match="exports"):
+        pipeline.run_daily_pipeline(
+            spark, SF_DIR, fail_dir, RUN_DATE, force=True
+        )
+    assert cached_rdds() == before
+    assert pipeline.read_ledger(spark, fail_dir).count() == ledger_rows
+
+
+def test_ledger_is_read_with_its_declared_schema(spark, out_dir):
+    """read_ledger uses the declared schema, and the JVM-built ledger
+    rows keep the parquet layout: four nullable string columns."""
+    d, _ = out_dir
+    led = pipeline.read_ledger(spark, d)
+    assert tuple(led.columns) == pipeline.LEDGER_COLUMNS
+    assert led.filter(led.run_date == RUN_DATE).count() == 1
+    ledger_dir = os.path.join(d, pipeline.LEDGER_DIR)
+    for f in os.listdir(ledger_dir):
+        if f.endswith(".parquet"):
+            schema = pq.read_schema(os.path.join(ledger_dir, f))
+            assert sorted(schema.names) == sorted(pipeline.LEDGER_COLUMNS)
+            assert all(
+                fld.nullable and fld.type == pa.string() for fld in schema
+            )
 
 
 def test_company_daily_matches_direct_computation(spark, out_dir):
