@@ -1,0 +1,56 @@
+"""Independent Spark writes, submitted together from driver threads.
+
+Each write is its own Spark action and mostly pays fixed per-action
+wall (planning, file commit, small stages) on a small daily slice, so
+running independent writes one after another leaves the cores idle.
+Submitted from one driver thread each, their jobs overlap in the
+scheduler.
+
+Only the write action runs on a worker thread. The caller builds every
+DataFrame first, on its own thread: the operator memos
+(``operators.memo._MEMO``, ``tables._FRAME_MEMO``) are plain dicts,
+and py4j Column composition gains nothing from threads.
+"""
+
+from __future__ import annotations
+
+from collections.abc import Callable
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+from typing import TypeVar
+
+from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
+
+T = TypeVar("T")
+
+
+def write_all(writes: dict[str, Callable[[], T]]) -> dict[str, T]:
+    """Run every write thunk on its own driver thread; return
+    ``{name: result}``.
+
+    Each thread starts with its own copy of the calling thread's Spark
+    local properties (job group, job description, scheduler pool) and
+    the active session's tags, so every job launches as if the caller
+    had run it and ``cancelJobGroup`` still reaches it. If a write
+    fails, the writes that have not started are cancelled, the running
+    ones are waited for, and then the first error is raised."""
+    if not writes:
+        return {}
+    spark = SparkSession.active()
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        # one wrapper per write: each wrapper holds its own copy of the
+        # caller's local properties, and Spark mutates a thread's copy
+        # per query (spark.sql.execution.id), so one shared wrapper
+        # would let concurrent writes overwrite each other's
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(fn))
+            for name, fn in writes.items()
+        }
+        done, pending = wait(futures.values(), return_when=FIRST_EXCEPTION)
+        failed = [f for f in futures.values() if f in done and f.exception()]
+        if failed:
+            for f in pending:
+                f.cancel()
+            wait(pending)
+            raise failed[0].exception()
+    return {name: f.result() for name, f in futures.items()}

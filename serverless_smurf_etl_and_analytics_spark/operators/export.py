@@ -21,11 +21,13 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..concurrent_writes import write_all
 from ..functions.money import dollars
 from .insights import shared_insight_frames
 from .metrics import store_day_metrics, top_products_per_store_day
@@ -300,19 +302,28 @@ def write_ndjson_export(
     """S7 sink: write each dataset as NDJSON (Spark's JSON writer is
     JSON-lines natively, matching ``wr.s3.to_json(..., lines=True)`` at
     ``export-to-quicksight/lambda_function.py:331-360``) plus a
-    ``manifest.json`` naming every part file per dataset."""
+    ``manifest.json`` naming every part file per dataset. The datasets
+    are written concurrently (``concurrent_writes.write_all``); the
+    manifest is written only after every one of them committed."""
+    paths = {name: os.path.join(out_dir, name) for name in datasets}
+    write_all(
+        {
+            name: partial(
+                (df.coalesce(1) if single_file else df)
+                .write.mode("overwrite").json,
+                paths[name],
+            )
+            for name, df in datasets.items()
+        }
+    )
     manifest: dict = {"datasets": {}}
     for name, df in datasets.items():
-        path = os.path.join(out_dir, name)
-        (df.coalesce(1) if single_file else df).write.mode(
-            "overwrite"
-        ).json(path)
         files = sorted(
-            f for f in os.listdir(path)
+            f for f in os.listdir(paths[name])
             if f.startswith("part-") and f.endswith(".json")
         )
         manifest["datasets"][name] = {
-            "path": path,
+            "path": paths[name],
             "files": files,
             "columns": df.columns,
         }

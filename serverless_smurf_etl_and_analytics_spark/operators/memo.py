@@ -27,6 +27,9 @@ Scope and staleness, stated precisely:
   plans): executing a memoized frame recomputes through whatever
   session persists it references, exactly as the per-call-built frame
   did.
+- ``_MEMO`` is a plain dict, touched only from the caller thread that
+  builds frames; ``concurrent_writes.write_all`` gives its worker
+  threads write actions only.
 """
 
 from __future__ import annotations

@@ -34,6 +34,26 @@ sketch layers keep their table-level count, read with the schema they
 were just written with, as are the insight tables the exports read, so
 no footer-inference job runs. The ledger row itself is built in the
 JVM (``spark.range``), so recording a run starts no Python worker.
+
+The writes follow the run's dependency graph in three phases. Each
+phase submits its writes together (``concurrent_writes.write_all``,
+one driver thread per write) and waits for all of them:
+
+- A: ``store_daily`` alongside the three sketch layers, which read
+  only the run's fact slice. Then the one barrier: store_daily is read
+  back, persisted and counted.
+- B: company_daily, product_daily, the three insight sets and the
+  report, which read the cached store_daily, the persisted daily cents
+  and anomaly set, or the facts.
+- C: the five NDJSON exports. ``manifest.json`` is written after all
+  five commit, and the ledger row after that.
+
+Every DataFrame is built on the calling thread; only the write action
+runs on a worker. A failed write raises after the running writes
+finish. The ``finally`` then waits until no job of the caller's job
+group is active before releasing the cache, so a job still running
+cannot re-cache a released frame. The manifest and the ledger row are
+written only when every write succeeded.
 """
 
 from __future__ import annotations
@@ -41,6 +61,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from functools import partial
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -48,6 +69,7 @@ from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
 
 from . import tables
+from .concurrent_writes import write_all
 from .functions.money import cents
 from .operators import export, metrics, report
 from .operators.quality import daily_log2_histograms, hist_merge_daily
@@ -159,6 +181,17 @@ def _overwrite_partitions(df: DataFrame, path: str) -> int:
     return _read_partitioned(df.sparkSession, path, df.schema).count()
 
 
+def _drain_jobs(sc) -> None:
+    """Block until no job of the calling thread's job group is active
+    (jobs without a group when it has none)."""
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    tracker = sc.statusTracker()
+    while set(tracker.getActiveJobsIds()).intersection(
+        tracker.getJobIdsForGroup(group)
+    ):
+        time.sleep(0.01)
+
+
 def materialize_store_daily(df: DataFrame, path: str) -> None:
     """Write the store_daily MV in its SERVING layout: one directory
     per sale_date (directory-level partition pruning serves the date
@@ -223,14 +256,30 @@ def run_daily_pipeline(
         return df
 
     try:
-        # 1. store_daily — the central MV, nested serving shape, one
-        #    partition per day. Incremental runs aggregate run_date's rows
-        #    only (every store_daily column is a per-(store, day) quantity,
-        #    so single-date aggregation is exact) and rewrite one
-        #    partition; the bootstrap aggregates all history. At 100 TB the
-        #    fact side of an incremental run is one day's slice — with a
-        #    date-partitioned fact layout (the S5 sink's shape) the scan
-        #    prunes to that day's files.
+        # Phase A. store_daily — the central MV, nested serving shape, one
+        #    partition per day — written alongside the three sketch
+        #    layers, which read only mv_input. Incremental runs aggregate
+        #    run_date's rows only (every store_daily column is a
+        #    per-(store, day) quantity, so single-date aggregation is
+        #    exact) and rewrite one partition; the bootstrap aggregates
+        #    all history. At 100 TB the fact side of an incremental run is
+        #    one day's slice — with a date-partitioned fact layout (the S5
+        #    sink's shape) the scan prunes to that day's files.
+        #  - sku_sketches: the per-(store, day) KMV sketch layer (one
+        #    bounded row per store-day, <= 64 hashes); range distinct-SKU
+        #    questions merge sketches via ``distinct_skus_for_range``.
+        #  - hll_registers: the per-(payment_method, day) HLL register
+        #    layer (<= 256 bounded rows per method-day); range
+        #    distinct-transaction questions merge registers via
+        #    ``distinct_transactions_for_range``.
+        #  - cents_histograms: the per-(payment_method, day) power-of-two
+        #    histogram layer (<= 64 bounded rows per method-day); range
+        #    median questions merge bins via ``median_cents_for_range``.
+        #  The sketch layers are incremental like store_daily (a daily run
+        #  rewrites run_date's partition) and report their TABLE-level
+        #  row counts. Materialize+merge family: KMV (distincts), HLL
+        #  (distincts at constant state), histograms (quantiles) — zero
+        #  fact-table reads at query time.
         sd_path = os.path.join(out_dir, "store_daily")
         bootstrap = full_refresh or not os.path.isdir(sd_path)
         mv_input = (
@@ -238,24 +287,50 @@ def run_daily_pipeline(
         )
         stats["store_daily_mode"] = "bootstrap" if bootstrap else "incremental"
         sd_new = metrics.store_daily_nested(mv_input)
-        materialize_store_daily(sd_new, sd_path)
-        # read the whole table back ONCE (an incremental run rewrote one
-        # partition of it) and persist it: the table-level count fills the
-        # cache, and every later consumer reads the cached frame
+        sketches = {
+            "sku_sketch_rows": (kmv_daily_sketches(mv_input), "sku_sketches"),
+            "hll_register_rows": (
+                hll_daily_registers(mv_input), "hll_registers"
+            ),
+            "cents_histogram_rows": (
+                daily_log2_histograms(mv_input), "cents_histograms"
+            ),
+        }
+        phase_a = {
+            stat: partial(_overwrite_partitions, df, os.path.join(out_dir, t))
+            for stat, (df, t) in sketches.items()
+        }
+        phase_a["store_daily"] = partial(
+            materialize_store_daily, sd_new, sd_path
+        )
+        written = write_all(phase_a)
+        stats.update({stat: written[stat] for stat in sketches})
+
+        # The one barrier: read the whole store_daily table back ONCE (an
+        # incremental run rewrote one partition of it) and persist it.
+        # The table-level count fills the cache, and every later
+        # consumer reads the cached frame.
         store_daily = keep(_read_partitioned(spark, sd_path, sd_new.schema))
         stats["store_daily_rows"] = store_daily.count()
 
-        # 2. company_daily — rolls up the MATERIALIZED store_daily
+        # Phase B. Every rollup, insight set and the report, at once.
+        #  - company_daily rolls up the MATERIALIZED store_daily
         #    (calc-company-metrics consumes the persisted summaries, never
-        #    the fact table)
-        stats["company_daily_rows"] = _write_counted(
-            metrics.company_daily(store_daily),
-            os.path.join(out_dir, "company_daily"),
-        )
-
-        # 3. product_daily — top-5 parity rollup from the MATERIALIZED
-        #    nested top_products lists (calc-product-metrics consumes each
-        #    store's top-5, SURVEY A6 parity trap)
+        #    the fact table).
+        #  - product_daily is the top-5 parity rollup from the
+        #    MATERIALIZED nested top_products lists (calc-product-metrics
+        #    consumes each store's top-5, SURVEY A6 parity trap).
+        #  - insights: ONE persisted daily-cents + ONE persisted anomaly
+        #    set feed all three classifiers (no duplicate window chains).
+        #    daily-cents is DERIVED FROM THE MATERIALIZED MV, not the fact
+        #    table: sales_c/txn_count round-trip exactly through the
+        #    persisted total_sales/transaction_count (integer-cents rule),
+        #    so the window chain reads |stores| x |days| rows instead of
+        #    rescanning raw transactions (detect-anomalies reads the
+        #    persisted summaries too, lambda_function.py:64-135).
+        #  - the daily report for run_date (O5/O9 string layer); its
+        #    recommendations section reuses the persisted anomaly set
+        #    instead of re-running the window chain over the fact table.
         top_long = store_daily.select(
             "store_id", "sale_date", F.explode("top_products").alias("tp")
         ).select(
@@ -277,48 +352,6 @@ def run_daily_pipeline(
                 "stores_sold_at"
             ),
         )
-        stats["product_daily_rows"] = _write_counted(
-            product_daily, os.path.join(out_dir, "product_daily")
-        )
-
-        # 3b. sku_sketches — the per-(store, day) KMV sketch layer (one
-        #     bounded row per store-day, <= 64 hashes). Incremental like
-        #     store_daily: a daily run sketches run_date's slice only and
-        #     dynamically overwrites that one partition. Range
-        #     distinct-SKU questions then merge sketches via
-        #     ``distinct_skus_for_range`` below — zero fact-table reads.
-        stats["sku_sketch_rows"] = _overwrite_partitions(
-            kmv_daily_sketches(mv_input), os.path.join(out_dir, "sku_sketches")
-        )
-
-        # 3c. hll_registers — the per-(payment_method, day) HLL register
-        #     layer (<= 256 bounded rows per method-day), same incremental
-        #     contract as 3b; range distinct-transaction questions merge
-        #     registers via ``distinct_transactions_for_range`` below.
-        stats["hll_register_rows"] = _overwrite_partitions(
-            hll_daily_registers(mv_input),
-            os.path.join(out_dir, "hll_registers"),
-        )
-
-        # 3d. cents_histograms — the per-(payment_method, day) power-of-two
-        #     histogram layer (<= 64 bounded rows per method-day), same
-        #     incremental contract as 3b/3c; range median questions merge
-        #     bins via ``median_cents_for_range`` below. Third member of
-        #     the materialize+merge family: KMV (distincts), HLL
-        #     (distincts at constant state), histograms (quantiles).
-        stats["cents_histogram_rows"] = _overwrite_partitions(
-            daily_log2_histograms(mv_input),
-            os.path.join(out_dir, "cents_histograms"),
-        )
-
-        # 4. insights — ONE persisted daily-cents + ONE persisted anomaly
-        #    set feed all three classifiers (no duplicate window chains).
-        #    daily-cents is DERIVED FROM THE MATERIALIZED MV, not the fact
-        #    table: sales_c/txn_count round-trip exactly through the
-        #    persisted total_sales/transaction_count (integer-cents rule),
-        #    so the window chain reads |stores| x |days| rows instead of
-        #    rescanning raw transactions (detect-anomalies reads the
-        #    persisted summaries too, lambda_function.py:64-135).
         daily = keep(
             store_daily.select(
                 "store_id",
@@ -335,21 +368,37 @@ def run_daily_pipeline(
             "trends": trend_insights_from_daily(daily),
             "recommendations": recs,
         }
-        for name, df in insights.items():
-            stats[f"{name}_rows"] = _write_counted(
-                df, os.path.join(ins_path, name)
+        phase_b = {
+            "company_daily_rows": (
+                metrics.company_daily(store_daily),
+                os.path.join(out_dir, "company_daily"),
+            ),
+            "product_daily_rows": (
+                product_daily, os.path.join(out_dir, "product_daily")
+            ),
+            **{
+                f"{name}_rows": (df, os.path.join(ins_path, name))
+                for name, df in insights.items()
+            },
+            "report_lines": (
+                report.daily_report_lines(txns, run_date, recs=recs)
+                .coalesce(1),
+                os.path.join(out_dir, "report"),
+            ),
+        }
+        stats.update(
+            write_all(
+                {
+                    stat: partial(_write_counted, df, path)
+                    for stat, (df, path) in phase_b.items()
+                }
             )
-
-        # 5. daily report for run_date (O5/O9 string layer); the
-        #    recommendations section reuses the persisted anomaly set
-        #    instead of re-running the window chain over the fact table
-        stats["report_lines"] = _write_counted(
-            report.daily_report_lines(txns, run_date, recs=recs).coalesce(1),
-            os.path.join(out_dir, "report"),
         )
 
-        # 6. BI exports (S7) from the MATERIALIZED tables; the insight
-        #    tables are read with the schemas they were written with
+        # Phase C. The five BI exports (S7) from the MATERIALIZED tables,
+        #    written together; the insight tables are read with the
+        #    schemas they were written with. manifest.json is written
+        #    after all five commit, and the ledger row after that.
         an_mv, tr_mv, re_mv = (
             spark.read.schema(df.schema).parquet(os.path.join(ins_path, name))
             for name, df in insights.items()
@@ -384,6 +433,9 @@ def run_daily_pipeline(
 
         record_run(spark, out_dir, run_date, "succeeded", stats)
     finally:
+        # a failed write can leave cancelled sibling jobs running for a
+        # moment; one still running could re-cache a released frame
+        _drain_jobs(spark.sparkContext)
         for df in persisted:
             df.unpersist()
     return stats

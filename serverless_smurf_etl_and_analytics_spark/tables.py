@@ -20,6 +20,10 @@ oracle, so every query/oracle pair shares one source of truth. Exact-money
 Scale note: the mapping is pure narrow projection — no shuffle, fully
 pushed into the parquet scan (column pruning keeps unused lineitem
 columns unread).
+
+Threads: ``_FRAME_MEMO`` is a plain dict, touched only from the caller
+thread that builds frames; ``concurrent_writes.write_all`` gives its
+worker threads write actions only.
 """
 
 from __future__ import annotations

@@ -115,6 +115,63 @@ def test_failed_run_releases_cache_and_records_nothing(
     assert pipeline.read_ledger(spark, fail_dir).count() == ledger_rows
 
 
+def test_concurrent_write_failure_drains_before_release(
+    spark, out_dir, tmp_path
+):
+    """The three insight writes fail at once (``insights`` is a regular
+    file) while the rollups and the report, submitted with them,
+    succeed. The run raises, adds no ledger row, leaves no job running
+    and the persisted blocks as they were, and leaves the previous
+    export manifest byte for byte."""
+    d, _ = out_dir
+    fail_dir = str(tmp_path / "failing_insights")
+    shutil.copytree(d, fail_dir)
+    insights = os.path.join(fail_dir, "insights")
+    shutil.rmtree(insights)
+    open(insights, "w").close()
+    manifest = os.path.join(fail_dir, "exports", "manifest.json")
+    with open(manifest, "rb") as f:
+        manifest_before = f.read()
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def cached_rdds():
+        return sorted(i.id() for i in jsc.getRDDStorageInfo())
+
+    ledger_rows = pipeline.read_ledger(spark, fail_dir).count()
+    before = cached_rdds()
+    with pytest.raises(Exception, match="insights"):
+        pipeline.run_daily_pipeline(
+            spark, SF_DIR, fail_dir, RUN_DATE, force=True
+        )
+    assert sc.statusTracker().getActiveJobsIds() == []
+    assert cached_rdds() == before
+    assert pipeline.read_ledger(spark, fail_dir).count() == ledger_rows
+    with open(manifest, "rb") as f:
+        assert f.read() == manifest_before
+
+
+def test_writes_launch_under_the_callers_job_group(spark, out_dir, tmp_path):
+    """Every job of a run, including the ones its concurrent writes
+    launch from worker threads, carries the caller's job group, so
+    ``cancelJobGroup`` reaches the whole run."""
+    d, _ = out_dir
+    inc_dir = str(tmp_path / "grouped")
+    shutil.copytree(d, inc_dir)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("pipeline-test", "incremental run under a job group")
+    try:
+        pipeline.run_daily_pipeline(spark, SF_DIR, inc_dir, "2001-06-16")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert tracker.getJobIdsForGroup("pipeline-test")
+    # the tracker keeps only the most recent jobs, so older ungrouped
+    # ids may drop out; the run must add none
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+
+
 def test_ledger_is_read_with_its_declared_schema(spark, out_dir):
     """read_ledger uses the declared schema, and the JVM-built ledger
     rows keep the parquet layout: four nullable string columns."""
