@@ -1004,23 +1004,19 @@ def connected_components(
     src: str = "vec_a",
     dst: str = "vec_b",
     max_iter: int = 50,
-    algorithm: str = "star",
 ) -> DataFrame:
     """Distributed connected components: returns (v, component) where
     ``component`` is the smallest vertex id reachable from ``v``.
 
-    Dispatcher: ``algorithm="star"`` (default) runs the alternating
-    large-star/small-star contraction of
+    Runs the alternating large-star/small-star contraction of
     :func:`connected_components_star` — the scale path; per-round cost
     SHRINKS as the graph contracts toward stars, where label
     propagation re-joins the full adjacency every round.
-    ``algorithm="labelprop"`` keeps the r4 pointer-jump label
-    propagation as the reference implementation; equality of the two
-    is law-tested on synthetic graphs and the driver corpus
+    :func:`connected_components_labelprop` keeps the r4 pointer-jump
+    label propagation as the reference implementation; equality of the
+    two is law-tested on synthetic graphs and the driver corpus
     (tests/test_graph_dedup.py)."""
-    if algorithm == "star":
-        return connected_components_star(edges, src, dst, max_iter)
-    return connected_components_labelprop(edges, src, dst, max_iter)
+    return connected_components_star(edges, src, dst, max_iter)
 
 
 def connected_components_star(

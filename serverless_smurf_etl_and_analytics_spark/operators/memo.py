@@ -11,8 +11,9 @@ largest single share of suite driver overhead at sf0.1 (measured r14).
 Scope and staleness, stated precisely:
 
 - Keyed by (application id, kind, analyzed-plan semantic hash). A
-  different session, input table, or plan misses; the memo dies with
-  the process.
+  different session, input table, or plan misses; an application's
+  entries live until ``session.clear_operator_caches`` drops them or
+  the process ends.
 - Within one application, an input mutated UNDER an identical plan
   would be masked — but every operator that consults these gates also
   persists derived subtrees (shingles, band tables, pair tables)

@@ -30,10 +30,11 @@ Scale design:
   shard by the pipeline (plain-union merge law). Queries read it
   instead of re-running the matmul stage — measured sf10 cold sim2
   62.5 s -> 24.9 s.
-- near-dup verification is tiered (r8; gate 1M since r10): below the gate the
-  candidate join is slim (bucket keys only) and the exact dot is a
-  broadcast-matrix numpy gather; above, embeddings ride the band rows
-  and the dot runs per pair — both byte-identical, law-tested.
+- near-dup verification is tiered by corpus size (r8): below 10k
+  vectors embeddings ride the band rows and the dot runs per pair;
+  from 10k to 1M the candidate join is slim (bucket keys only) and
+  the exact dot is a broadcast-matrix numpy gather — both
+  byte-identical, law-tested. Larger corpora are refused.
 - at 100 TB: band/list keys are computed in the scan-side Python
   stage; joins shuffle by bucket/centroid key; skewed buckets are
   handled by AQE skew-join.
@@ -588,11 +589,13 @@ _BAND_CACHE_MIN = 10_000
 # corpus-size window for the gather-verify tier of cosine_neardup_pairs.
 # Upper bound: the fixed-point matrix is 512 B/vector (64-dim int64)
 # and every reused Python worker holds a deserialized copy, so 1M
-# vectors caps the per-worker footprint at ~512 MB; beyond it the
-# embedding-riding join (no driver collect) takes over. Raised from
-# 500k in r10: the sf30 rehearsal (600k vectors) crossed the old gate
-# and measured the riding join at 298.5 s vs 186.8 s for the gather
-# tier on the identical 172M-candidate workload
+# vectors caps the per-worker footprint at ~512 MB; beyond it
+# cosine_neardup_pairs raises ValueError at plan time (no fixture or
+# workload here comes near it, and a loud refusal beats a Python-worker
+# OOM deep inside the verify stage). Raised from 500k in r10: the
+# sf30 rehearsal (600k vectors) crossed the old gate and measured
+# the riding join at 298.5 s vs 186.8 s for the gather tier on the
+# identical 172M-candidate workload
 # (benchmarks/scale_r10_summary.json) — a 1.6x cliff at the crossing,
 # so the gate now sits where the memory budget actually binds, not
 # where it comfortably fit. Deployments with small executors should
@@ -630,7 +633,7 @@ def _slim_band_rows(
 # prior _gather_dots broadcasts, unpersisted (executor copies freed)
 # when the next call supersedes them — a long-lived session running
 # many near-dup queries would otherwise accumulate one ~fixed-point
-# matrix (up to ~256 MB at the 500k gate) per call on the executors.
+# matrix (up to ~256 MB at the 1M gate) per call on the executors.
 # unpersist, not destroy: an unconsumed earlier frame stays valid (the
 # driver re-ships the value if its plan executes later).
 # The pop/append runs under a lock: concurrent near-dup PLANS in one
@@ -645,26 +648,19 @@ _GATHER_BC: list = []
 _GATHER_BC_LOCK = threading.Lock()
 
 
-def _swap_gather_bc(bc) -> None:
+def _swap_gather_bc(bc=None) -> None:
     """Register ``bc`` as the live gather broadcast, unpersisting the
-    superseded one, thread-safely (see ``_GATHER_BC`` note)."""
+    superseded one, thread-safely (see ``_GATHER_BC`` note). ``None``
+    only releases (``session.clear_operator_caches``)."""
     with _GATHER_BC_LOCK:
         while _GATHER_BC:
             try:
                 _GATHER_BC.pop().unpersist(False)
             except Exception:
                 pass
-        _GATHER_BC.append(bc)
+        if bc is not None:
+            _GATHER_BC.append(bc)
 
-
-# matrix-size bound above which the gather verify stops BROADCASTING
-# the fixed-point matrix (one deserialized copy per reused Python
-# worker — 8 workers x 2.5 GB at 10M vectors) and switches to a
-# memory-mapped .npy artifact in the shared cache root: np.load(...,
-# mmap_mode="r") pages the file through the OS page cache, ONE
-# resident copy per NODE regardless of worker count. ~1.5 GB =
-# ~5.8M vectors at dim 64 int32.
-_GATHER_MMAP_BYTES = 1_500_000_000
 
 # rows per fancy-index gather slice inside the verify kernel. The
 # einsum over M[ia], M[ib] materializes int64 upcasts of both gathered
@@ -675,174 +671,6 @@ _GATHER_MMAP_BYTES = 1_500_000_000
 # r12 insurance after the emb6m run OOM-killed its verify workers
 # (.scratch/emb6m4.log, stage 26).
 _GATHER_CHUNK_ROWS = 8192
-
-# ceiling on CONCURRENT verify tasks when the matrix rides the mmap
-# transport (corpora past _GATHER_MMAP_BYTES). 32 reused Python
-# workers each carrying a pandas/pyarrow runtime plus gather
-# temporaries — next to a driver JVM already sized for the join
-# stages — is the configuration that died at 6M vectors; 8 workers
-# give each 4x the headroom and the verify stage is gather-bound, not
-# CPU-bound, so the lost parallelism is cheap. Env-tunable per box
-# (SMURF_GATHER_MMAP_TASKS); the broadcast tier keeps full
-# parallelism (bench-scale plans unchanged).
-_GATHER_MMAP_TASKS = 8
-
-
-def _gather_mmap_tasks() -> int:
-    """Validated SMURF_GATHER_MMAP_TASKS (malformed/zero values
-    degrade to the default rather than failing the query)."""
-    import os
-
-    raw = os.environ.get("SMURF_GATHER_MMAP_TASKS")
-    try:
-        return max(1, int(raw)) if raw is not None else _GATHER_MMAP_TASKS
-    except (TypeError, ValueError):
-        return _GATHER_MMAP_TASKS
-
-
-def _part_sort_key(path: str) -> tuple[int, str]:
-    """Sort key placing parquet part files in NUMERIC part order
-    (part-2 < part-10 < part-100000), falling back to the full name
-    for anything unparseable so the sort stays total."""
-    import os
-    import re
-
-    m = re.match(r"part-(\d+)", os.path.basename(path))
-    return (int(m.group(1)) if m else -1, path)
-
-
-def _matrix_npy_artifact(
-    bt: DataFrame,
-    fingerprint: tuple[int, int] | None = None,
-    root: str | None = None,
-) -> str | None:
-    """Find-or-build the corpus fixed-point matrix as memory-mappable
-    ``.npy`` files (``ids.npy`` int64 sorted, ``mat.npy`` int32 — or
-    int64 when any fixed-point value would overflow int32, see
-    :func:`_narrowest_fixed_matrix` — ``n2.npy`` int64) under a
-    fingerprint-keyed dirname — the
-    node-shared transport for the gather verify above
-    ``_GATHER_MMAP_BYTES``. Atomic tmp+rename like every artifact;
-    None on any environmental failure (caller falls back to the
-    broadcast transport).
-
-    Driver-BOUNDED build (r11): the matrix is never collected. The
-    sorted (vec_id, n2, embedding) projection is staged to parquet
-    DISTRIBUTEDLY (sort gives range-partitioned part files, so part
-    order IS global id order), then the driver streams one part file
-    at a time — pass 1 finds the fixed-point abs-max (the int32/int64
-    dtype decision), pass 2 fills a preallocated
-    ``np.lib.format.open_memmap`` — peak driver memory is one part
-    file, not the matrix. The r10 toPandas form held ~3x the matrix
-    on the driver and died on ``spark.driver.maxResultSize`` at 6M
-    vectors — EXACTLY the sizes this transport exists for (the r11
-    emb6m rehearsal found it)."""
-    import glob as globmod
-    import os
-    import shutil
-    import uuid
-
-    import numpy as np
-
-    from .artifacts import cache_root, touch
-
-    try:
-        n, h = fingerprint or corpus_fingerprint(
-            bt.select("vec_id", "embedding")
-        )
-        base = cache_root(root)
-        path = os.path.join(base, f"gmat_v1_n{n}_h{h}")
-        if os.path.isdir(path):
-            touch(path)
-            return path
-        token = uuid.uuid4().hex[:8]
-        stage = f"{path}.stage-{token}"
-        tmp = f"{path}.tmp-{token}"
-        try:
-            bt.select("vec_id", "n2", "embedding").sort(
-                "vec_id"
-            ).write.mode("overwrite").parquet(stage)
-            import pyarrow.parquet as pq
-
-            # NUMERIC part order (ADVICE r11): lexicographic sort
-            # breaks past 99,999 parts ("part-100000" < "part-99999"),
-            # which would publish ids.npy unsorted and make every
-            # searchsorted gather silently wrong
-            parts = sorted(
-                globmod.glob(os.path.join(stage, "part-*.parquet")),
-                key=_part_sort_key,
-            )
-
-            def fixed_chunks():
-                for p in parts:
-                    t = pq.read_table(p)
-                    emb = np.asarray(
-                        t.column("embedding").combine_chunks().flatten()
-                    ).astype(np.float64).reshape(len(t), -1)
-                    yield (
-                        np.asarray(t.column("vec_id")).astype(np.int64),
-                        np.asarray(t.column("n2")).astype(np.int64),
-                        _narrowest_fixed_matrix(emb * SCALE),
-                    )
-
-            # _narrowest_fixed_matrix returns int64 exactly when a
-            # chunk's values cannot be represented in int32 — one
-            # such chunk widens the whole artifact
-            dtype = np.int32
-            n_rows, dim = 0, DIM
-            for _, _, m in fixed_chunks():
-                n_rows += len(m)
-                dim = m.shape[1]
-                if m.dtype == np.int64:
-                    dtype = np.int64
-            os.makedirs(tmp)
-            mat = np.lib.format.open_memmap(
-                os.path.join(tmp, "mat.npy"),
-                mode="w+",
-                dtype=dtype,
-                shape=(n_rows, dim),
-            )
-            ids = np.empty(n_rows, dtype=np.int64)
-            n2 = np.empty(n_rows, dtype=np.int64)
-            at = 0
-            for cid, cn2, m in fixed_chunks():
-                k = len(m)
-                ids[at : at + k] = cid
-                n2[at : at + k] = cn2
-                mat[at : at + k] = m.astype(dtype, copy=False)
-                at += k
-            mat.flush()
-            del mat
-            # the whole transport rests on ids being GLOBALLY strictly
-            # sorted (searchsorted gathers); the range-partitioned
-            # sort + numeric part order should guarantee it, but a
-            # violated assumption here corrupts every dot silently —
-            # verify before publish, fall back to broadcast if not
-            # (ADVICE r11)
-            if len(ids) > 1 and not bool(np.all(np.diff(ids) > 0)):
-                shutil.rmtree(tmp, ignore_errors=True)
-                return None
-            np.save(os.path.join(tmp, "ids.npy"), ids)
-            np.save(os.path.join(tmp, "n2.npy"), n2)
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
-        # the rename can fail for reasons OTHER than a lost publish
-        # race (EACCES, EXDEV, read-only root): returning ``path``
-        # then would hand executors a directory that does not exist
-        # and turn the documented fall-back-to-broadcast behavior
-        # into a task-time np.load failure (ADVICE r10). Only a path
-        # that actually exists — ours or the race winner's — is a
-        # valid transport handle.
-        if not os.path.isdir(path):
-            return None
-        touch(path)
-        return path
-    except Exception:
-        return None
 
 
 def _narrowest_fixed_matrix(x):
@@ -863,10 +691,9 @@ def _narrowest_fixed_matrix(x):
     equivalently |v| <= sqrt(int64_max / dim) / SCALE (~38 at dim 64;
     TIGHTER than the int32 representability bound of ~214, so a
     matrix can be int32-clean and still dot-overflow). Rows past the
-    bound raise rather than return silently-wrong cosines; the mmap
-    artifact build's except-block turns that into the broadcast
-    fallback, whose own build re-raises it to the caller as a clear
-    error."""
+    bound raise rather than return silently-wrong cosines: the
+    broadcast build (:func:`_build_gather_bc`) surfaces that to the
+    caller as a clear error at plan time."""
     import numpy as np
 
     r = np.where(x >= 0, np.floor(x + 0.5), np.ceil(x - 0.5))
@@ -893,49 +720,6 @@ def _narrowest_fixed_matrix(x):
     return r.astype(np.int64)
 
 
-def _gather_transport(
-    bt: DataFrame,
-    n: int,
-    fingerprint: tuple[int, int] | None = None,
-):
-    """Choose how the gather verify ships the matrix: a broadcast
-    below ``_GATHER_MMAP_BYTES`` (fastest, per-worker copies), the
-    mmap artifact above it (one page-cached copy per node). Returns
-    ``("bc", broadcast)`` or ``("mmap", path)``.
-
-    The size estimate assumes the int32 narrowing; a corpus with
-    components past 2^31/SCALE widens to int64 and doubles the real
-    footprint (ADVICE r11). Only when that doubling would FLIP the
-    decision — the window where the int32 estimate is under the gate
-    but the int64 one is over — is the narrowing probed with one
-    cheap codegen abs-max pass; outside the window both dtypes give
-    the same answer, so the common unit-range path (and every
-    bench-scale plan) stays probe-free."""
-    bytes_i32 = n * (DIM * 4 + 16)
-    bytes_i64 = n * (DIM * 8 + 16)
-    use_mmap = bytes_i32 > _GATHER_MMAP_BYTES
-    if not use_mmap and bytes_i64 > _GATHER_MMAP_BYTES:
-        try:
-            absmax = bt.agg(
-                F.max(
-                    F.array_max(
-                        F.transform("embedding", lambda v: F.abs(v))
-                    )
-                )
-            ).collect()[0][0]
-            use_mmap = (
-                absmax is None
-                or absmax * SCALE + 0.5 > 2_147_483_647
-            )
-        except Exception:
-            use_mmap = True  # unknown width: assume the wide one
-    if use_mmap:
-        path = _matrix_npy_artifact(bt, fingerprint)
-        if path is not None:
-            return ("mmap", path)
-    return ("bc", _build_gather_bc(bt))
-
-
 def _build_gather_bc(bt: DataFrame):
     """Collect the corpus's fixed-point matrix and broadcast it for
     :func:`_gather_dots`: ids sorted once on the driver, values in
@@ -960,7 +744,7 @@ def _build_gather_bc(bt: DataFrame):
     return bc
 
 
-def _gather_dots(cand: DataFrame, bt: DataFrame, transport=None) -> DataFrame:
+def _gather_dots(cand: DataFrame, bt: DataFrame) -> DataFrame:
     """(vec_a, vec_b) candidates -> (vec_a, vec_b, dot, n2_a, n2_b)
     via one broadcast of the corpus's fixed-point matrix: ids sorted
     once on the driver, each Arrow batch resolved with searchsorted +
@@ -968,61 +752,24 @@ def _gather_dots(cand: DataFrame, bt: DataFrame, transport=None) -> DataFrame:
     :func:`_dot_fixed_point` and the DuckDB oracle, without shipping
     two embedding arrays per candidate pair through the shuffle and
     Arrow. The matrix is a bounded driver-side model artifact (sim1's
-    query-matrix precedent), gated by ``_GATHER_VERIFY_MAX`` for the
-    mid tier and shared by the bucket tier above it.
+    query-matrix precedent), gated by ``_GATHER_VERIFY_MAX``.
 
     The matrix is held in int32 (r10) when unit-range embeddings keep
     every fixed-point value inside it (``±SCALE`` = ±1e7 — the common
     case), HALVING the per-worker broadcast footprint (256 B/vector —
-    512 MB at 2M vectors); out-of-range components fall back to int64
+    256 MB at the 1M gate); out-of-range components fall back to int64
     rather than wrap (:func:`_narrowest_fixed_matrix`, r11). The
     einsum accumulates with ``dtype=int64``, which upcasts the
     operands before multiplying, so every product and sum is exact
-    int64 math — value-identical either way (pytest-pinned).
-
-    ``transport``: a prebuilt :func:`_gather_transport` result —
-    callers issuing SEVERAL gather passes over one corpus (the
-    sharded tier) build and ship the matrix once instead of once per
-    pass. The mmap transport resolves the matrix through the OS page
-    cache (one resident copy per node); the broadcast transport is a
-    per-worker deserialized copy (fastest under
-    ``_GATHER_MMAP_BYTES``)."""
-    if transport is None:
-        transport = ("bc", _build_gather_bc(bt))
-    kind, handle = transport
-    if kind == "bc":
-
-        def load():
-            return handle.value
-
-    else:
-
-        def load():
-            import os
-
-            import numpy as np
-
-            return (
-                np.load(os.path.join(handle, "ids.npy"), mmap_mode="r"),
-                np.load(os.path.join(handle, "mat.npy"), mmap_mode="r"),
-                np.load(os.path.join(handle, "n2.npy"), mmap_mode="r"),
-            )
-
+    int64 math — value-identical either way (pytest-pinned)."""
+    bc = _build_gather_bc(bt)
     chunk_rows = _GATHER_CHUNK_ROWS
-    # mmap tier only: the matrix is file-backed and the sandbox/OS can
-    # evict its pages mid-task, so gather ORDER matters — sequential
-    # faults re-read the file at streaming speed, random ones at seek
-    # speed. The b-side index is the unordered one (the task's rows
-    # arrive sorted by vec_a, see below); gathering it in sorted order
-    # and permuting the dot back is two O(chunk) copies for a
-    # page-ordered read pattern.
-    b_sorted_gather = kind == "mmap"
 
     def verify(batches):
         import numpy as np
         import pandas as pd
 
-        ids_s, m, nn = load()
+        ids_s, m, nn = bc.value
         for p in batches:
             if len(p) == 0:
                 continue
@@ -1035,118 +782,20 @@ def _gather_dots(cand: DataFrame, bt: DataFrame, transport=None) -> DataFrame:
                 hi = lo + chunk_rows
                 ia = np.searchsorted(ids_s, va[lo:hi])
                 ib = np.searchsorted(ids_s, vb[lo:hi])
-                if b_sorted_gather:
-                    perm = np.argsort(ib, kind="stable")
-                    dot = np.empty(len(perm), dtype=np.int64)
-                    dot[perm] = np.einsum(
-                        "ij,ij->i",
-                        m[ia[perm]],
-                        m[ib[perm]],
-                        dtype=np.int64,
-                    )
-                else:
-                    dot = np.einsum(
-                        "ij,ij->i", m[ia], m[ib], dtype=np.int64
-                    )
                 yield pd.DataFrame(
                     {
                         "vec_a": va[lo:hi],
                         "vec_b": vb[lo:hi],
-                        "dot": dot,
-                        "n2_a": np.asarray(nn[ia]),
-                        "n2_b": np.asarray(nn[ib]),
+                        "dot": np.einsum(
+                            "ij,ij->i", m[ia], m[ib], dtype=np.int64
+                        ),
+                        "n2_a": nn[ia],
+                        "n2_b": nn[ib],
                     }
                 )
 
-    if kind == "mmap":
-        # mmap corpora are past the broadcast budget by definition —
-        # cap CONCURRENT Python workers for this stage so their
-        # runtimes + temporaries fit next to the JVM (the emb6m OOM).
-        # Range-partition + sort (r14, emb10m attempt-8 postmortem):
-        # the earlier coalesce() inherited the upstream candidate
-        # files' byte skew, leaving one task ~3x the median — and in
-        # this sandbox any task past ~15-20 min is externally
-        # SIGKILLed, so task UNIFORMITY is a liveness requirement,
-        # not a tail-latency nicety. repartitionByRange samples the
-        # (vec_a, vec_b) keys and balances ROWS exactly (guide §2.5);
-        # keying by vec_a additionally gives each task a narrow
-        # a-side slice of the matrix, and the within-task sort makes
-        # the a-side gather page-sequential. The extra exchange ships
-        # bare (long, long) pairs — noise next to a 90-min job that
-        # previously died at its straggler.
-        n_tasks = _gather_mmap_tasks()
-        cand = cand.repartitionByRange(
-            n_tasks, "vec_a", "vec_b"
-        ).sortWithinPartitions("vec_a", "vec_b")
     return cand.mapInPandas(
         verify, "vec_a long, vec_b long, dot long, n2_a long, n2_b long"
-    )
-
-
-def _bucket_rows(
-    bt: DataFrame, n_bands: int, band_planes: int
-) -> DataFrame:
-    """band_bits rows -> MINIMAL (vec_id, band_idx, bucket) exploded
-    rows for the bucket tier: no ``buckets`` array, no embedding, no
-    n2 — ~40 B through the candidate self-join's shuffle instead of
-    the ~1 KB the riding join ships (buckets + embedding per exploded
-    row). At 2M vectors x 36 bands that is the difference between a
-    ~5 GB shuffle and the ~140 GB spill that filled this box's disk
-    (benchmarks/scale_r10_summary.json, emb2m incident)."""
-    buckets = F.array(
-        *[
-            F.substring("bits", b * band_planes + 1, band_planes)
-            for b in range(n_bands)
-        ]
-    )
-    return bt.select(
-        "vec_id", F.posexplode(buckets).alias("band_idx", "bucket")
-    )
-
-
-def _bucket_tier_dots(
-    bt: DataFrame,
-    n_bands: int,
-    band_planes: int,
-    n: int = 0,
-    fingerprint: tuple[int, int] | None = None,
-) -> DataFrame:
-    """Verification tier for corpora ABOVE the gather window (r10):
-    candidates from the minimal bucket rows, exactly-once via a
-    ``distinct`` of the bare (vec_a, vec_b) id pairs (24 B/row — at
-    this scale the distinct's shuffle is far cheaper than carrying
-    the first-match band prefix on every exploded row), dots via the
-    shared broadcast-matrix gather.
-
-    Executor sizing rule (documented, not hidden): below
-    ``_GATHER_MMAP_BYTES`` every reused Python worker holds one int32
-    matrix copy = 256 B/vector (512 MB at 2M vectors) — fastest.
-    Above it the transport switches to the memory-mapped .npy
-    artifact (``_matrix_npy_artifact``): one OS-page-cached copy per
-    NODE regardless of worker count, so 10M+ vectors cost ~2.5 GB of
-    node page cache, not 2.5 GB x workers of heap. The riding join is
-    NOT a fallback here — its shuffle volume is what this tier exists
-    to avoid (measured: 2M vectors exhausted a 57 GB spill volume).
-    Disk pressure is the band-subset sharding knob
-    (:func:`cosine_neardup_pairs_sharded`)."""
-    rows = _bucket_rows(bt, n_bands, band_planes)
-    a = rows.alias("a")
-    b = rows.alias("b")
-    cand = (
-        a.join(
-            b.hint("shuffle_hash"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-        )
-        .distinct()
-    )
-    return _gather_dots(
-        cand, bt, _gather_transport(bt, n, fingerprint)
     )
 
 
@@ -1235,27 +884,26 @@ def cosine_neardup_pairs(
     Verification is TIERED by corpus size (both tiers byte-identical,
     law-tested):
 
-    - ``n <= _GATHER_VERIFY_MAX``: the candidate self-join carries
-      only (vec_id, buckets) — no embeddings through the shuffle — and
-      the exact int64 dot is a vectorized numpy GATHER against a
-      broadcast fixed-point matrix (einsum over M[ia], M[ib]). The
-      per-pair Arrow transfer of two 64-float arrays was the measured
-      wall: at sf10 (200k vectors, 46M candidates) the embedding-
-      riding join verified in ~56 s; slim join + gather verify runs
-      ~22 s with identical pairs. The matrix is a bounded model-style
-      driver artifact (the sim1 query-matrix precedent): 64-dim int64
-      is 512 B/vector, and reused Python workers each hold a copy, so
-      the bound keeps executor-side footprint ~copies x matrix.
-    - above the bound (r10 bucket tier): MINIMAL exploded rows
-      (vec_id, band_idx, bucket — ~40 B) through the self-join,
-      exactly-once via ``distinct`` on the bare id pairs, dots via
-      the same broadcast gather. The r9 shape above the bound — the
-      embedding-riding join — ships buckets + embedding on every
-      exploded row and exhausted a 57 GB spill volume at 2M vectors
-      (sf30 rehearsal follow-up); see :func:`_bucket_tier_dots` for
-      the executor sizing rule.
-    - below ``_GATHER_VERIFY_MIN``: the riding join (wide but tiny —
-      driver-scale plans stay byte-identical to r7).
+    - below ``_GATHER_VERIFY_MIN`` (10k): the riding join — band rows
+      carry n2 and the embedding, and the dot runs per candidate pair
+      (wide but tiny; driver-scale plans stay byte-identical to r7).
+      Every fixture here selects it: the sim2/d7/d9 queries run 20 to
+      2,000 vectors (sf0.001 to sf0.1).
+    - ``_GATHER_VERIFY_MIN <= n <= _GATHER_VERIFY_MAX`` (10k to 1M):
+      the candidate self-join carries only (vec_id, buckets) — no
+      embeddings through the shuffle — and the exact int64 dot is a
+      vectorized numpy GATHER against a broadcast fixed-point matrix
+      (einsum over M[ia], M[ib]). The per-pair Arrow transfer of two
+      64-float arrays was the measured wall: at sf10 (200k vectors,
+      46M candidates) the embedding-riding join verified in ~56 s;
+      slim join + gather verify runs ~22 s with identical pairs. The
+      matrix is a bounded model-style driver artifact (the sim1
+      query-matrix precedent); reused Python workers each hold a copy,
+      so the bound keeps executor-side footprint ~copies x matrix. No
+      fixture here reaches it; its laws force it by lowering the floor.
+
+    Above ``_GATHER_VERIFY_MAX`` the operator raises ``ValueError`` at
+    plan time, before any corpus-sized job runs.
     """
     # a ledger-provided fingerprint answers BOTH plan-time questions
     # (corpus size for the adaptive config/gates, content hash for the
@@ -1264,11 +912,17 @@ def cosine_neardup_pairs(
     from .memo import memoized_count, plan_scalar
 
     n = fingerprint[0] if fingerprint else memoized_count(emb)
+    if n > _GATHER_VERIFY_MAX:
+        raise ValueError(
+            f"cosine_neardup_pairs: corpus of {n:,} vectors exceeds the "
+            f"{_GATHER_VERIFY_MAX:,}-vector bound of the broadcast-gather "
+            "verify tier"
+        )
     if n_bands is None or band_planes is None:
         auto = adaptive_band_config(n)
         n_bands = auto[0] if n_bands is None else n_bands
         band_planes = auto[1] if band_planes is None else band_planes
-    gather = _GATHER_VERIFY_MIN <= n <= _GATHER_VERIFY_MAX
+    gather = n >= _GATHER_VERIFY_MIN
     # "auto" caching gates on corpus size: the content fingerprint is
     # a full hash scan, which at dimension-table scales costs more
     # than recomputing the projection (measured +0.2 s on the sf0.1
@@ -1305,14 +959,6 @@ def cosine_neardup_pairs(
         bt = band_bits(emb, n_bands * band_planes).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-    if n > _GATHER_VERIFY_MAX:
-        # bucket tier: neither the buckets array nor the embedding
-        # survives the exploded self-join's shuffle (see
-        # _bucket_tier_dots for the measured rationale + sizing rule)
-        dots = _bucket_tier_dots(
-            bt, n_bands, band_planes, n, fingerprint
-        )
-        return _threshold_pairs(dots, threshold)
     if gather:
         eb = _slim_band_rows(bt, n_bands, band_planes)
     else:
@@ -1388,196 +1034,10 @@ def cosine_neardup_pairs(
     return _threshold_pairs(dots, threshold)
 
 
-# spill-volume model for the sharded near-dup tier, calibrated on the
-# r10 emb2m incident run: 2M vectors x 36 adaptive bands peaked at
-# ~23 GB of shuffle spill through the single-pass bucket tier
-# (candidates + distinct + gather verify), i.e. ~320 B per exploded
-# (vector, band) row end to end. The estimate deliberately rides the
-# band-row count (n x bands), which adaptive_band_config holds LINEAR
-# in n by construction — so the model extrapolates to 10M+ without a
-# quadratic surprise.
-_SHARD_SPILL_BYTES_PER_BAND_ROW = 320
-# per-pass spill budget a shard must stay inside. Default 6 GB —
-# comfortably under commodity-executor local-disk allowances and the
-# value that reproduces the manually-chosen 4 shards of the 2M
-# rehearsal (23 GB / 6 GB -> 4; measured per-shard peak there: 8.3 GB
-# vs the 57 GB volume that the single pass at 2M nearly filled).
-# Override per deployment via SMURF_NEARDUP_SPILL_BUDGET (bytes).
-_SHARD_SPILL_BUDGET = 6_000_000_000
-
-
-def auto_shard_count(
-    n: int,
-    n_bands: int | None = None,
-    budget_bytes: int | None = None,
-) -> int:
-    """Shard count for :func:`cosine_neardup_pairs_sharded` derived
-    from the estimated candidate-pass spill volume and the executor
-    disk budget (VERDICT r10 task 4) — so a 10M+-vector corpus does
-    not need operator knowledge to stay inside the spill budget.
-    Estimate = ``n x n_bands x _SHARD_SPILL_BYTES_PER_BAND_ROW``
-    (model calibrated above); shards = that over the budget, clamped
-    to [1, n_bands] (each shard must own at least one band). Pure
-    function of (n, bands, budget): deterministic, testable, and the
-    budget is env-tunable per deployment."""
-    import os
-
-    if n_bands is None:
-        n_bands = adaptive_band_config(n)[0]
-    if budget_bytes is None:
-        # a malformed or zero deployment knob degrades to the default
-        # instead of failing the query at plan time (ADVICE r11)
-        raw = os.environ.get("SMURF_NEARDUP_SPILL_BUDGET")
-        try:
-            budget_bytes = (
-                max(1, int(raw)) if raw is not None
-                else _SHARD_SPILL_BUDGET
-            )
-        except (TypeError, ValueError):
-            budget_bytes = _SHARD_SPILL_BUDGET
-    est = n * n_bands * _SHARD_SPILL_BYTES_PER_BAND_ROW
-    return max(1, min(n_bands, math.ceil(est / budget_bytes)))
-
-
-def cosine_neardup_pairs_sharded(
-    emb: DataFrame,
-    threshold: float = 0.3,
-    n_shards: int | str | None = "auto",
-    band_cache: str | None = "auto",
-    fingerprint: tuple[int, int] | None = None,
-    scratch_dir: str | None = None,
-) -> DataFrame:
-    """Band-subset sharded near-dup — the escape hatch for corpora
-    where even the bucket tier's SINGLE-PASS candidate shuffle
-    exceeds one job's spill budget (at 10M vectors x 36 bands x
-    occupancy 16 the one-pass candidate volume is ~46 GB; a 4-shard
-    run peaks at ~1/4 of that).
-
-    Each shard processes a strided subset of the OR-amplification
-    bands (bands s, s+n_shards, ... — strided so skewed bands spread
-    across shards) through the bucket-tier plan and EAGERLY stages
-    its verified pairs to parquet — a separate Spark job per shard,
-    so shard k's shuffle files are released before shard k+1 runs and
-    peak spill is bounded by the largest shard, not the sum. The
-    union of staged shards is then distinct-ed on the full row: a
-    pair matching bands in two shards appears in both with an
-    IDENTICAL cosine (verification is a pure function of the pair),
-    so the distinct is exact — sharded == unsharded, law-tested.
-
-    The gather matrix is built and broadcast ONCE across shards
-    (:func:`_build_gather_bc`). ``scratch_dir`` holds the staged
-    shards (default: a fresh tempdir); the returned DataFrame reads
-    those files lazily — delete the dir only after consuming it.
-
-    ``n_shards="auto"`` (default since r11) sizes the shard count
-    from the spill-volume model (:func:`auto_shard_count`): at the 2M
-    rehearsal scale it reproduces the manually-chosen 4; small corpora
-    collapse to a single staged pass. An explicit int overrides."""
-    import os
-    import tempfile
-
-    from .memo import memoized_count, plan_scalar
-
-    n = fingerprint[0] if fingerprint else memoized_count(emb)
-    n_bands, band_planes = adaptive_band_config(n)
-    if n_shards in (None, "auto"):
-        n_shards = auto_shard_count(n, n_bands)
-    use_cache = (
-        band_cache is not None
-        and n > 0
-        and (band_cache != "auto" or n >= _BAND_CACHE_MIN)
-    )
-    bt = None
-    if use_cache:
-        try:
-            root = None if band_cache == "auto" else band_cache
-            bt = cached_band_bits(
-                emb, n_bands, band_planes,
-                root=root,
-                fingerprint=fingerprint
-                or plan_scalar(
-                    emb, "emb_fp", lambda: corpus_fingerprint(emb)
-                ),
-            )
-        except Exception:
-            bt = None
-    if bt is None:
-        bt = band_bits(emb, n_bands * band_planes).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    transport = _gather_transport(bt, n, fingerprint)
-    scratch = scratch_dir or tempfile.mkdtemp(
-        prefix="smurf_neardup_shards_"
-    )
-    paths = []
-    for s in range(n_shards):
-        bands_s = list(range(s, n_bands, n_shards))
-        buckets = F.array(
-            *[
-                F.substring("bits", b * band_planes + 1, band_planes)
-                for b in bands_s
-            ]
-        )
-        rows = bt.select(
-            "vec_id", F.posexplode(buckets).alias("band_idx", "bucket")
-        )
-        a = rows.alias("a")
-        b = rows.alias("b")
-        cand = (
-            a.join(
-                b.hint("shuffle_hash"),
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
-            )
-            .select(
-                F.col("a.vec_id").alias("vec_a"),
-                F.col("b.vec_id").alias("vec_b"),
-            )
-            .distinct()
-        )
-        # STAGE the distinct-ed candidates before the verify (r12):
-        # pipelining the distinct's final aggregation, the Python
-        # gather kernel, and the parquet write into ONE task was the
-        # emb6m failure shape — ~10% of those tasks straggled with an
-        # IDLE Python worker (the JVM side still aggregating/spilling)
-        # until the worker socket reset and the job died, at 32 tasks
-        # (r11, .scratch/emb6m4.log) and at 24 (r12 repro with the
-        # faulthandler on). Staging makes the heavy reduce a
-        # PYTHON-FREE job and feeds the verify from uniform file
-        # splits — bare (long, long) pairs, so the extra write is a
-        # few bytes per candidate, and each stage is independently
-        # bounded and restartable (what a 1000-executor run wants
-        # anyway).
-        cand_path = os.path.join(scratch, f"cand_{s}")
-        cand.write.mode("overwrite").parquet(cand_path)
-        pairs = _threshold_pairs(
-            _gather_dots(
-                emb.sparkSession.read.parquet(cand_path), bt, transport
-            ),
-            threshold,
-        )
-        path = os.path.join(scratch, f"shard_{s}")
-        pairs.write.mode("overwrite").parquet(path)
-        paths.append(path)
-        # the staged candidates are fully consumed by the verify that
-        # just materialized shard_s: drop them NOW so peak scratch is
-        # one live candidate stage + the (tiny) pair outputs, not the
-        # SUM of every shard's candidates — the r13 emb10m run died
-        # on exactly that (8 retained cand dirs ~47 GB + shuffle
-        # spill exhausted a 77 GB volume at shard 7/8). Keep for
-        # postmortems with SMURF_NEARDUP_KEEP_STAGING=1.
-        if os.environ.get("SMURF_NEARDUP_KEEP_STAGING") != "1":
-            import shutil
-
-            shutil.rmtree(cand_path, ignore_errors=True)
-    return emb.sparkSession.read.parquet(*paths).distinct()
-
-
 def _threshold_pairs(dots: DataFrame, threshold: float) -> DataFrame:
     """(vec_a, vec_b, dot, n2_a, n2_b) -> thresholded near-dup pairs
-    with the serving-rounded cosine — shared by all three
-    verification tiers so the output contract has one definition."""
+    with the serving-rounded cosine — shared by both verification
+    tiers so the output contract has one definition."""
     cos = F.col("dot").cast("double") / (
         F.sqrt(F.col("n2_a").cast("double"))
         * F.sqrt(F.col("n2_b").cast("double"))

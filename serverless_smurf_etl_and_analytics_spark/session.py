@@ -43,12 +43,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SMURF_DRIVER_MEM", "8g"))
-        # sized to the broadcast gather tier's ceiling: an Arrow
-        # collect of a _GATHER_MMAP_BYTES-sized corpus serializes
-        # ~3.5 GB (float64 embeddings); Spark's 1 GB default aborts
-        # that collect MID-TIER (the r11 emb6m rehearsal hit it at 6M
-        # vectors — both transports died). Above the gate nothing
-        # collects at all (the mmap artifact builds distributively).
+        # sized to the broadcast gather tier's ceiling: the near-dup
+        # verify collects the whole corpus to the driver, and at its
+        # 1M-vector bound (similarity._GATHER_VERIFY_MAX) that Arrow
+        # collect is ~0.6 GB (float64 embeddings plus ids and norms),
+        # over half of Spark's 1 GB default. Larger corpora are
+        # refused before anything collects.
         .config(
             "spark.driver.maxResultSize",
             os.environ.get("SMURF_MAX_RESULT_SIZE", "4g"),
@@ -56,11 +56,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     # deployment escape hatch for static (pre-session) confs — e.g.
-    # the scale rehearsals set
     # spark.python.worker.faulthandler.enabled=true so a crashed
-    # Python worker leaves a traceback instead of a bare BrokenPipe
-    # (the r11 emb6m postmortem had nothing to read). Format:
-    # "k=v;k=v"; malformed entries are skipped.
+    # Python worker leaves a traceback instead of a bare BrokenPipe,
+    # or spark.sql.sources.parallelPartitionDiscovery.threshold for a
+    # long partitioned history. Format: "k=v;k=v"; malformed entries
+    # are skipped.
     extra = os.environ.get("SMURF_EXTRA_CONF", "")
     for kv in extra.split(";"):
         k, sep, v = kv.partition("=")
@@ -70,7 +70,12 @@ def get_spark(
 
 
 def clear_operator_caches(spark: SparkSession) -> None:
-    """Free every DataFrame persisted by the operator layer.
+    """Free every DataFrame persisted by the operator layer, and the
+    session state built beside them: this application's entries in
+    the plan memos (``operators.memo._MEMO``, ``tables._FRAME_MEMO``)
+    and the live near-dup gather broadcast. A loader memo entry
+    pins its directory's file listing, so a directory whose file set
+    changed is seen again only after this call.
 
     Cache lifetime is CALLER-owned: several operators persist shared
     subtrees (dedup shingles/band tables, similarity band/assignment
@@ -81,6 +86,14 @@ def clear_operator_caches(spark: SparkSession) -> None:
     should call this (or ``df.unpersist()`` on handles it tracked, as
     ``pipeline.run_daily_pipeline`` does) once a batch of queries is
     done, or cached blocks accumulate for the session lifetime."""
+    from . import tables
+    from .operators import memo, similarity
+
+    app = spark.sparkContext.applicationId
+    for cache in (memo._MEMO, tables._FRAME_MEMO):
+        for key in [k for k in cache if k[0] == app]:
+            del cache[key]
+    similarity._swap_gather_bc(None)
     spark.catalog.clearCache()
 
 

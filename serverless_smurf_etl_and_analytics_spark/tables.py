@@ -56,8 +56,9 @@ TABLES = (
 # absolute path[, table]); a different session or directory misses.
 # The memoized object is a LAZY plan — every action re-reads the
 # parquet files; no data is cached. The one masked mutation is a
-# directory whose FILE SET changes under the same path mid-session:
-# these loaders serve the immutable testdata snapshots, while the
+# directory whose FILE SET changes under the same path mid-session,
+# until ``session.clear_operator_caches`` drops the entry: these
+# loaders serve the immutable testdata snapshots, while the
 # maintained-corpus pipelines read their own ledgered table paths
 # directly (never through here) precisely because they mutate.
 _FRAME_MEMO: dict = {}

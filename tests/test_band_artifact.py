@@ -140,123 +140,13 @@ def test_gather_and_wide_verify_tiers_identical(spark, emb, monkeypatch):
     assert gathered == wide and len(gathered) > 0
 
 
-def test_bucket_tier_identical_to_wide_verify(spark, emb, monkeypatch):
-    """The r10 bucket tier (minimal exploded rows + distinct dedup +
-    broadcast gather — the >1M-vector path whose shuffle stays ~40 B
-    per row) yields byte-identical pairs to the riding join: the
-    first-match predicate and the distinct are two implementations of
-    exactly-once over the same collision set, and the int32-matrix
-    gather's einsum accumulates in int64, so every dot is the same
-    exact integer."""
-    wide = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in similarity.cosine_neardup_pairs(
-            emb, 0.3, band_cache=None
-        ).collect()
-    }
-    # force the bucket tier: any n > 0 crosses a zero upper gate
-    monkeypatch.setattr(similarity, "_GATHER_VERIFY_MAX", 0)
-    bucketed = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in similarity.cosine_neardup_pairs(
-            emb, 0.3, band_cache=None
-        ).collect()
-    }
-    assert bucketed == wide and len(bucketed) > 0
-
-
-def test_sharded_neardup_equals_unsharded(spark, emb, tmp_path):
-    """Band-subset sharding (the bounded-peak-spill escape hatch for
-    >10M-vector corpora) is exact: the union of per-shard staged
-    pairs, distinct-ed, equals the single-pass result — a pair
-    matching bands in two shards stages twice with an identical
-    cosine, and a pair matching no shard's bands matches no band at
-    all."""
-    single = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in similarity.cosine_neardup_pairs(
-            emb, 0.3, band_cache=None
-        ).collect()
-    }
-    sharded = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in similarity.cosine_neardup_pairs_sharded(
-            emb, 0.3, n_shards=3, band_cache=None,
-            scratch_dir=str(tmp_path / "shards"),
-        ).collect()
-    }
-    assert sharded == single and len(sharded) > 0
-    # the auto-sized path (default since r11) is the same law: the
-    # heuristic only picks HOW MANY strided subsets, never which
-    # pairs survive
-    auto = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in similarity.cosine_neardup_pairs_sharded(
-            emb, 0.3, band_cache=None,
-            scratch_dir=str(tmp_path / "shards_auto"),
-        ).collect()
-    }
-    assert auto == single
-
-
-def test_auto_shard_count_model():
-    """The spill-model heuristic (VERDICT r10 task 4): reproduces the
-    manually-chosen 4 shards of the 2M rehearsal, collapses to one
-    shard on small corpora, never exceeds the band count (a shard
-    must own >= 1 band), and scales with the corpus at the default
-    budget."""
-    n_bands_2m = similarity.adaptive_band_config(2_000_000)[0]
-    assert similarity.auto_shard_count(2_000_000, n_bands_2m) == 4
-    assert similarity.auto_shard_count(2_000) == 1
-    assert similarity.auto_shard_count(200_000) == 1
-    n10, b10 = 10_000_000, similarity.adaptive_band_config(10_000_000)[0]
-    s10 = similarity.auto_shard_count(n10, b10)
-    assert 4 < s10 <= b10
-    # explicit budget: doubling the budget halves (ceil) the count
-    assert similarity.auto_shard_count(
-        2_000_000, n_bands_2m, budget_bytes=12_000_000_000
-    ) == 2
-
-
-def test_mmap_transport_identical_to_broadcast(
-    spark, emb, tmp_path, monkeypatch
-):
-    """The memory-mapped matrix transport (one page-cached copy per
-    node, for corpora whose matrix exceeds the broadcast budget) is an
-    exact stand-in for the broadcast: forcing it (mmap threshold 0 +
-    bucket tier) yields byte-identical pairs, and the artifact lands
-    under the fingerprint-keyed gmat dirname."""
-    import glob
-    import os
-
-    monkeypatch.setenv("SMURF_ARTIFACT_CACHE", str(tmp_path / "cache"))
-    wide = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in similarity.cosine_neardup_pairs(
-            emb, 0.3, band_cache=None
-        ).collect()
-    }
-    monkeypatch.setattr(similarity, "_GATHER_VERIFY_MAX", 0)
-    monkeypatch.setattr(similarity, "_GATHER_MMAP_BYTES", 0)
-    mmapped = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in similarity.cosine_neardup_pairs(
-            emb, 0.3, band_cache=None
-        ).collect()
-    }
-    assert mmapped == wide and len(mmapped) > 0
-    assert glob.glob(
-        os.path.join(str(tmp_path / "cache"), "gmat_v1_n*_h*")
-    )
-    # the sharded form rides the same transport choice
-    sharded = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in similarity.cosine_neardup_pairs_sharded(
-            emb, 0.3, n_shards=2, band_cache=None,
-            scratch_dir=str(tmp_path / "shards"),
-        ).collect()
-    }
-    assert sharded == wide
+def test_corpus_above_gather_bound_is_refused(emb, monkeypatch):
+    """Past ``_GATHER_VERIFY_MAX`` no verify tier is left: the operator
+    refuses at plan time with a message naming the bound, instead of
+    running corpus-sized jobs toward a worker OOM."""
+    monkeypatch.setattr(similarity, "_GATHER_VERIFY_MAX", 5)
+    with pytest.raises(ValueError, match="5-vector bound"):
+        similarity.cosine_neardup_pairs(emb, 0.3, band_cache=None)
 
 
 def test_fixed_matrix_narrows_to_int32_only_when_exact():
@@ -307,36 +197,6 @@ def test_gather_dots_exact_for_out_of_unit_range_embeddings(spark):
     )
 
 
-def test_matrix_artifact_returns_none_when_rename_fails(
-    spark, emb, tmp_path, monkeypatch
-):
-    """ADVICE r10: a rename failure that is NOT a lost publish race
-    (EACCES/EXDEV/read-only root) must return None — falling back to
-    the broadcast transport — never a path executors cannot np.load."""
-    import os as _os
-
-    root = str(tmp_path / "gmroot")
-    real_rename = _os.rename
-
-    def refuse(src, dst, *a, **kw):
-        if "gmat_" in str(dst):
-            raise OSError("EXDEV: cross-device link")
-        return real_rename(src, dst, *a, **kw)
-
-    monkeypatch.setattr(_os, "rename", refuse)
-    bt = similarity.fixed_point(emb).join(
-        emb.select("vec_id", "embedding"), "vec_id"
-    )
-    assert (
-        similarity._matrix_npy_artifact(bt, fingerprint=(5, 99), root=root)
-        is None
-    )
-    # and the transport degrades to broadcast instead of erroring
-    monkeypatch.setattr(similarity, "_GATHER_MMAP_BYTES", 0)
-    kind, _ = similarity._gather_transport(bt, 5, (5, 99))
-    assert kind == "bc"
-
-
 def test_chunked_verify_identical_to_unchunked(spark, emb, monkeypatch):
     """r12: the fixed-size gather slices inside the verify kernel
     (the worker-memory bound added after the emb6m OOM) are a pure
@@ -358,32 +218,6 @@ def test_chunked_verify_identical_to_unchunked(spark, emb, monkeypatch):
     assert chunked == base and len(chunked) > 0
 
 
-def test_mmap_sorted_gather_identical(spark, emb, tmp_path, monkeypatch):
-    """r14 (emb10m attempt-8 postmortem): the mmap tier's b-sorted
-    gather and the row-uniform range partitioning of the candidate
-    side are pure access-order changes — forcing the mmap transport
-    with a tiny chunk and a small task cap yields byte-identical
-    pairs to the broadcast kernel."""
-    monkeypatch.setenv("SMURF_ARTIFACT_CACHE", str(tmp_path / "cache"))
-    base = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in similarity.cosine_neardup_pairs(
-            emb, 0.3, band_cache=None
-        ).collect()
-    }
-    monkeypatch.setattr(similarity, "_GATHER_VERIFY_MAX", 0)
-    monkeypatch.setattr(similarity, "_GATHER_MMAP_BYTES", 0)
-    monkeypatch.setattr(similarity, "_GATHER_CHUNK_ROWS", 3)
-    monkeypatch.setenv("SMURF_GATHER_MMAP_TASKS", "3")
-    forced = {
-        (r["vec_a"], r["vec_b"], r["cosine"])
-        for r in similarity.cosine_neardup_pairs(
-            emb, 0.3, band_cache=None
-        ).collect()
-    }
-    assert forced == base and len(forced) > 0
-
-
 def test_fixed_matrix_raises_on_possible_dot_overflow():
     """ADVICE r11: int32-representable components can still overflow
     the int64 dot accumulator (64 dims of |fixed| ~ 2e9 give dots
@@ -399,101 +233,3 @@ def test_fixed_matrix_raises_on_possible_dot_overflow():
     # |v| = 30 at dim 64: norm^2 = 64 * 9e16 = 5.76e18 < int64max
     safe = nm(np.full((2, 64), 30.0 * similarity.SCALE))
     assert safe.dtype == np.int32 and int(safe[0, 0]) == 300_000_000
-
-
-def test_part_sort_key_numeric_order():
-    """ADVICE r11: part files must merge in NUMERIC part order —
-    lexicographic order breaks past 99,999 parts."""
-    names = [
-        "/x/part-100000-uuid.snappy.parquet",
-        "/x/part-00009-uuid.snappy.parquet",
-        "/x/part-99999-uuid.snappy.parquet",
-        "/x/part-00010-uuid.snappy.parquet",
-    ]
-    assert [
-        similarity._part_sort_key(n)[0] for n in sorted(
-            names, key=similarity._part_sort_key
-        )
-    ] == [9, 10, 99999, 100000]
-    # lexicographic is provably wrong on the same list
-    assert sorted(names)[-1] != sorted(
-        names, key=similarity._part_sort_key
-    )[-1]
-
-
-def test_auto_shard_count_env_validation(monkeypatch):
-    """ADVICE r11: a malformed or zero SMURF_NEARDUP_SPILL_BUDGET
-    degrades to the default instead of raising at plan time."""
-    n_bands = similarity.adaptive_band_config(2_000_000)[0]
-    want = similarity.auto_shard_count(2_000_000, n_bands)
-    monkeypatch.setenv("SMURF_NEARDUP_SPILL_BUDGET", "6e9")
-    assert similarity.auto_shard_count(2_000_000, n_bands) == want
-    monkeypatch.setenv("SMURF_NEARDUP_SPILL_BUDGET", "")
-    assert similarity.auto_shard_count(2_000_000, n_bands) == want
-    # zero clamps to >= 1 byte: maximal sharding, never a crash
-    monkeypatch.setenv("SMURF_NEARDUP_SPILL_BUDGET", "0")
-    assert similarity.auto_shard_count(2_000_000, n_bands) == n_bands
-    monkeypatch.setenv("SMURF_NEARDUP_SPILL_BUDGET", "12000000000")
-    assert similarity.auto_shard_count(2_000_000, n_bands) == 2
-
-
-def test_gather_mmap_tasks_env_validation(monkeypatch):
-    """The mmap-tier verify concurrency cap is env-tunable and
-    malformed values degrade to the default."""
-    monkeypatch.delenv("SMURF_GATHER_MMAP_TASKS", raising=False)
-    assert similarity._gather_mmap_tasks() == similarity._GATHER_MMAP_TASKS
-    monkeypatch.setenv("SMURF_GATHER_MMAP_TASKS", "4")
-    assert similarity._gather_mmap_tasks() == 4
-    monkeypatch.setenv("SMURF_GATHER_MMAP_TASKS", "0")
-    assert similarity._gather_mmap_tasks() == 1
-    monkeypatch.setenv("SMURF_GATHER_MMAP_TASKS", "lots")
-    assert similarity._gather_mmap_tasks() == similarity._GATHER_MMAP_TASKS
-
-
-def test_gather_transport_probes_int64_window(
-    spark, emb, tmp_path, monkeypatch
-):
-    """ADVICE r11: the transport gate assumes the int32 narrowing; in
-    the window where an int64 widening would flip the decision, it
-    must PROBE the corpus abs-max — unit-range corpora keep the
-    broadcast, out-of-range corpora go to the mmap artifact (whose
-    real footprint the broadcast estimate would undercount 2x)."""
-    import numpy as np
-
-    monkeypatch.setenv("SMURF_ARTIFACT_CACHE", str(tmp_path / "cache"))
-    n = emb.count()
-    # gate inside (n*(DIM*4+16), n*(DIM*8+16)): decision depends on
-    # the narrowing, so the probe must run
-    monkeypatch.setattr(
-        similarity, "_GATHER_MMAP_BYTES", n * (similarity.DIM * 4 + 16) + 1
-    )
-    bt_unit = similarity.fixed_point(emb).join(
-        emb.select("vec_id", "embedding"), "vec_id"
-    )
-    kind, _ = similarity._gather_transport(bt_unit, n, (n, 101))
-    assert kind == "bc"
-    # same window, one component at |v|=250 (> 2^31/SCALE): widens to
-    # int64 -> real bytes past the gate -> mmap, and the artifact is
-    # stored wide
-    wide = spark.createDataFrame(
-        [(1, [250.0, 0.5]), (2, [1.0, -0.25]), (3, [0.1, 0.9])],
-        "vec_id long, embedding array<double>",
-    ).withColumn(
-        "n2",
-        F.aggregate(
-            F.transform(
-                "embedding",
-                lambda x: F.round(x * similarity.SCALE).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x * x,
-        ),
-    )
-    monkeypatch.setattr(
-        similarity, "_GATHER_MMAP_BYTES", 3 * (similarity.DIM * 4 + 16) + 1
-    )
-    kind, path = similarity._gather_transport(wide, 3, (3, 102))
-    assert kind == "mmap"
-    assert np.load(
-        os.path.join(path, "mat.npy"), mmap_mode="r"
-    ).dtype == np.int64

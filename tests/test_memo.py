@@ -116,3 +116,34 @@ def test_manifest_counts_match_real_datasets(spark):
     assert set(manifest) == set(ds)
     for name, df in ds.items():
         assert manifest[name] == (df.count(), len(df.columns)), name
+
+
+def test_clear_operator_caches_frees_memos_and_gather_broadcast(
+    spark, tmp_path
+):
+    """A memoized loader frame pins its directory's file listing; after
+    ``session.clear_operator_caches`` the next load sees a part file
+    added since, and the live near-dup gather broadcast is released."""
+    from serverless_smurf_etl_and_analytics_spark import session
+    from serverless_smurf_etl_and_analytics_spark.operators import (
+        similarity,
+    )
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(3).write.parquet(path)
+    assert tables.load(spark, str(tmp_path), "t").count() == 3
+    spark.range(10, 15).coalesce(1).write.mode("append").parquet(path)
+    # the memoized frame still lists the old file set
+    assert tables.load(spark, str(tmp_path), "t").count() == 3
+    emb = tables.load(spark, SF_DIR, "embeddings")
+    similarity._build_gather_bc(
+        similarity.band_bits(emb, 8).select("vec_id", "n2", "embedding")
+    )
+    assert similarity._GATHER_BC
+
+    session.clear_operator_caches(spark)
+
+    assert tables.load(spark, str(tmp_path), "t").count() == 8
+    assert similarity._GATHER_BC == []
+    app = spark.sparkContext.applicationId
+    assert not any(k[0] == app for k in memo._MEMO)
