@@ -114,17 +114,7 @@ _MODEL_ARTIFACT_MIN = 10_000
 # tests/test_clustering.py). 100k 64-dim vectors collect ~50 MB —
 # far under the 4g driver result cap; above the ceiling the
 # distributed loop runs unchanged.
-_DRIVER_TIER_DEFAULT = 100_000
-
-
-def _driver_tier_max() -> int:
-    import os
-
-    raw = os.environ.get("SMURF_TRAINER_DRIVER_TIER_MAX", "")
-    try:
-        return int(raw) if raw.strip() else _DRIVER_TIER_DEFAULT
-    except ValueError:
-        return _DRIVER_TIER_DEFAULT
+_DRIVER_TIER_MAX = 100_000
 
 
 def _collect_fixed(emb: DataFrame):
@@ -302,7 +292,7 @@ def _kmeans_train_inline(
         from .memo import memoized_count
 
         n = memoized_count(emb)
-    if 0 < n <= _driver_tier_max():
+    if 0 < n <= _DRIVER_TIER_MAX:
         return _kmeans_train_driver(emb, k, n_iter)
 
     to_fixed, nearest = _make_helpers(SCALE)
@@ -572,7 +562,7 @@ def _pq_train_encode_inline(
         from .memo import memoized_count
 
         n = memoized_count(emb)
-    if 0 < n <= _driver_tier_max():
+    if 0 < n <= _DRIVER_TIER_MAX:
         return _pq_train_encode_driver(emb, m, ksub, n_iter)
 
     to_fixed, nearest = _make_helpers(SCALE)

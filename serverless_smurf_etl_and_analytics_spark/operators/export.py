@@ -29,7 +29,12 @@ from pyspark.storagelevel import StorageLevel
 
 from ..concurrent_writes import write_all
 from ..functions.money import dollars
-from .insights import shared_insight_frames
+from .insights import (
+    classify_anomalies,
+    recommendations,
+    shared_insight_frames,
+    trend_insights,
+)
 from .metrics import store_day_metrics, top_products_per_store_day
 
 
@@ -136,7 +141,7 @@ def export_anomalies(txns: DataFrame) -> DataFrame:
     """Flattened anomalies dataset
     (``export-to-quicksight/lambda_function.py:251-285``) with the
     human-readable description line the reference assembles per row."""
-    return _export_anomalies_from(shared_insight_frames(txns)["an"])
+    return _export_anomalies_from(classify_anomalies(txns))
 
 
 def _export_anomalies_from(an: DataFrame) -> DataFrame:
@@ -160,7 +165,7 @@ def _export_anomalies_from(an: DataFrame) -> DataFrame:
 def export_trends(txns: DataFrame) -> DataFrame:
     """Flattened trends dataset
     (``export-to-quicksight/lambda_function.py:288-307``)."""
-    return _export_trends_from(shared_insight_frames(txns)["trends"])
+    return _export_trends_from(trend_insights(txns))
 
 
 def _export_trends_from(tr: DataFrame) -> DataFrame:
@@ -184,7 +189,7 @@ def export_recommendations(txns: DataFrame) -> DataFrame:
     (``export-to-quicksight/lambda_function.py:310-328``), with the O5
     priority rank as the sort key and an array_join'd affected list
     (``:283-284`` uses ``', '.join(affected_items)``)."""
-    return _export_recommendations_from(shared_insight_frames(txns)["recs"])
+    return _export_recommendations_from(recommendations(txns))
 
 
 def _export_recommendations_from(re: DataFrame) -> DataFrame:
@@ -215,9 +220,9 @@ def export_datasets(
     and ONE persisted anomaly set — a single fact scan feeds anomalies,
     trends, and recommendations, instead of each dataset re-running the
     whole window chain (the reference rereads its persisted store_daily
-    MV the same way, SURVEY §4). The chain plans come from the
-    session-memoized :func:`shared_insight_frames`; the re-persist
-    calls keep cold-mode semantics after a cache clear."""
+    MV the same way, SURVEY §4). The single-dataset entry points
+    (:func:`export_anomalies` and its siblings) build only their own
+    chain and persist nothing."""
     frames = shared_insight_frames(txns)
     frames["daily"].persist(StorageLevel.MEMORY_AND_DISK)
     frames["an"].persist(StorageLevel.MEMORY_AND_DISK)

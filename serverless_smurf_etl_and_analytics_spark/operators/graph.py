@@ -38,16 +38,6 @@ DAMP_PM = 850  # damping 0.85 in per-mille
 _DRIVER_PR_MAX = 5_000_000
 
 
-def _driver_pr_max() -> int:
-    import os
-
-    raw = os.environ.get("SMURF_PAGERANK_DRIVER_TIER_MAX", "")
-    try:
-        return int(raw) if raw.strip() else _DRIVER_PR_MAX
-    except ValueError:
-        return _DRIVER_PR_MAX
-
-
 # session-scoped gate-count memo (r14, VERDICT item 7): the driver-tier
 # size gate pays one materializing count per pagerank CALL even though
 # the pair cache itself is deduped session-wide — ~0.2 s of cached-scan
@@ -141,7 +131,7 @@ def pagerank(
     pairs = _purchase_pairs(lineitem, orders).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    cap = _driver_pr_max() // 2  # undirected cap: 2 directed edges/pair
+    cap = _DRIVER_PR_MAX // 2  # undirected cap: 2 directed edges/pair
     if cap > 0 and _memoized_count(pairs) <= cap:
         out = _pagerank_driver(
             pairs.toPandas(), pairs.sparkSession, n_iter, top_k

@@ -40,45 +40,27 @@ from .history import (
 def shared_insight_frames(
     txns: DataFrame, min_days: int = 3
 ) -> dict[str, DataFrame]:
-    """The insight chain's four CONSTRUCTED (lazy) frames over one fact
-    table — the persisted store_daily_cents MV, the persisted anomaly
-    set, and the trend/recommendation plans derived from them —
-    memoized per (application id, min_days, analyzed plan of ``txns``).
-
-    What is memoized is plan ASSEMBLY only: the py4j Column composition
-    + Catalyst analysis of the window chain cost every consumer
-    (x3-x6, i1-i4, r1) 0.3-0.8 s per call at r14 while their executor
-    work was 0.1-0.4 s — the same redundant-driver-work class as the
-    gate-scalar memos (operators/memo.py, same staleness contract).
-    Results are never memoized: every action on these frames executes
-    the plan through the same session persists the per-call builders
-    already registered. After ``session.clear_operator_caches`` the
-    multi-output consumers (export_datasets, export_manifest,
-    combine_insights) re-``persist()`` the memoized objects per call,
-    so cold-mode semantics are unchanged."""
-    from .memo import plan_scalar
-
-    def build() -> dict[str, DataFrame]:
-        daily = store_daily_cents(txns).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        an = classify_anomalies_from_daily(daily, min_days).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        return {
-            "daily": daily,
-            "an": an,
-            "trends": trend_insights_from_daily(daily),
-            "recs": recommendations_from(an),
-        }
-
-    return plan_scalar(txns, f"insight_frames:{min_days}", build)
+    """The insight chain's four lazy frames over one fact table: the
+    store_daily_cents MV, the anomaly set, and the trend and
+    recommendation plans derived from them. Nothing is persisted here:
+    the multi-output consumers (export_datasets, export_manifest,
+    combine_insights, report.render_report) persist ``daily`` and
+    ``an`` themselves, so one fact scan feeds every branch; a one-shot
+    consumer builds only the frame it returns and pins no cache."""
+    daily = store_daily_cents(txns)
+    an = classify_anomalies_from_daily(daily, min_days)
+    return {
+        "daily": daily,
+        "an": an,
+        "trends": trend_insights_from_daily(daily),
+        "recs": recommendations_from(an),
+    }
 
 
 def classify_anomalies(txns: DataFrame, min_days: int = 3) -> DataFrame:
     """Anomaly rows: store-days whose deviation vs the trailing average
     exceeds ±25%, with the reference's severity ladder."""
-    return shared_insight_frames(txns, min_days)["an"]
+    return classify_anomalies_from_daily(store_daily_cents(txns), min_days)
 
 
 def classify_anomalies_from_daily(
@@ -117,7 +99,7 @@ def trend_insights(txns: DataFrame) -> DataFrame:
     """Trend rows: stores whose ±5% recent-vs-earlier direction is not
     stable (insufficient_data rows are dropped, mirroring the >=
     history gates)."""
-    return shared_insight_frames(txns)["trends"]
+    return trend_insights_from_daily(store_daily_cents(txns))
 
 
 def trend_insights_from_daily(daily: DataFrame) -> DataFrame:
@@ -142,7 +124,7 @@ def recommendations(txns: DataFrame) -> DataFrame:
     """Recommendation rows from the anomaly set: the deterministic rule
     ladder (critical drop => urgent investigation; warning drop =>
     review; spike => restock), with the O5 priority sort key."""
-    return shared_insight_frames(txns)["recs"]
+    return recommendations_from(classify_anomalies(txns))
 
 
 def recommendations_from(an: DataFrame) -> DataFrame:
@@ -194,24 +176,10 @@ def combine_insights(txns: DataFrame) -> DataFrame:
     the anomaly and trend branches; the anomaly set is persisted and
     feeds both its own rows and the recommendations — the union's three
     branches read materialized inputs instead of re-running the window
-    chain per branch (the chain plans themselves come from the
-    session-memoized :func:`shared_insight_frames`; the re-persist
-    calls keep cold-mode semantics after a cache clear). The union
-    assembly itself is also a pure plan function of ``txns`` and is
-    memoized (memo.plan_frame) with the re-persists outside it."""
-    from .memo import plan_frame
-
+    chain per branch."""
     frames = shared_insight_frames(txns)
     frames["daily"].persist(StorageLevel.MEMORY_AND_DISK)
-    frames["an"].persist(StorageLevel.MEMORY_AND_DISK)
-    return plan_frame(
-        txns, "combine_insights", lambda: _combine_insights(frames)
-    )
-
-
-def _combine_insights(frames: dict[str, DataFrame]) -> DataFrame:
-    anomalies = frames["an"]
-    an = anomalies.select(
+    an = frames["an"].persist(StorageLevel.MEMORY_AND_DISK).select(
         "insight_id", "insight_type", "store_id", "sale_date",
         F.col("anomaly_type").alias("detail"), "severity",
         F.lit(None).cast("string").alias("priority"),

@@ -736,19 +736,12 @@ def quality_report(daily: DataFrame) -> DataFrame:
     'changepoint' (metric = |cusum| div MAD, the shift's size in MAD
     units; -1 if MAD = 0). Each branch reuses the registered operator
     verbatim, so this is a unionByName of already-verified plans over
-    the shared store-day MV — no new scan of anything. The three-branch
-    assembly is a pure plan function of ``daily`` and is session-
-    memoized (operators/memo.plan_frame, r14): ~0.4 s of py4j/Catalyst
-    per repeat call against ~0.35 s of executor work.
+    the shared store-day MV — no new scan of anything. The assembly is
+    rebuilt on every call (~0.4 s of py4j/Catalyst at sf0.1, r14): a
+    frame keyed on ``daily``'s plan would hand the ingest stream an
+    earlier micro-batch's file listing, because two reads of one path
+    are the same plan.
     """
-    from .memo import plan_frame
-
-    return plan_frame(
-        daily, "quality_report", lambda: _quality_report(daily)
-    )
-
-
-def _quality_report(daily: DataFrame) -> DataFrame:
     gaps = date_gaps(daily).select(
         "store_id",
         F.col("next_seen").alias("alarm_date"),

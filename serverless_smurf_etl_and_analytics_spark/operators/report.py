@@ -18,8 +18,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
-from .insights import classify_anomalies, recommendations, trend_insights
+from .insights import recommendations, shared_insight_frames
 from .metrics import company_daily, payment_breakdown, store_day_metrics
 
 
@@ -41,27 +42,7 @@ def daily_report_lines(
 
     ``recs``: optionally a precomputed recommendations DataFrame (the
     pipeline passes its persisted anomaly-derived set so the report
-    does not re-run the window chain over the fact table).
-
-    The four-section assembly is a pure plan function of
-    ``(txns, date)`` and is session-memoized when ``recs`` is not
-    caller-supplied (operators/memo.plan_frame, r14: ~0.7 s of
-    py4j/Catalyst per repeat call); a caller-supplied ``recs`` frame
-    bypasses the memo entirely."""
-    if recs is None:
-        from .memo import plan_frame
-
-        return plan_frame(
-            txns,
-            f"daily_report:{date}",
-            lambda: _daily_report_lines(txns, date, None),
-        )
-    return _daily_report_lines(txns, date, recs)
-
-
-def _daily_report_lines(
-    txns: DataFrame, date: str, recs: DataFrame | None
-) -> DataFrame:
+    does not re-run the window chain over the fact table)."""
     day = txns.filter(F.col("sale_date") == date)
 
     daily = store_day_metrics(day)
@@ -234,23 +215,28 @@ def render_report(
                 f"${p['rev_c'] / 100.0:,.2f}"
             )
 
-    an = sorted(
-        classify_anomalies(txns)
-        .filter(F.col("sale_date") == date)
-        .collect(),
-        key=lambda r: (
-            0 if r["severity"] == "critical" else 1,
-            r["store_id"],
-        ),
+    # one chain feeds all three insight sections: daily and the anomaly
+    # set are persisted for the three collects and released after them
+    # (a frame some other caller had already persisted is left alone)
+    frames = shared_insight_frames(txns)
+    pinned = [
+        f.persist(StorageLevel.MEMORY_AND_DISK)
+        for f in (frames["daily"], frames["an"])
+        if f.storageLevel == StorageLevel.NONE
+    ]
+    try:
+        an, tr, recs = (
+            frames[k].filter(F.col("sale_date") == date).collect()
+            for k in ("an", "trends", "recs")
+        )
+    finally:
+        for f in pinned:
+            f.unpersist()
+    an.sort(
+        key=lambda r: (0 if r["severity"] == "critical" else 1, r["store_id"])
     )
-    tr = sorted(
-        trend_insights(txns).filter(F.col("sale_date") == date).collect(),
-        key=lambda r: (r["trend_direction"], r["store_id"]),
-    )
-    recs = sorted(
-        recommendations(txns).filter(F.col("sale_date") == date).collect(),
-        key=lambda r: (r["priority_rank"], r["store_id"]),
-    )
+    tr.sort(key=lambda r: (r["trend_direction"], r["store_id"]))
+    recs.sort(key=lambda r: (r["priority_rank"], r["store_id"]))
 
     lines.append("")
     lines.append("AI INSIGHTS (Powered by Amazon Bedrock)")

@@ -72,16 +72,19 @@ def get_spark(
 def clear_operator_caches(spark: SparkSession) -> None:
     """Free every DataFrame persisted by the operator layer, and the
     session state built beside them: this application's entries in
-    the plan memos (``operators.memo._MEMO``, ``tables._FRAME_MEMO``)
-    and the live near-dup gather broadcast. A loader memo entry
-    pins its directory's file listing, so a directory whose file set
-    changed is seen again only after this call.
+    the gate-scalar memo (``operators.memo._MEMO``: counts and
+    fingerprints), the loader memo (``tables._FRAME_MEMO``) and the
+    live near-dup gather broadcast. A loader entry pins its
+    directory's file listing, and a gate scalar over a path is keyed
+    on a plan that does not see file changes, so a directory whose
+    file set changed is seen again only after this call.
 
     Cache lifetime is CALLER-owned: several operators persist shared
     subtrees (dedup shingles/band tables, similarity band/assignment
-    tables, the insights daily/anomaly inputs) so that logically-equal
-    plans within — and across — queries reuse one materialization via
-    Spark's cache manager. A short-lived job gets that reuse for free
+    tables, the daily/anomaly inputs of the multi-output insight and
+    export consumers) so that logically-equal plans within — and
+    across — queries reuse one materialization via Spark's cache
+    manager. A short-lived job gets that reuse for free
     and the blocks die with the session; a long-lived serving session
     should call this (or ``df.unpersist()`` on handles it tracked, as
     ``pipeline.run_daily_pipeline`` does) once a batch of queries is

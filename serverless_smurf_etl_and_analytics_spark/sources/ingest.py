@@ -36,8 +36,16 @@ def read_uploads(spark: SparkSession, upload_dir: str) -> DataFrame:
     """S1+S2: read upload JSON array files (one per store-day) with the
     fixed contract schema, carrying filename-derived partition columns.
     """
+    return _upload_frame(spark.read, upload_dir)
+
+
+def _upload_frame(reader, upload_dir: str) -> DataFrame:
+    """The upload read shared by the batch reader and the ingest
+    stream: contract schema, PERMISSIVE multi-line JSON, and the
+    filename-derived keys. ``reader`` is a ``DataFrameReader`` or a
+    ``DataStreamReader``."""
     df = (
-        spark.read.schema(TXN_READ_SCHEMA)
+        reader.schema(TXN_READ_SCHEMA)
         .option("multiLine", "true")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")

@@ -31,33 +31,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..schema import TXN_READ_SCHEMA
 from ..sources import ingest as batch_ingest
 
 
 def read_upload_stream(
     spark: SparkSession, upload_dir: str, max_files: int = 16
 ) -> DataFrame:
-    df = (
-        spark.readStream.schema(TXN_READ_SCHEMA)
-        .option("multiLine", "true")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .option("maxFilesPerTrigger", str(max_files))
-        .json(f"{upload_dir}/*.json")
-    )
-    from ..schema import FILENAME_PATTERN
-
-    fname = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-    return (
-        df.select("*", F.col("_metadata.file_path").alias("_file_path"))
-        .withColumn("_file_name", fname)
-        .withColumn(
-            "store_id", F.regexp_extract("_file_name", FILENAME_PATTERN, 1)
-        )
-        .withColumn(
-            "sale_date", F.regexp_extract("_file_name", FILENAME_PATTERN, 2)
-        )
+    return batch_ingest._upload_frame(
+        spark.readStream.option("maxFilesPerTrigger", str(max_files)),
+        upload_dir,
     )
 
 

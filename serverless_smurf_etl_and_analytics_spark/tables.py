@@ -52,7 +52,7 @@ TABLES = (
 # ~0.10 s) and, for the fact table, the same 10-column mapping select
 # (~0.09 s of py4j/Catalyst) PER CALL — ~0.19 s of pure plan assembly
 # per query sample, the widest remaining slice of suite driver time
-# after the insight-frame memos. Keyed by (application id, loader,
+# after the insight-chain assembly. Keyed by (application id, loader,
 # absolute path[, table]); a different session or directory misses.
 # The memoized object is a LAZY plan — every action re-reads the
 # parquet files; no data is cached. The one masked mutation is a

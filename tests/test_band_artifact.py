@@ -201,7 +201,10 @@ def test_chunked_verify_identical_to_unchunked(spark, emb, monkeypatch):
     """r12: the fixed-size gather slices inside the verify kernel
     (the worker-memory bound added after the emb6m OOM) are a pure
     batching change — forcing a tiny chunk yields byte-identical
-    pairs to the full-batch kernel."""
+    pairs to the full-batch kernel. Both runs force the gather tier:
+    the 20-vector fixture would otherwise take the riding join, which
+    never reads the chunk size."""
+    monkeypatch.setattr(similarity, "_GATHER_VERIFY_MIN", 0)
     base = {
         (r["vec_a"], r["vec_b"], r["cosine"])
         for r in similarity.cosine_neardup_pairs(

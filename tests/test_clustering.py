@@ -79,7 +79,7 @@ def test_kmeans_deterministic_and_monotone(spark, monkeypatch):
     # force the DISTRIBUTED tier: this test proves partition
     # invariance of the cluster loop, which the driver tier (one
     # collect, no partitions) would satisfy vacuously
-    monkeypatch.setenv("SMURF_TRAINER_DRIVER_TIER_MAX", "0")
+    monkeypatch.setattr(clustering, "_DRIVER_TIER_MAX", 0)
     emb = tables.load(spark, SF_DIR, "embeddings")
     a1, c1, costs1 = clustering.kmeans_train(emb, K, ITERS)
     a2, c2, costs2 = clustering.kmeans_train(
@@ -114,7 +114,7 @@ def test_kmeans_rows_sit_in_nearest_cluster(spark):
 
 def test_pq_codes_partition_invariant(spark, monkeypatch):
     # force the DISTRIBUTED tier (see test_kmeans_deterministic_...)
-    monkeypatch.setenv("SMURF_TRAINER_DRIVER_TIER_MAX", "0")
+    monkeypatch.setattr(clustering, "_DRIVER_TIER_MAX", 0)
     emb = tables.load(spark, SF_DIR, "embeddings")
     a, cb_a = clustering.pq_train_encode(emb)
     b, cb_b = clustering.pq_train_encode(emb.repartition(13))
@@ -355,13 +355,13 @@ def test_driver_tier_equals_distributed_tier(spark, monkeypatch):
     differ only by summation order."""
     emb = tables.load(spark, SF_DIR, "embeddings")
 
-    monkeypatch.setenv("SMURF_TRAINER_DRIVER_TIER_MAX", "0")
+    monkeypatch.setattr(clustering, "_DRIVER_TIER_MAX", 0)
     da, dc, dcosts = clustering.kmeans_train(emb, K, ITERS, cache=None)
     dpd = da.toPandas().sort_values("vec_id").reset_index(drop=True)
     dcodes, dcb = clustering.pq_train_encode(emb, cache=None)
     dcp = dcodes.toPandas().sort_values("vec_id").reset_index(drop=True)
 
-    monkeypatch.setenv("SMURF_TRAINER_DRIVER_TIER_MAX", "1000000")
+    monkeypatch.setattr(clustering, "_DRIVER_TIER_MAX", 1_000_000)
     va, vc, vcosts = clustering.kmeans_train(emb, K, ITERS, cache=None)
     vpd = va.toPandas().sort_values("vec_id").reset_index(drop=True)
     vcodes, vcb = clustering.pq_train_encode(emb, cache=None)

@@ -1,5 +1,6 @@
 """Laws for the r14 session memos: gate scalars are computed once per
-(application, plan), distinct plans never share an entry, and the x6
+(application, plan), distinct plans never share an entry (a hash
+collision included), one-shot consumers pin no cache, and the x6
 manifest's shared-source row counts equal the real dataset counts."""
 
 from __future__ import annotations
@@ -46,46 +47,49 @@ def test_plan_scalar_distinguishes_plans_and_kinds(spark):
     )
 
 
-def test_shared_insight_frames_assemble_once_and_match(spark):
-    """r14: the insight chain's plan assembly is memoized per
-    (application, min_days, fact plan) — repeat consumer calls get the
-    SAME lazy frame objects — and the frames are value-identical to an
-    independently assembled chain (plan memoization never touches
-    results)."""
+def test_plan_scalar_recomputes_on_a_planted_hash_collision(spark):
+    """Two plans that share a semantic hash never share a value: an
+    entry under the caller's key whose stored plan differs is
+    recomputed and replaced, not served."""
+    docs = tables.load(spark, SF_DIR, "documents")
+    other = docs.filter("doc_id % 2 = 0")
+    plan = docs._jdf.queryExecution().analyzed()
+    key = (spark.sparkContext.applicationId, "collide", plan.semanticHash())
+    memo._MEMO[key] = (other._jdf.queryExecution().analyzed(), "stale")
+    calls = []
+    got = memo.plan_scalar(
+        docs, "collide", lambda: calls.append(1) or "fresh"
+    )
+    assert got == "fresh" and calls == [1]
+    assert memo._MEMO[key][1] == "fresh"
+    # the replaced entry now serves its own plan
+    assert memo.plan_scalar(docs, "collide", lambda: "again") == "fresh"
+
+
+def test_one_shot_consumers_pin_no_cache(spark):
+    """A single-output insight or export entry point builds only the
+    frame it returns and persists nothing; render_report releases the
+    frames it persisted for its three insight sections."""
     from serverless_smurf_etl_and_analytics_spark.operators import (
-        history,
         insights,
+        report,
     )
 
     txns = tables.transactions(spark, SF_DIR)
-    frames = insights.shared_insight_frames(txns)
-    # consumer entry points serve the memoized objects
-    assert insights.classify_anomalies(txns) is frames["an"]
-    assert insights.trend_insights(txns) is frames["trends"]
-    assert insights.recommendations(txns) is frames["recs"]
-    # an equal fact plan built independently hits the same entry
-    txns2 = tables.transactions(spark, SF_DIR)
-    assert insights.shared_insight_frames(txns2)["an"] is frames["an"]
-    # a different min_days is an independent entry, not a stale hit
-    assert (
-        insights.shared_insight_frames(txns, min_days=5)["an"]
-        is not frames["an"]
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for df in (
+        insights.classify_anomalies(txns),
+        insights.trend_insights(txns),
+        insights.recommendations(txns),
+        export.export_anomalies(txns),
+    ):
+        assert df.collect()
+    assert cache_manager.isEmpty()
+    assert "ANOMALIES DETECTED" in report.render_report(
+        txns, "2001-11-04", expected_stores=10
     )
-    # value parity vs a fresh, memo-free assembly of the same chain
-    daily = history.store_daily_cents(txns)
-    fresh = insights.recommendations_from(
-        insights.classify_anomalies_from_daily(daily)
-    )
-    got = {tuple(r) for r in frames["recs"].collect()}
-    want = {tuple(r) for r in fresh.collect()}
-    assert got == want and len(got) > 0
-    # plan invariance: the memoized frame IS the per-call assembly —
-    # same analyzed plan (persist markers do not alter it), so the
-    # memo is invisible to the verify window
-    assert (
-        frames["recs"]._jdf.queryExecution().analyzed().semanticHash()
-        == fresh._jdf.queryExecution().analyzed().semanticHash()
-    )
+    assert cache_manager.isEmpty()
 
 
 def test_table_loaders_memoized_per_path(spark):

@@ -2,7 +2,10 @@
 the full replay, the per-store alarm partitions (each written by the
 last micro-batch that touched the store, from that store's complete
 history) equal the batch quality_report on the final store_daily —
-exactly, not approximately."""
+exactly, not approximately. With one file per micro-batch a store
+recomputes its alarms once per upload over the same path and store
+filter, so a memo keyed on the plan alone would serve an earlier
+batch's file listing."""
 
 from __future__ import annotations
 
@@ -26,7 +29,10 @@ def upload_dir(spark, tmp_path):
     return d
 
 
-def test_streamed_alarms_equal_batch_report(spark, upload_dir, tmp_path):
+@pytest.mark.parametrize("max_files", [3, 1])
+def test_streamed_alarms_equal_batch_report(
+    spark, upload_dir, tmp_path, max_files
+):
     store_daily = tmp_path / "store_daily"
     expected = tables.load(spark, SF_DIR, "supplier").select(
         F.lpad(F.col("s_suppkey").cast("string"), 4, "0").alias("store_id")
@@ -38,7 +44,7 @@ def test_streamed_alarms_equal_batch_report(spark, upload_dir, tmp_path):
         str(tmp_path / "ledger"),
         expected,
         str(tmp_path / "ckpt"),
-        max_files=3,  # force multiple micro-batches
+        max_files=max_files,  # force multiple micro-batches
         alarms_dir=str(tmp_path / "alarms"),
     )
     q.awaitTermination(180)

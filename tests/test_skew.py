@@ -212,7 +212,7 @@ def test_pq_training_survives_duplicate_heavy_corpus(spark, monkeypatch):
 
     # force the DISTRIBUTED tier: partition invariance under skew is
     # exactly what the driver tier would satisfy vacuously
-    monkeypatch.setenv("SMURF_TRAINER_DRIVER_TIER_MAX", "0")
+    monkeypatch.setattr(clustering, "_DRIVER_TIER_MAX", 0)
     emb = tables.load(spark, SF_DIR, "embeddings")
     base = emb.limit(1).collect()[0]
     dups = spark.createDataFrame(
