@@ -42,7 +42,7 @@ _VERIFY_FIRST = [
     # lead: d7/d9 shared verified-pair persist, d10 retained cc
     # edge cache + 1-slice driver label map, x2 shared rank-row
     # persist, x6 manifest counting shared persisted sources
-    # (diffs: plans/r14/*_{before,after}.txt).
+    # (scripts/capture_plans.py regenerates their before/after plans).
     "d7_semantic_dedup", "d9_semantic_dedup_cc", "d10_minhash_dup_groups",
     "x2_export_top_products", "x6_export_manifest",
     # --- the 13 entries the r13 window overflowed to staleness 3

@@ -9,7 +9,8 @@ or crashed builder can never expose a partial artifact.
 
 Key versioning: every stage embeds a version token in its key format
 (``sh_v1_``, ``mh_v1_``, ``simh_v1_``, ``wn_v1_``, ``band_v1_``,
-``km_v1_``, ``pq_v1_``). The corpus fingerprint catches data changes
+``pq_v2_``: the Lloyd model, k-means included, whose bump retired
+the separate k-means and v1 PQ keys). The corpus fingerprint catches data changes
 but not CODE changes — if a stage's output definition ever changes
 (a shingle bugfix, a trainer tweak), bump its token so old artifacts
 miss instead of being silently read by new code.

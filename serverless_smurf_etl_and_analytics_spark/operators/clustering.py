@@ -1,29 +1,36 @@
-"""Distributed k-means (Lloyd) over the embeddings table — the
-training pass that produces the IVF coarse quantizer
-(similarity.ivf_topk's docstring: "a k-means training pass would swap
-in learned ones with no structural change").
+"""Distributed fixed-point Lloyd over the embeddings table: ONE trainer
+serves k-means (c1, the IVF coarse quantizer — similarity.ivf_topk's
+docstring: "a k-means training pass would swap in learned ones with no
+structural change") and product quantization (pq1-pq4, ivfpq1).
+k-means IS product quantization with one subspace (Jegou et al. 2011:
+each PQ sub-quantizer is a k-means), so :func:`kmeans_train` is the
+trainer with ``m=1`` projected to (vec_id, cluster_id, dist2) and
+:func:`pq_train_encode` is the trainer with ``m`` subspaces.
 
 Determinism: all assignment math is int64 fixed point (the
 similarity.SCALE convention), partial sums are exact integers (sum
 order cannot change them), centroid updates round half-away-from-zero
-at integer scale — so cluster assignments are bit-identical across
-runs, partitionings and engines. Only the reported float ``cost`` is
-summation-order sensitive (monitoring only, never fed back into the
-model).
+at integer scale — so codes and centroids are bit-identical across
+runs, partitionings, tiers and engines. Only the reported float
+``cost`` is summation-order sensitive (monitoring only, never fed back
+into the model).
 
 Scale design (Lloyd on Spark, the treeAggregate shape):
 - each iteration is ONE map-side pass: an Arrow-batched mapInPandas
-  computes per-batch nearest-centroid assignment (numpy matmul against
-  the broadcast k x dim centroid matrix) and emits per-batch partial
-  sums — at most k+1 rows per batch, (cluster_id, n, sum vector) — so
-  the per-iteration shuffle is O(batches * k * dim) longs, independent
-  of corpus size; the grouped combine output is k rows.
-- the final labeling pass streams assignments back as a DataFrame
-  (never collected);
-- centroids are a bounded model artifact (k * dim int64), the same
+  computes per-batch, per-subspace nearest-centroid assignments (numpy
+  matmul against the broadcast m x ksub x dim/m codebook tensor) and
+  emits per-batch partial sums — at most m * ksub rows per batch,
+  (subspace, cluster_id, n, sum vector, cost) — so the per-iteration
+  shuffle is O(batches * ksub * dim) longs, independent of corpus
+  size; all m codebooks train in the same pass;
+- the final encode pass streams the codes back as a DataFrame (never
+  collected);
+- codebooks are a bounded model artifact (ksub * dim int64), the same
   class of broadcast as IVF's centroid rows / cosine_topk's query
   matrix. Iterations are driver-side loops over Spark jobs, which is
   how distributed Lloyd works everywhere (MLlib included).
+- below ``_DRIVER_TIER_MAX`` vectors the corpus collects once and the
+  same kernel runs in-process on one "batch" (the driver tier).
 
 The closures are fully self-contained (helpers defined inside, imports
 inside) so cloudpickle ships them by value — a module-path reference
@@ -46,6 +53,7 @@ from .similarity import SCALE
 
 _PARTIAL_SCHEMA = StructType(
     [
+        StructField("subspace", LongType()),
         StructField("cluster_id", LongType()),
         StructField("n", LongType()),
         StructField("s", ArrayType(LongType())),
@@ -59,78 +67,124 @@ _PARTIAL_SCHEMA = StructType(
     ]
 )
 
-_ASSIGN_SCHEMA = StructType(
+_CODE_SCHEMA = StructType(
     [
         StructField("vec_id", LongType()),
-        StructField("cluster_id", LongType()),
-        StructField("dist2", LongType()),
+        StructField("codes", ArrayType(LongType())),
+        StructField("qerr", LongType()),
     ]
 )
 
 
 def _make_helpers(scale: int):
-    """Build the (to_fixed, nearest) pair once; both are plain local
-    functions, so closures capturing them pickle by value."""
+    """Build the fixed-point kernel once: ``rnd`` (round half away from
+    zero to int64), ``to_fixed`` (embedding column -> int64 matrix),
+    and, over ``encode`` (per-subspace nearest centroid and its d2),
+    ``partials`` (one batch's per-(subspace, cluster) sums) and
+    ``frame`` (one batch's code rows). All are plain local functions,
+    so closures capturing them pickle by value."""
     import numpy as np
+    import pandas as pd
+
+    def rnd(q):
+        return np.where(
+            q >= 0, np.floor(q + 0.5), np.ceil(q - 0.5)
+        ).astype(np.int64)
 
     def to_fixed(col):
-        m = (
+        return rnd(
             np.vstack(col.map(np.asarray).values).astype(np.float64)
             * scale
         )
-        return np.where(
-            m >= 0, np.floor(m + 0.5), np.ceil(m - 0.5)
-        ).astype(np.int64)
 
-    def nearest(iv, cent):
-        # ||x-c||^2 = ||x||^2 - 2x.c + ||c||^2; int64 throughout
+    def encode(iv, cent):
+        # cent = (m, ksub, dsub); per subspace
+        # ||x-c||^2 = ||x||^2 - 2x.c + ||c||^2, int64 throughout
         # (dim 64, |component| <= SCALE => max term ~2.6e14 << 2^63).
-        # Ties break to the lowest cluster id (argmin first-occurrence).
-        d2 = (
-            (iv * iv).sum(axis=1, keepdims=True)
-            - 2 * (iv @ cent.T)
-            + (cent * cent).sum(axis=1)[None, :]
-        )
-        a = np.argmin(d2, axis=1)
-        return a, d2[np.arange(len(a)), a]
+        # Ties break to the lowest id (argmin first-occurrence).
+        m, _, dsub = cent.shape
+        codes = np.empty((len(iv), m), dtype=np.int64)
+        d2 = np.empty((len(iv), m), dtype=np.int64)
+        rows = np.arange(len(iv))
+        for s in range(m):
+            x, c = iv[:, s * dsub : (s + 1) * dsub], cent[s]
+            d = (
+                (x * x).sum(axis=1, keepdims=True)
+                - 2 * (x @ c.T)
+                + (c * c).sum(axis=1)[None, :]
+            )
+            codes[:, s] = np.argmin(d, axis=1)
+            d2[:, s] = d[rows, codes[:, s]]
+        return codes, d2
 
-    return to_fixed, nearest
+    def partials(iv, cent):
+        codes, d2 = encode(iv, cent)
+        dsub = cent.shape[2]
+        out = {"subspace": [], "cluster_id": [], "n": [], "s": [],
+               "cost": []}
+        for s in range(cent.shape[0]):
+            x = iv[:, s * dsub : (s + 1) * dsub]
+            for cid in np.unique(codes[:, s]):
+                sel = codes[:, s] == cid
+                out["subspace"].append(s)
+                out["cluster_id"].append(int(cid))
+                out["n"].append(int(sel.sum()))
+                out["s"].append(x[sel].sum(axis=0).tolist())
+                # per-cluster cost share, float64: monitoring only —
+                # the int partial sums above are the exact model state
+                # (see _PARTIAL_SCHEMA note)
+                out["cost"].append(float(d2[sel, s].sum(dtype=np.float64)))
+        return out
+
+    def frame(ids, iv, cent):
+        codes, d2 = encode(iv, cent)
+        return pd.DataFrame(
+            {
+                "vec_id": ids,
+                "codes": [c.tolist() for c in codes],
+                "qerr": d2.sum(axis=1),
+            }
+        )
+
+    return rnd, to_fixed, partials, frame
 
 
 # corpus-size floor for "auto" model-artifact caching of the trained
-# clustering/PQ models — same rationale and driver-scale safety as
+# models — same rationale and driver-scale safety as
 # dedup._DOC_ARTIFACT_MIN (every driver-verified scale is below it, so
 # the gated default changes no verified plan; explicit roots bypass).
 _MODEL_ARTIFACT_MIN = 10_000
 
-# corpus-size ceiling for the DRIVER tier of the Lloyd trainers: below
+# corpus-size ceiling for the DRIVER tier of the Lloyd trainer: below
 # it the whole corpus collects once and the n_iter x (scan + Arrow +
 # shuffle + collect) distributed loop becomes a single numpy loop —
 # the dedup.connected_components small-graph tier applied to training
 # (r13, guide §2.6/§5: the per-iteration cost at small n is pure job
 # scheduling + Python-worker round trips, not arithmetic). The math is
-# the SAME int64 fixed-point kernel (to_fixed/nearest), partial sums
-# are exact integers, so both tiers are bit-identical (law-tested in
-# tests/test_clustering.py). 100k 64-dim vectors collect ~50 MB —
-# far under the 4g driver result cap; above the ceiling the
-# distributed loop runs unchanged.
+# the SAME int64 fixed-point kernel (the whole corpus is one batch of
+# `partials`), partial sums are exact integers, so both tiers are
+# bit-identical (law-tested in tests/test_clustering.py). 100k 64-dim
+# vectors collect ~50 MB — far under the 4g driver result cap; above
+# the ceiling the distributed loop runs. Every fixture and benchmark
+# corpus (sf0.1: 2,000 vectors) selects the driver tier; the laws
+# force the distributed one by setting this to 0.
 _DRIVER_TIER_MAX = 100_000
 
 
 def _collect_fixed(emb: DataFrame):
-    """Collect (vec_id, embedding) sorted by vec_id and convert to the
-    fixed-point matrix — the driver tier's one corpus pass. Row order
-    is deterministic (sorted ids), so every downstream artifact is
-    reproducible."""
+    """Collect (vec_id, embedding) sorted by vec_id as ``(ids, int64
+    fixed-point matrix)``. Row order is deterministic (sorted ids), so
+    every model and table built from it is reproducible."""
     import numpy as np
     import pandas as pd
 
-    to_fixed, nearest = _make_helpers(SCALE)
-    rows = emb.select("vec_id", "embedding").collect()
-    rows.sort(key=lambda r: r["vec_id"])
+    _, to_fixed, _, _ = _make_helpers(SCALE)
+    rows = sorted(
+        emb.select("vec_id", "embedding").collect(),
+        key=lambda r: r["vec_id"],
+    )
     ids = np.asarray([r["vec_id"] for r in rows], dtype=np.int64)
-    iv = to_fixed(pd.Series([r["embedding"] for r in rows]))
-    return ids, iv, nearest
+    return ids, to_fixed(pd.Series([r["embedding"] for r in rows]))
 
 
 def _model_paths_ok(*paths: str) -> bool:
@@ -156,244 +210,28 @@ def kmeans_train(
     assignments = (vec_id, cluster_id, dist2) labeled against the
     FINAL centroids (so every row provably sits in its nearest
     cluster), centroids = k fixed-point vectors, costs = per-iteration
-    sum of squared distance (float, monitoring only).
+    sum of squared distance before that iteration's update (float,
+    monitoring only).
 
-    Init follows the IVF convention: the first ``k`` vec_ids are the
-    seed centroids. Empty clusters keep their previous centroid.
-
-    The trained model is DETERMINISTIC (int64 fixed point, documented
-    tie rules), so (r8) it persists as a fingerprint-keyed MODEL
-    artifact — three parquet dirs (assignments / centroids /
-    per-iteration costs) under one ``km_*`` key — and c1/ivfpq1/pq3
-    cold sessions read the model instead of re-running ``n_iter``
-    corpus passes. Gate/staleness/fallback rules match the dedup
-    artifacts; a half-written artifact self-heals (the trainer is
-    deterministic, so re-writing any missing dir reproduces identical
-    content and `atomic_write_parquet` keeps whatever already
-    committed)."""
-    n_known = fingerprint[0] if fingerprint else None
-    if cache is not None:
-        try:
-            if n_known is None and cache == "auto":
-                from .memo import memoized_count
-
-                n_known = memoized_count(emb)
-            if cache != "auto" or n_known >= _MODEL_ARTIFACT_MIN:
-                import os
-
-                from .artifacts import atomic_write_parquet, cache_root
-                from .similarity import corpus_fingerprint
-
-                root = cache_root(None if cache == "auto" else cache)
-                from .memo import plan_scalar
-
-                n, h = fingerprint or plan_scalar(
-                    emb, "emb_fp", lambda: corpus_fingerprint(emb)
-                )
-                base = os.path.join(
-                    root, f"km_v1_n{n}_h{h}_k{k}_i{n_iter}"
-                )
-                spark = emb.sparkSession
-                paths = (base + "_asg", base + "_cent", base + "_meta")
-                if not _model_paths_ok(*paths):
-                    asg, cent, costs = _kmeans_train_inline(
-                        emb, k, n_iter
-                    )
-                    atomic_write_parquet(asg, paths[0])
-                    atomic_write_parquet(
-                        spark.createDataFrame(
-                            [
-                                (i, [int(x) for x in c])
-                                for i, c in enumerate(cent)
-                            ],
-                            "cluster_id long, c array<long>",
-                        ),
-                        paths[1],
-                    )
-                    atomic_write_parquet(
-                        spark.createDataFrame(
-                            [(i, float(c)) for i, c in enumerate(costs)],
-                            "iter long, cost double",
-                        ),
-                        paths[2],
-                    )
-                asg = spark.read.parquet(paths[0]).select(
-                    "vec_id", "cluster_id", "dist2"
-                )
-                cent = [
-                    list(r["c"])
-                    for r in sorted(
-                        spark.read.parquet(paths[1]).collect(),
-                        key=lambda r: r["cluster_id"],
-                    )
-                ]
-                costs = [
-                    r["cost"]
-                    for r in sorted(
-                        spark.read.parquet(paths[2]).collect(),
-                        key=lambda r: r["iter"],
-                    )
-                ]
-                return asg, cent, costs
-        except Exception:
-            pass
-    return _kmeans_train_inline(emb, k, n_iter, n=n_known)
+    This is the Lloyd trainer with one subspace (``m=1``, ``ksub=k``):
+    cluster_id is ``codes[0]`` and dist2 is ``qerr``. Init follows the
+    IVF convention: the first ``k`` vec_ids are the seed centroids.
+    Empty clusters keep their previous centroid. The model artifact
+    rules are :func:`pq_train_encode`'s."""
+    return _as_kmeans(*_train(emb, 1, k, n_iter, cache, fingerprint))
 
 
-def _kmeans_train_driver(
-    emb: DataFrame, k: int, n_iter: int
-) -> tuple[DataFrame, list[list[int]], list[float]]:
-    """Driver-numpy k-means tier: one collect, then the identical
-    int64 Lloyd updates in-process. Seeds, assignment ties, partial
-    sums and centroid rounding restate :func:`_kmeans_train_inline`'s
-    math exactly (integer sums are order-free), so the model and
-    assignments are bit-identical to the distributed loop; only the
-    float monitoring ``costs`` may differ in the last ulp (summation
-    order — never fed back, same caveat as the distributed form)."""
-    import numpy as np
-    import pandas as pd
-
-    ids, iv, nearest = _collect_fixed(emb)
-    cent = iv[ids < k].copy()
-    costs: list[float] = []
-    for _ in range(n_iter):
-        a, d2 = nearest(iv, cent)
-        costs.append(float(d2.sum(dtype=np.float64)))
-        new_cent = cent.copy()
-        for cid in np.unique(a):
-            sel = iv[a == cid]
-            q = sel.sum(axis=0).astype(np.float64) / sel.shape[0]
-            new_cent[cid] = np.where(
-                q >= 0, np.floor(q + 0.5), np.ceil(q - 0.5)
-            ).astype(np.int64)
-        cent = new_cent
-    a, d2 = nearest(iv, cent)
-    assignments = emb.sparkSession.createDataFrame(
-        pd.DataFrame(
-            {
-                "vec_id": ids,
-                "cluster_id": a.astype("int64"),
-                "dist2": d2.astype("int64"),
-            }
+def _as_kmeans(codes_df: DataFrame, codebooks: list, costs: list):
+    """Project a one-subspace model to k-means outputs."""
+    return (
+        codes_df.select(
+            "vec_id",
+            F.col("codes")[0].alias("cluster_id"),
+            F.col("qerr").alias("dist2"),
         ),
-        schema=_ASSIGN_SCHEMA,
+        codebooks[0],
+        costs,
     )
-    return assignments, cent.tolist(), costs
-
-
-def _kmeans_train_inline(
-    emb: DataFrame, k: int, n_iter: int, n: int | None = None
-) -> tuple[DataFrame, list[list[int]], list[float]]:
-    """The inline (retrain) k-means plan — see :func:`kmeans_train`."""
-    import numpy as np
-    import pandas as pd
-
-    if n is None:
-        from .memo import memoized_count
-
-        n = memoized_count(emb)
-    if 0 < n <= _DRIVER_TIER_MAX:
-        return _kmeans_train_driver(emb, k, n_iter)
-
-    to_fixed, nearest = _make_helpers(SCALE)
-    seed_rows = sorted(
-        emb.filter(F.col("vec_id") < k)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r["vec_id"],
-    )
-    cent = to_fixed(pd.Series([r["embedding"] for r in seed_rows]))
-    dim = cent.shape[1]
-    vecs = emb.select("vec_id", "embedding")
-    costs: list[float] = []
-
-    for _ in range(n_iter):
-        def partials(batches, c=cent, tf=to_fixed, nn=nearest):
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                iv = tf(pdf["embedding"])
-                a, d2 = nn(iv, c)
-                rows = {"cluster_id": [], "n": [], "s": [], "cost": []}
-                for cid in np.unique(a):
-                    sel = iv[a == cid]
-                    rows["cluster_id"].append(int(cid))
-                    rows["n"].append(int(sel.shape[0]))
-                    rows["s"].append(sel.sum(axis=0).tolist())
-                    # per-cluster cost share, float64: monitoring
-                    # only — the int partial sums above are the
-                    # exact model state (see _PARTIAL_SCHEMA note)
-                    rows["cost"].append(
-                        float(d2[a == cid].sum(dtype=np.float64))
-                    )
-                yield pd.DataFrame(rows)
-
-        part = (
-            vecs.mapInPandas(partials, schema=_PARTIAL_SCHEMA)
-            .groupBy("cluster_id")
-            .agg(
-                F.sum("n").alias("n"),
-                F.array(
-                    *[
-                        F.sum(F.element_at("s", i + 1))
-                        for i in range(dim)
-                    ]
-                ).alias("s"),
-                F.sum("cost").alias("cost"),
-            )
-            .collect()
-        )
-        new_cent = cent.copy()
-        cost = 0.0
-        for r in part:
-            cost += r["cost"]
-            s = np.asarray(r["s"], dtype=np.int64)
-            q = s.astype(np.float64) / r["n"]
-            new_cent[r["cluster_id"]] = np.where(
-                q >= 0, np.floor(q + 0.5), np.ceil(q - 0.5)
-            ).astype(np.int64)
-        costs.append(cost)
-        cent = new_cent
-
-    def label(batches, c=cent, tf=to_fixed, nn=nearest):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            iv = tf(pdf["embedding"])
-            a, d2 = nn(iv, c)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].values,
-                    "cluster_id": a.astype("int64"),
-                    "dist2": d2.astype("int64"),
-                }
-            )
-
-    assignments = vecs.mapInPandas(label, schema=_ASSIGN_SCHEMA)
-    return assignments, cent.tolist(), costs
-
-
-_PQ_PARTIAL_SCHEMA = StructType(
-    [
-        StructField("subspace", LongType()),
-        StructField("cluster_id", LongType()),
-        StructField("n", LongType()),
-        StructField("s", ArrayType(LongType())),
-    ]
-)
-
-_PQ_CODE_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType()),
-        StructField("codes", ArrayType(LongType())),
-        StructField("qerr", LongType()),
-    ]
-)
 
 
 def pq_train_encode(
@@ -406,26 +244,16 @@ def pq_train_encode(
 ) -> tuple[DataFrame, list]:
     """pq1: product quantization — split each embedding into ``m``
     subvectors, train a ``ksub``-centroid codebook per subspace
-    (fixed-point Lloyd, same determinism contract as
-    :func:`kmeans_train`), and encode every vector as ``m`` one-byte
-    codes. Returns ``(codes_df, codebooks)`` where codes_df =
-    (vec_id, codes array, qerr = total squared quantization error).
+    (fixed-point Lloyd, see the module docstring), and encode every
+    vector as ``m`` one-byte codes. Returns ``(codes_df, codebooks)``
+    where codes_df = (vec_id, codes array, qerr = total squared
+    quantization error).
 
     PQ is the memory side of the ANN story the sim* family leaves
     open: IVF (sim4) prunes WHICH vectors to score, PQ compresses WHAT
     is scored — a 64-dim float32 vector becomes m=8 bytes (32x), so at
     100 TB the candidate set fits executor memory and ADC scans
     replace raw-vector reads (Jegou et al. 2011).
-
-    Scale design: all m codebooks train in ONE pass per iteration —
-    the Arrow-batched partial computes per-subspace nearest-centroid
-    assignments against the broadcast (m x ksub x dim/m) codebook
-    tensor and emits at most m * (ksub + 1) partial-sum rows per
-    batch, so the per-iteration shuffle is O(batches * m * ksub *
-    dim/m) = O(batches * ksub * dim) longs — corpus-size independent,
-    identical to one kmeans_train iteration. Training m codebooks
-    sequentially would cost m passes for the same arithmetic. The
-    final encode pass streams (never collects) the code table.
 
     Determinism: int64 fixed point end-to-end; ties to the lowest
     code (argmin first-occurrence); centroid updates round
@@ -434,13 +262,31 @@ def pq_train_encode(
     subspace.
 
     Deterministic => (r8) the trained model persists as a
-    fingerprint-keyed MODEL artifact (``pq_*_codes`` +
-    ``pq_*_cb`` parquet dirs), exactly like :func:`kmeans_train`;
-    pq1/pq2/pq4/ivfpq1 cold sessions read codes + codebooks instead
-    of retraining, and pq3's residual path composes (its input frame
-    is fingerprinted like any corpus). Gate/fallback/self-healing
-    rules match kmeans_train.
-    """
+    fingerprint-keyed MODEL artifact — three parquet dirs (codes /
+    codebooks / per-iteration costs) under one ``pq_v2_`` key — and
+    c1/pq1-pq4/ivfpq1 cold sessions read the model instead of
+    re-running ``n_iter`` corpus passes; pq3's residual path composes
+    (its input frame is fingerprinted like any corpus). Gate,
+    staleness and fallback rules match the dedup artifacts; a
+    half-written artifact self-heals (the trainer is deterministic, so
+    re-writing any missing dir reproduces identical content and
+    `atomic_write_parquet` keeps whatever already committed)."""
+    codes_df, codebooks, _ = _train(emb, m, ksub, n_iter, cache, fingerprint)
+    return codes_df, codebooks
+
+
+def _train(
+    emb: DataFrame,
+    m: int,
+    ksub: int,
+    n_iter: int,
+    cache: str | None,
+    fingerprint: tuple[int, int] | None,
+) -> tuple[DataFrame, list, list[float]]:
+    """:func:`_lloyd_train` behind the model artifact: at or above
+    ``_MODEL_ARTIFACT_MIN`` vectors (or under an explicit ``cache``
+    root) read the model, writing it first if missing; any artifact
+    error falls back to training."""
     n_known = fingerprint[0] if fingerprint else None
     if cache is not None:
         try:
@@ -452,22 +298,21 @@ def pq_train_encode(
                 import os
 
                 from .artifacts import atomic_write_parquet, cache_root
-                from .similarity import corpus_fingerprint
-
-                root = cache_root(None if cache == "auto" else cache)
                 from .memo import plan_scalar
+                from .similarity import corpus_fingerprint
 
                 n, h = fingerprint or plan_scalar(
                     emb, "emb_fp", lambda: corpus_fingerprint(emb)
                 )
                 base = os.path.join(
-                    root, f"pq_v1_n{n}_h{h}_m{m}_k{ksub}_i{n_iter}"
+                    cache_root(None if cache == "auto" else cache),
+                    f"pq_v2_n{n}_h{h}_m{m}_k{ksub}_i{n_iter}",
                 )
                 spark = emb.sparkSession
-                paths = (base + "_codes", base + "_cb")
+                paths = (base + "_codes", base + "_cb", base + "_cost")
                 if not _model_paths_ok(*paths):
-                    codes_df, cbs = _pq_train_encode_inline(
-                        emb, m, ksub, n_iter
+                    codes_df, cbs, costs = _lloyd_train(
+                        emb, m, ksub, n_iter, n=n_known
                     )
                     atomic_write_parquet(codes_df, paths[0])
                     atomic_write_parquet(
@@ -482,176 +327,157 @@ def pq_train_encode(
                         ),
                         paths[1],
                     )
+                    atomic_write_parquet(
+                        spark.createDataFrame(
+                            [(i, float(c)) for i, c in enumerate(costs)],
+                            "iter long, cost double",
+                        ),
+                        paths[2],
+                    )
+                rows = sorted(
+                    spark.read.parquet(paths[1]).collect(),
+                    key=lambda r: (r["subspace"], r["cluster_id"]),
+                )
+                cbs = [
+                    [list(r["c"]) for r in rows if r["subspace"] == s]
+                    for s in range(m)
+                ]
+                costs = [
+                    r["cost"]
+                    for r in sorted(
+                        spark.read.parquet(paths[2]).collect(),
+                        key=lambda r: r["iter"],
+                    )
+                ]
                 codes_df = spark.read.parquet(paths[0]).select(
                     "vec_id", "codes", "qerr"
                 )
-                rows = spark.read.parquet(paths[1]).collect()
-                books: dict = {}
-                for r in rows:
-                    books.setdefault(r["subspace"], {})[
-                        r["cluster_id"]
-                    ] = list(r["c"])
-                cbs = [
-                    [books[s][c] for c in sorted(books[s])]
-                    for s in sorted(books)
-                ]
-                return codes_df, cbs
+                return codes_df, cbs, costs
         except Exception:
             pass
-    return _pq_train_encode_inline(emb, m, ksub, n_iter, n=n_known)
+    return _lloyd_train(emb, m, ksub, n_iter, n=n_known)
 
 
-def _pq_train_encode_driver(
-    emb: DataFrame, m: int, ksub: int, n_iter: int
-) -> tuple[DataFrame, list]:
-    """Driver-numpy PQ tier — :func:`_kmeans_train_driver`'s twin for
-    the per-subspace codebooks: one collect, the identical int64
-    subspace Lloyd updates, and the encode pass in-process. Codes,
-    codebooks and qerr are bit-identical to the distributed loop
-    (exact integer partial sums, same tie rules)."""
-    import numpy as np
-    import pandas as pd
-
-    ids, iv, nearest = _collect_fixed(emb)
-    seeds = iv[ids < ksub]
-    dim = iv.shape[1]
-    dsub = dim // m
-    cent = np.stack(
-        [seeds[:, s * dsub : (s + 1) * dsub].copy() for s in range(m)]
-    )
-    for _ in range(n_iter):
-        new_cent = cent.copy()
-        for s in range(m):
-            sub = iv[:, s * dsub : (s + 1) * dsub]
-            a, _ = nearest(sub, cent[s])
-            for cid in np.unique(a):
-                sel = sub[a == cid]
-                q = sel.sum(axis=0).astype(np.float64) / sel.shape[0]
-                new_cent[s, cid] = np.where(
-                    q >= 0, np.floor(q + 0.5), np.ceil(q - 0.5)
-                ).astype(np.int64)
-        cent = new_cent
-    codes = np.empty((len(ids), m), dtype=np.int64)
-    qerr = np.zeros(len(ids), dtype=np.int64)
-    for s in range(m):
-        sub = iv[:, s * dsub : (s + 1) * dsub]
-        a, d2 = nearest(sub, cent[s])
-        codes[:, s] = a
-        qerr += d2.astype(np.int64)
-    codes_df = emb.sparkSession.createDataFrame(
-        pd.DataFrame(
-            {
-                "vec_id": ids,
-                "codes": [c.tolist() for c in codes],
-                "qerr": qerr,
-            }
-        ),
-        schema=_PQ_CODE_SCHEMA,
-    )
-    return codes_df, cent.tolist()
-
-
-def _pq_train_encode_inline(
+def _lloyd_train(
     emb: DataFrame, m: int, ksub: int, n_iter: int, n: int | None = None
-) -> tuple[DataFrame, list]:
-    """The inline (retrain) PQ plan — see :func:`pq_train_encode`."""
+) -> tuple[DataFrame, list, list[float]]:
+    """The m-subspace fixed-point Lloyd trainer (no artifact): returns
+    ``(codes_df, codebooks, costs)`` — codes_df = (vec_id, codes,
+    qerr) against the FINAL codebooks, codebooks = m x ksub x dim/m
+    int64, costs[i] = iteration i's total squared distance before its
+    update, summed over subspaces.
+
+    Up to ``_DRIVER_TIER_MAX`` vectors the corpus collects once (sorted
+    by vec_id) and every iteration is one in-process ``partials`` call;
+    above it each iteration is one mapInPandas pass of the same kernel
+    plus a grouped combine. Integer partial sums are order-free, so
+    codes, codebooks and qerr are bit-identical across the tiers; the
+    float ``costs`` may differ in the last ulp (summation order)."""
     import numpy as np
-    import pandas as pd
 
     if n is None:
         from .memo import memoized_count
 
         n = memoized_count(emb)
-    if 0 < n <= _DRIVER_TIER_MAX:
-        return _pq_train_encode_driver(emb, m, ksub, n_iter)
-
-    to_fixed, nearest = _make_helpers(SCALE)
-    seed_rows = sorted(
-        emb.filter(F.col("vec_id") < ksub)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r["vec_id"],
+    driver = 0 < n <= _DRIVER_TIER_MAX
+    rnd, to_fixed, partials, frame = _make_helpers(SCALE)
+    vecs = emb.select("vec_id", "embedding")
+    # the driver tier's one corpus pass, else just the seed rows
+    ids, iv = _collect_fixed(
+        vecs if driver else vecs.filter(F.col("vec_id") < ksub)
     )
-    seeds = to_fixed(pd.Series([r["embedding"] for r in seed_rows]))
-    dim = seeds.shape[1]
-    dsub = dim // m
+    seeds = iv[ids < ksub]
+    dsub = iv.shape[1] // m
     # codebook tensor: cent[s] = (ksub, dsub)
     cent = np.stack(
-        [seeds[:, s * dsub : (s + 1) * dsub].copy() for s in range(m)]
+        [seeds[:, s * dsub : (s + 1) * dsub] for s in range(m)]
     )
-    vecs = emb.select("vec_id", "embedding")
+    costs: list[float] = []
 
     for _ in range(n_iter):
+        if driver:
+            part = zip(*partials(iv, cent).values())
+        else:
 
-        def partials(batches, c=cent, tf=to_fixed, nn=nearest,
-                     m=m, dsub=dsub):
-            import numpy as np
-            import pandas as pd
+            def batch_partials(batches, c=cent, tf=to_fixed, pr=partials):
+                import pandas as pd
 
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                iv = tf(pdf["embedding"])
-                rows = {"subspace": [], "cluster_id": [], "n": [], "s": []}
-                for s in range(m):
-                    sub = iv[:, s * dsub : (s + 1) * dsub]
-                    a, _ = nn(sub, c[s])
-                    for cid in np.unique(a):
-                        sel = sub[a == cid]
-                        rows["subspace"].append(s)
-                        rows["cluster_id"].append(int(cid))
-                        rows["n"].append(int(sel.shape[0]))
-                        rows["s"].append(sel.sum(axis=0).tolist())
-                yield pd.DataFrame(rows)
+                for pdf in batches:
+                    if len(pdf):
+                        yield pd.DataFrame(pr(tf(pdf["embedding"]), c))
 
-        part = (
-            vecs.mapInPandas(partials, schema=_PQ_PARTIAL_SCHEMA)
-            .groupBy("subspace", "cluster_id")
-            .agg(
-                F.sum("n").alias("n"),
-                F.array(
-                    *[
-                        F.sum(F.try_element_at("s", F.lit(i + 1)))
-                        for i in range(dsub)
-                    ]
-                ).alias("s"),
+            part = (
+                vecs.mapInPandas(batch_partials, schema=_PARTIAL_SCHEMA)
+                .groupBy("subspace", "cluster_id")
+                .agg(
+                    F.sum("n").alias("n"),
+                    F.array(
+                        *[
+                            F.sum(F.try_element_at("s", F.lit(i + 1)))
+                            for i in range(dsub)
+                        ]
+                    ).alias("s"),
+                    F.sum("cost").alias("cost"),
+                )
+                .collect()
             )
-            .collect()
-        )
         new_cent = cent.copy()
-        for r in part:
-            s_arr = np.asarray(r["s"], dtype=np.int64)
-            q = s_arr.astype(np.float64) / r["n"]
-            new_cent[r["subspace"], r["cluster_id"]] = np.where(
-                q >= 0, np.floor(q + 0.5), np.ceil(q - 0.5)
-            ).astype(np.int64)
+        cost = 0.0
+        for s, cid, cnt, ssum, c in part:
+            cost += c
+            new_cent[s, cid] = rnd(
+                np.asarray(ssum, dtype=np.int64).astype(np.float64) / cnt
+            )
+        costs.append(cost)
         cent = new_cent
 
-    def encode(batches, c=cent, tf=to_fixed, nn=nearest, m=m, dsub=dsub):
-        import numpy as np
-        import pandas as pd
+    if driver:
+        codes_df = emb.sparkSession.createDataFrame(
+            frame(ids, iv, cent), schema=_CODE_SCHEMA
+        )
+    else:
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            iv = tf(pdf["embedding"])
-            codes = np.empty((len(pdf), m), dtype=np.int64)
-            qerr = np.zeros(len(pdf), dtype=np.int64)
-            for s in range(m):
-                sub = iv[:, s * dsub : (s + 1) * dsub]
-                a, d2 = nn(sub, c[s])
-                codes[:, s] = a
-                qerr += d2.astype(np.int64)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].values,
-                    "codes": list(codes),
-                    "qerr": qerr,
-                }
-            )
+        def encode(batches, c=cent, tf=to_fixed, fr=frame):
+            for pdf in batches:
+                if len(pdf):
+                    yield fr(pdf["vec_id"].values, tf(pdf["embedding"]), c)
 
-    codes_df = vecs.mapInPandas(encode, schema=_PQ_CODE_SCHEMA)
-    return codes_df, cent.tolist()
+        codes_df = vecs.mapInPandas(encode, schema=_CODE_SCHEMA)
+    return codes_df, cent.tolist(), costs
+
+
+def _adc_tables(emb: DataFrame, codebooks: list, n_queries: int):
+    """Collect the first ``n_queries`` vectors (sorted by vec_id) and
+    build their ADC lookup tables, ``tables[qi, s, j] = ||q_s -
+    c_sj||^2`` — the (queries x m x ksub) int64 tensor pq2 and ivfpq1
+    ship in their scoring closures. Returns ``(qids, queries in fixed
+    point, tables)``."""
+    import numpy as np
+
+    qids, qiv = _collect_fixed(emb.filter(F.col("vec_id") < n_queries))
+    cent = np.asarray(codebooks, dtype=np.int64)  # (m, ksub, dsub)
+    m, ksub, dsub = cent.shape
+    tables = np.empty((len(qids), m, ksub), dtype=np.int64)
+    for s in range(m):
+        diff = qiv[:, None, s * dsub : (s + 1) * dsub] - cent[s][None]
+        tables[:, s] = (diff * diff).sum(axis=2)
+    return qids, qiv, tables
+
+
+def _adc_rank(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's ``k`` nearest by ``adc_d2`` (ties to the lowest
+    neighbor id, the query itself dropped), with a 1-based ``rank``."""
+    from pyspark.sql import Window as W
+
+    w = W.partitionBy("query_id").orderBy("adc_d2", "neighbor_id")
+    return (
+        scored.filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select(
+            *scored.columns, F.col("rn").cast("long").alias("rank")
+        )
+    )
 
 
 def pq_adc_topk(
@@ -677,27 +503,8 @@ def pq_adc_topk(
     Determinism: the codes, tables and distance sums are all int64;
     top-k ties break to the lowest neighbor vec_id.
     """
-    import numpy as np
-    import pandas as pd
-
     codes_df, codebooks = pq_train_encode(emb, m, ksub, n_iter)
-    cent = np.asarray(codebooks, dtype=np.int64)  # (m, ksub, dsub)
-    dsub = cent.shape[2]
-    to_fixed, _ = _make_helpers(SCALE)
-    q_rows = sorted(
-        emb.filter(F.col("vec_id") < n_queries)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r["vec_id"],
-    )
-    qiv = to_fixed(pd.Series([r["embedding"] for r in q_rows]))
-    qids = np.asarray([r["vec_id"] for r in q_rows], dtype=np.int64)
-    # tables[qi, s, j] = ||q_s - c_sj||^2
-    tables = np.empty((len(qids), cent.shape[0], ksub), dtype=np.int64)
-    for qi in range(len(qids)):
-        for s in range(cent.shape[0]):
-            diff = qiv[qi, s * dsub : (s + 1) * dsub][None, :] - cent[s]
-            tables[qi, s] = (diff * diff).sum(axis=1)
+    qids, _, tables = _adc_tables(emb, codebooks, n_queries)
 
     schema = StructType(
         [
@@ -731,18 +538,7 @@ def pq_adc_topk(
                 )
             yield pd.concat(out)
 
-    scored = codes_df.mapInPandas(score, schema=schema).filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("query_id").orderBy("adc_d2", "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "adc_d2",
-                F.col("rn").cast("long").alias("rank"))
-    )
+    return _adc_rank(codes_df.mapInPandas(score, schema=schema), k)
 
 
 def ivfpq_topk(
@@ -777,7 +573,6 @@ def ivfpq_topk(
     centroid id); top-k ties break to the lowest neighbor id.
     """
     import numpy as np
-    import pandas as pd
 
     # the coarse quantizer and the PQ codebooks are INDEPENDENT
     # training loops over the same corpus — run them from two driver
@@ -801,17 +596,7 @@ def ivfpq_topk(
     )
 
     cc = np.asarray(coarse_cent, dtype=np.int64)  # (coarse_k, dim)
-    cent = np.asarray(codebooks, dtype=np.int64)  # (m, ksub, dsub)
-    dsub = cent.shape[2]
-    to_fixed, _ = _make_helpers(SCALE)
-    q_rows = sorted(
-        emb.filter(F.col("vec_id") < n_queries)
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r["vec_id"],
-    )
-    qiv = to_fixed(pd.Series([r["embedding"] for r in q_rows]))
-    qids = np.asarray([r["vec_id"] for r in q_rows], dtype=np.int64)
+    qids, qiv, tables = _adc_tables(emb, codebooks, n_queries)
 
     # probe sets: the nprobe coarse lists nearest each query, ties to
     # the lower centroid id (lexsort is stable on the secondary key)
@@ -820,12 +605,6 @@ def ivfpq_topk(
         d2 = ((qiv[qi][None, :] - cc) ** 2).sum(axis=1)
         order = np.lexsort((np.arange(len(d2)), d2))
         probes[int(qids[qi])] = set(order[:nprobe].tolist())
-
-    tables = np.empty((len(qids), m, ksub), dtype=np.int64)
-    for qi in range(len(qids)):
-        for s in range(m):
-            diff = qiv[qi, s * dsub : (s + 1) * dsub][None, :] - cent[s]
-            tables[qi, s] = (diff * diff).sum(axis=1)
 
     schema = StructType(
         [
@@ -866,23 +645,7 @@ def ivfpq_topk(
             if out:
                 yield pd.concat(out)
 
-    scored = db.mapInPandas(score, schema=schema).filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("query_id").orderBy("adc_d2", "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "list_id",
-            "adc_d2",
-            F.col("rn").cast("long").alias("rank"),
-        )
-    )
+    return _adc_rank(db.mapInPandas(score, schema=schema), k)
 
 
 def pq_adc_rerank_topk(
@@ -973,15 +736,12 @@ def pq_train_encode_residual(
     carry over unchanged.
     """
     import numpy as np
-    import pandas as pd
 
     assignments, coarse_cent, _ = kmeans_train(emb, coarse_k, coarse_iters)
     cc = np.asarray(coarse_cent, dtype=np.int64)
     joined = emb.select("vec_id", "embedding").join(
         assignments.select("vec_id", "cluster_id"), "vec_id"
     )
-
-    from pyspark.sql.types import DoubleType
 
     res_schema = StructType(
         [

@@ -98,6 +98,9 @@ def clear_operator_caches(spark: SparkSession) -> None:
             del cache[key]
     similarity._swap_gather_bc(None)
     spark.catalog.clearCache()
+    # the shared store-day MVs were just unpersisted: let the next
+    # registry query warm (persist) them again
+    vars(spark).pop("_smurf_mv_warmed", None)
 
 
 def tune_existing(spark: SparkSession) -> SparkSession:

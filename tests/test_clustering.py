@@ -5,6 +5,7 @@ runs, and the monotone-cost guarantee."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from serverless_smurf_etl_and_analytics_spark import tables
 from serverless_smurf_etl_and_analytics_spark.operators import clustering
@@ -51,7 +52,12 @@ def _reference(vec_ids, mat, k, n_iter):
     return a, d2, cent, costs
 
 
-def test_kmeans_matches_numpy_reference(spark):
+@pytest.mark.parametrize(
+    "tier_max", [0, clustering._DRIVER_TIER_MAX],
+    ids=["distributed", "driver"],
+)
+def test_kmeans_matches_numpy_reference(spark, monkeypatch, tier_max):
+    monkeypatch.setattr(clustering, "_DRIVER_TIER_MAX", tier_max)
     emb = tables.load(spark, SF_DIR, "embeddings")
     adf, cent, costs = clustering.kmeans_train(emb, K, ITERS)
     got = (
@@ -316,13 +322,15 @@ def test_model_artifacts_equal_inline_training(spark, tmp_path):
 
     emb = tables.load(spark, SF_DIR, "embeddings")
     root = str(tmp_path)
-    ia, ic, icost = clustering._kmeans_train_inline(emb, 16, 5)
+    ia, ic, icost = clustering._as_kmeans(
+        *clustering._lloyd_train(emb, 1, 16, 5)
+    )
     ca, cc, ccost = clustering.kmeans_train(emb, cache=root)
     assert ic == cc and icost == ccost
     assert {tuple(r) for r in ia.collect()} == {
         tuple(r) for r in ca.collect()
     }
-    icodes, icb = clustering._pq_train_encode_inline(emb, 8, 16, 3)
+    icodes, icb, _ = clustering._lloyd_train(emb, 8, 16, 3)
     ccodes, ccb = clustering.pq_train_encode(emb, cache=root)
     assert icb == ccb
     assert {
@@ -343,7 +351,9 @@ def test_model_artifact_gate_keeps_inline_below_min(spark):
     pinned bench rely on the unchanged plans)."""
     emb = tables.load(spark, SF_DIR, "embeddings")
     _, auto_c, _ = clustering.kmeans_train(emb, cache="auto")
-    _, inline_c, _ = clustering._kmeans_train_inline(emb, 16, 5)
+    _, inline_c, _ = clustering._as_kmeans(
+        *clustering._lloyd_train(emb, 1, 16, 5)
+    )
     assert auto_c == inline_c
 
 

@@ -127,12 +127,18 @@ def test_clear_operator_caches_frees_memos_and_gather_broadcast(
 ):
     """A memoized loader frame pins its directory's file listing; after
     ``session.clear_operator_caches`` the next load sees a part file
-    added since, and the live near-dup gather broadcast is released."""
+    added since, the live near-dup gather broadcast is released, and
+    the next registry query persists the shared store-day MVs again."""
+    from pyspark.storagelevel import StorageLevel
+
     from serverless_smurf_etl_and_analytics_spark import session
     from serverless_smurf_etl_and_analytics_spark.operators import (
+        metrics,
         similarity,
     )
+    from serverless_smurf_etl_and_analytics_spark.plans import registry
 
+    registry.QUERIES["a1_store_day_metrics"](spark, SF_DIR).collect()
     path = str(tmp_path / "t.parquet")
     spark.range(3).write.parquet(path)
     assert tables.load(spark, str(tmp_path), "t").count() == 3
@@ -151,3 +157,6 @@ def test_clear_operator_caches_frees_memos_and_gather_broadcast(
     assert similarity._GATHER_BC == []
     app = spark.sparkContext.applicationId
     assert not any(k[0] == app for k in memo._MEMO)
+    registry.QUERIES["a1_store_day_metrics"](spark, SF_DIR).collect()
+    mv = metrics.store_day_metrics(tables.transactions(spark, SF_DIR))
+    assert mv.storageLevel == StorageLevel.MEMORY_AND_DISK
