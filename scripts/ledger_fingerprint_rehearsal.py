@@ -39,6 +39,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from serverless_smurf_etl_and_analytics_spark.operators import (  # noqa: E402
+    artifacts,
     similarity,
 )
 from serverless_smurf_etl_and_analytics_spark.session import get_spark  # noqa: E402
@@ -118,7 +119,7 @@ def measure(
         # first, so it also absorbs this process's JVM warmup the
         # same way the scan variant's in-query scan does)
         t0 = time.monotonic()
-        scan_fp = similarity.corpus_fingerprint(emb)
+        scan_fp = artifacts.corpus_fingerprint(emb, EMB_COLS)
         result["fingerprint_full_scan_alone_sec"] = round(
             time.monotonic() - t0, 2
         )

@@ -16,7 +16,7 @@ summaries, never re-deriving them —
   manifest) and ADVANCE every registered artifact family for that
   corpus kind in O(shard) — hard-link the old artifact's files under
   the new ledger key, append only the shard's derived rows
-  (``advance_*`` family). First ingest (or a family with no prior
+  (``artifacts.Kind.advance``). First ingest (or a family with no prior
   artifact) builds over the current corpus, which for the first
   shard IS the shard — so a maintained corpus never has a separate
   "first contact" query-time build at all.
@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators import (
+    artifacts,
     dedup,
     export,
     history,
@@ -57,26 +58,35 @@ from .operators import (
 from .operators.artifacts import cache_root
 from .sources import tablelog
 
-# fingerprint column lists per corpus kind — the SAME lists the
-# operators' scan fingerprints hash (order matters: xxhash64 is
-# positional), so the ledger pair is a drop-in for the scan pair
-DOC_FP_COLS = ["doc_id", "text"]
-EMB_FP_COLS = ["vec_id", "embedding"]
-TXN_FP_COLS = ["transaction_id", "item_sku", "sale_date"]
-
-# columns the wide store-day daily family (sdc_v2) aggregates; the
-# product-store-day family (psd_v1) additionally needs item_sku
+# columns the wide store-day daily family aggregates; the
+# product-store-day family additionally needs item_sku
 _DAILY_COLS = {
     "store_id", "sale_date", "line_cents", "discount_cents", "quantity"
 }
 
-# artifact families maintained per corpus kind, with the config the
-# REGISTERED queries use (d2-d4/d8/d11: bigram shingles + 8x4 MinHash;
-# d5/d6: 128-bit SimHash; wn1/wn2: k=4 w=4 winnow; sim1-sim4: adaptive
-# band width; co1/co2: daily co-pair partials). A family's advance and
-# its query-side cache key must agree on config or the key misses.
-DOC_FAMILIES = ("shingle", "minhash", "simhash", "winnow")
+# artifact families maintained per corpus kind: family name -> (kind,
+# the config the REGISTERED queries use, columns the corpus must have).
+# d2-d4/d8/d11: bigram shingles + 8x4 MinHash; d5/d6: 128-bit SimHash;
+# wn1/wn2: k=4 w=4 winnow; sim1-sim4: adaptive band width (carried by
+# the band kind itself); co1/co2: daily co-pair partials; x1-x5: the
+# store-day and product-store-day partials. A family's advance and its
+# query-side cache key must agree on config or the key misses.
 SIMHASH_BITS = 128
+_DOC_FAMILIES = {
+    "shingle": (dedup.SHINGLE, {"g": 2}, set()),
+    "minhash": (dedup.MINHASH, {"k": dedup.N_MINHASH}, set()),
+    "simhash": (dedup.SIMHASH, {"bits": SIMHASH_BITS}, set()),
+    "winnow": (textops.WINNOW, {"k": 4, "w": 4}, set()),
+}
+DOC_FAMILIES = tuple(_DOC_FAMILIES)
+_EMB_FAMILIES = {"band": (similarity.BAND, {}, set())}
+_TXN_FAMILIES = {
+    "co_pair_daily": (joins.CO_DAILY, {}, set()),
+    "store_daily": (history.STORE_DAILY, {}, _DAILY_COLS),
+    "product_daily": (
+        metrics.PRODUCT_DAILY, {}, _DAILY_COLS | {"item_sku"}
+    ),
+}
 
 
 def _commit_pinned(
@@ -138,29 +148,65 @@ def _commit_pinned(
         )
 
 
-def _advance_or_build(
-    advance, build, family: str, stats: dict
-) -> None:
-    """Record how a family was maintained: ``advanced`` (O(shard)
-    hard-link + append), ``built`` (no prior artifact — full build
-    over the current corpus, which on first ingest is the shard), or
-    ``build-failed`` when the builder returned None (the cached_*
-    builders swallow environmental errors to None — ADVICE r12: the
-    ingest stats must not claim an artifact that was never
-    published). Every registered builder returns a non-None value on
-    success (a DataFrame read-back or an artifact path). Both arms
-    are thunks so ``{family}_sec`` records the per-family maintenance
-    wall — the number the scale rehearsals track per rung."""
+def _maintain(
+    families: dict,
+    committed: DataFrame,
+    current: DataFrame,
+    old_fp: tuple[int, int] | None,
+    new_fp: tuple[int, int] | None,
+    root: str,
+) -> dict:
+    """Advance-or-build each family and record how: ``advanced``
+    (O(shard) hard-link + append), ``built`` (no prior artifact — a
+    full build over the current corpus, which on first ingest is the
+    shard), ``build-failed`` when the lookup fell back (ADVICE r12:
+    the ingest stats must not claim an artifact that was never
+    published), or ``skipped`` when the corpus lacks the family's
+    columns. ``{family}_sec`` records the per-family maintenance wall
+    — the number the scale rehearsals track per rung.
+
+    Column gates inspect the CURRENT corpus head, not just the shard
+    (ADVICE r12): a full-column shard appended to a keys-only corpus
+    must not trigger a build over rows missing the metric columns."""
     import time
 
-    t0 = time.monotonic()
-    if advance() is not None:
-        stats[family] = "advanced"
-    else:
-        stats[family] = (
-            "built" if build() is not None else "build-failed"
-        )
-    stats[f"{family}_sec"] = round(time.monotonic() - t0, 2)
+    stats: dict = {}
+    cols = set(committed.columns) & set(current.columns)
+    for family, (kind, cfg, needs) in families.items():
+        if not needs <= cols:
+            stats[family] = f"skipped (corpus lacks {sorted(needs - cols)})"
+            continue
+        t0 = time.monotonic()
+        if old_fp and kind.advance(committed, old_fp, new_fp, root, **cfg):
+            stats[family] = "advanced"
+        elif kind.lookup(current, root, new_fp, **cfg) is not None:
+            stats[family] = "built"
+        else:
+            stats[family] = "build-failed"
+        stats[f"{family}_sec"] = round(time.monotonic() - t0, 2)
+    return stats
+
+
+def _ingest(
+    spark: SparkSession,
+    table_dir: str,
+    shard: DataFrame,
+    cols: list[str],
+    families: dict,
+    cache: str | None,
+) -> dict:
+    """Commit ``shard`` (:func:`_commit_pinned`) and maintain
+    ``families`` for the grown corpus."""
+    old_fp, version, new_fp, committed, current = _commit_pinned(
+        spark, table_dir, shard, cols
+    )
+    return {
+        "version": version,
+        "fingerprint": new_fp,
+        **_maintain(
+            families, committed, current, old_fp, new_fp, cache_root(cache)
+        ),
+    }
 
 
 def ingest_documents(
@@ -208,84 +254,10 @@ def ingest_documents(
     plan at every measured scale, so each family keeps its own walk
     (~4 codegen scans of the shard per ingest — linear in the shard,
     the O(shard) contract this module exists for)."""
-    root = cache_root(cache)
-    old_fp, version, new_fp, committed, current = _commit_pinned(
-        spark, table_dir, shard, DOC_FP_COLS
+    return _ingest(
+        spark, table_dir, shard, artifacts.DOC_COLS,
+        {f: _DOC_FAMILIES[f] for f in families}, cache,
     )
-    stats: dict = {"version": version, "fingerprint": new_fp}
-    _maintain_doc_families(
-        committed, current, old_fp, new_fp, root, families, stats
-    )
-    return stats
-
-
-def _maintain_doc_families(
-    committed: DataFrame,
-    current: DataFrame,
-    old_fp: tuple[int, int] | None,
-    new_fp: tuple[int, int] | None,
-    root: str,
-    families: tuple[str, ...],
-    stats: dict,
-) -> None:
-    """Advance-or-build each document artifact family — the body of
-    :func:`ingest_documents`. (A fused-tokenize variant that shared
-    one persisted token walk across the families was prototyped in
-    r11, measured 2-5.5x slower at sf10, and reverted — see the
-    ``ingest_documents`` docstring and
-    ``benchmarks/scale_r11_summary.json`` ``doc_ingest_fuse_ab``.)"""
-    if "shingle" in families:
-        _advance_or_build(
-            lambda: dedup.advance_shingle_artifact(
-                committed, old_fp, new_fp, root
-            )
-            if old_fp
-            else None,
-            lambda: dedup.shingle_rows(
-                current, 2, cache=root, fingerprint=new_fp
-            ),
-            "shingle",
-            stats,
-        )
-    if "minhash" in families:
-        _advance_or_build(
-            lambda: dedup.advance_minhash_artifact(
-                committed, old_fp, new_fp, root
-            )
-            if old_fp
-            else None,
-            lambda: dedup.minhash_signatures(
-                current, cache=root, fingerprint=new_fp
-            ),
-            "minhash",
-            stats,
-        )
-    if "simhash" in families:
-        _advance_or_build(
-            lambda: dedup.advance_simhash_artifact(
-                committed, old_fp, new_fp, root, SIMHASH_BITS
-            )
-            if old_fp
-            else None,
-            lambda: dedup.simhash(
-                current, SIMHASH_BITS, cache=root, fingerprint=new_fp
-            ),
-            "simhash",
-            stats,
-        )
-    if "winnow" in families:
-        _advance_or_build(
-            lambda: textops.advance_winnow_artifact(
-                committed, old_fp, new_fp, root
-            )
-            if old_fp
-            else None,
-            lambda: textops.cached_winnow_fps(
-                current, root=root, fingerprint=new_fp
-            ),
-            "winnow",
-            stats,
-        )
 
 
 def ingest_embeddings(
@@ -300,24 +272,9 @@ def ingest_embeddings(
     carries the widest stored plane width forward (prefix-stable
     planes), so every config the old artifact served, the new one
     serves too."""
-    root = cache_root(cache)
-    old_fp, version, new_fp, committed, current = _commit_pinned(
-        spark, table_dir, shard, EMB_FP_COLS
+    return _ingest(
+        spark, table_dir, shard, artifacts.EMB_COLS, _EMB_FAMILIES, cache
     )
-    stats: dict = {"version": version, "fingerprint": new_fp}
-    _advance_or_build(
-        lambda: similarity.advance_band_artifact(
-            committed, old_fp, new_fp, root
-        )
-        if old_fp
-        else None,
-        lambda: similarity.materialize_band_artifact(
-            current, root, fingerprint=new_fp
-        ),
-        "band",
-        stats,
-    )
-    return stats
 
 
 def ingest_transactions(
@@ -337,61 +294,9 @@ def ingest_transactions(
     family has NO such caveat (sum/count are decomposable), and is
     skipped when the shard lacks the store/cents columns (a
     keys-only corpus still maintains co)."""
-    root = cache_root(cache)
-    old_fp, version, new_fp, committed, current = _commit_pinned(
-        spark, table_dir, shard, TXN_FP_COLS
+    return _ingest(
+        spark, table_dir, shard, artifacts.TXN_COLS, _TXN_FAMILIES, cache
     )
-    stats: dict = {"version": version, "fingerprint": new_fp}
-    _advance_or_build(
-        lambda: joins.advance_co_artifact(committed, old_fp, new_fp, root)
-        if old_fp
-        else None,
-        lambda: joins.cached_co_pair_daily(
-            current, cache=root, fingerprint=new_fp
-        ),
-        "co_pair_daily",
-        stats,
-    )
-    # column gates inspect the CURRENT corpus head, not just the
-    # incoming shard (ADVICE r12): a full-column shard appended to a
-    # keys-only corpus must not trigger a build over rows missing the
-    # metric columns. tablelog commits share one table schema, so
-    # head columns == shard columns in practice — the distinction
-    # matters only for schema-evolved tables.
-    cols = set(committed.columns) & set(current.columns)
-    if _DAILY_COLS.issubset(cols):
-        _advance_or_build(
-            lambda: history.advance_daily_artifact(
-                committed, old_fp, new_fp, root
-            )
-            if old_fp
-            else None,
-            lambda: history.cached_store_daily_metrics(
-                current, cache=root, fingerprint=new_fp
-            ),
-            "store_daily",
-            stats,
-        )
-    else:
-        stats["store_daily"] = "skipped (shard lacks store/cents columns)"
-    if (_DAILY_COLS | {"item_sku"}).issubset(cols):
-        _advance_or_build(
-            lambda: metrics.advance_product_day_artifact(
-                committed, old_fp, new_fp, root
-            )
-            if old_fp
-            else None,
-            lambda: metrics.cached_product_day_rollup(
-                current, cache=root, fingerprint=new_fp
-            ),
-            "product_daily",
-            stats,
-        )
-    else:
-        stats["product_daily"] = (
-            "skipped (shard lacks store/sku/cents columns)"
-        )
-    return stats
 
 
 def snapshot_documents(
@@ -399,7 +304,7 @@ def snapshot_documents(
 ) -> tuple[DataFrame, tuple[int, int] | None, int]:
     """(rows, ledger fingerprint, version) for one pinned head of a
     maintained document corpus."""
-    return tablelog.read_snapshot(spark, table_dir, DOC_FP_COLS)
+    return tablelog.read_snapshot(spark, table_dir, artifacts.DOC_COLS)
 
 
 def snapshot_embeddings(
@@ -407,7 +312,7 @@ def snapshot_embeddings(
 ) -> tuple[DataFrame, tuple[int, int] | None, int]:
     """(rows, ledger fingerprint, version) for one pinned head of a
     maintained embedding corpus."""
-    return tablelog.read_snapshot(spark, table_dir, EMB_FP_COLS)
+    return tablelog.read_snapshot(spark, table_dir, artifacts.EMB_COLS)
 
 
 def snapshot_transactions(
@@ -415,7 +320,7 @@ def snapshot_transactions(
 ) -> tuple[DataFrame, tuple[int, int] | None, int]:
     """(rows, ledger fingerprint, version) for one pinned head of a
     maintained transaction corpus."""
-    return tablelog.read_snapshot(spark, table_dir, TXN_FP_COLS)
+    return tablelog.read_snapshot(spark, table_dir, artifacts.TXN_COLS)
 
 
 def copurchase_range_topk(
@@ -512,11 +417,20 @@ def store_daily(
     window/insight/export consumer shares. Falls back to the inline
     aggregation only when the artifact is environmentally unavailable
     (never silently stale: the key is the ledger fingerprint)."""
+    txns, daily = _maintained(history.STORE_DAILY, spark, table_dir, cache)
+    if daily is None:
+        return history.store_daily_cents(txns)
+    return daily.select("store_id", "sale_date", "sales_c", "txn_count")
+
+
+def _maintained(
+    kind: artifacts.Kind, spark: SparkSession, table_dir: str, cache
+) -> tuple[DataFrame, DataFrame | None]:
+    """(one pinned head of a maintained transaction corpus, ``kind``'s
+    ledger-keyed artifact for it — None when environmentally
+    unavailable, never silently stale)."""
     txns, fp, _ = snapshot_transactions(spark, table_dir)
-    daily = history.cached_store_daily_cents(
-        txns, cache=_query_cache(cache), fingerprint=fp
-    )
-    return daily if daily is not None else history.store_daily_cents(txns)
+    return txns, kind.lookup(txns, _query_cache(cache), fp)
 
 
 def export_anomalies(
@@ -559,16 +473,12 @@ def store_daily_metrics(
 ) -> DataFrame:
     """The WIDE store-day daily aggregate of a maintained transaction
     corpus (all four decomposable sums), answered from the same
-    ledger-keyed ``sdc_v2`` artifact as :func:`store_daily`."""
-    txns, fp, _ = snapshot_transactions(spark, table_dir)
-    daily = history.cached_store_daily_metrics(
-        txns, cache=_query_cache(cache), fingerprint=fp
-    )
-    return (
-        daily
-        if daily is not None
-        else history.store_daily_metrics_cents(txns)
-    )
+    ledger-keyed ``history.STORE_DAILY`` artifact as
+    :func:`store_daily`."""
+    txns, daily = _maintained(history.STORE_DAILY, spark, table_dir, cache)
+    if daily is None:
+        return history.store_daily_metrics_cents(txns)
+    return daily
 
 
 def export_store_summaries(
@@ -580,7 +490,8 @@ def export_store_summaries(
 ) -> DataFrame:
     """x1 (flattened store_summaries dataset) over a maintained
     transaction corpus: the serving shape is a per-row function of
-    the wide daily sums, so it reads the ``sdc_v2`` artifact instead
+    the wide daily sums, so it reads the ``history.STORE_DAILY`` artifact
+    instead
     of re-aggregating (range-pruned) facts — r13, completing the MV
     consumption VERDICT r12 task 6 asked for (x3/x4 shipped r12)."""
     return export._export_store_summaries_from_daily(
@@ -598,12 +509,12 @@ def export_top_products(
 ) -> DataFrame:
     """x2 (flattened top-K products dataset) over a maintained
     transaction corpus: ranks are computed per (store, day) group
-    over the ledger-keyed ``psd_v1`` per-SKU partial — exact, because
-    the rank input is the same re-aggregated sums the inline rollup
-    produces, and the range filter lands on a group key."""
-    txns, fp, _ = snapshot_transactions(spark, table_dir)
-    rollup = metrics.cached_product_day_rollup(
-        txns, cache=_query_cache(cache), fingerprint=fp
+    over the ledger-keyed ``metrics.PRODUCT_DAILY`` per-SKU partial —
+    exact, because the rank input is the same re-aggregated sums the
+    inline rollup produces, and the range filter lands on a group
+    key."""
+    txns, rollup = _maintained(
+        metrics.PRODUCT_DAILY, spark, table_dir, cache
     )
     if rollup is None:
         rollup = metrics.product_day_rollup(txns)

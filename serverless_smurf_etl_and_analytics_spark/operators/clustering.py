@@ -49,6 +49,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from . import artifacts
 from .similarity import SCALE
 
 _PARTIAL_SCHEMA = StructType(
@@ -187,18 +188,6 @@ def _collect_fixed(emb: DataFrame):
     return ids, to_fixed(pd.Series([r["embedding"] for r in rows]))
 
 
-def _model_paths_ok(*paths: str) -> bool:
-    import os
-
-    from .artifacts import touch
-
-    if all(os.path.exists(p) for p in paths):
-        for p in paths:
-            touch(p)
-        return True
-    return False
-
-
 def kmeans_train(
     emb: DataFrame,
     k: int = 16,
@@ -261,18 +250,82 @@ def pq_train_encode(
     follow the c1/IVF convention: the first ksub vec_ids, sliced per
     subspace.
 
-    Deterministic => (r8) the trained model persists as a
-    fingerprint-keyed MODEL artifact — three parquet dirs (codes /
-    codebooks / per-iteration costs) under one ``pq_v2_`` key — and
-    c1/pq1-pq4/ivfpq1 cold sessions read the model instead of
-    re-running ``n_iter`` corpus passes; pq3's residual path composes
-    (its input frame is fingerprinted like any corpus). Gate,
-    staleness and fallback rules match the dedup artifacts; a
-    half-written artifact self-heals (the trainer is deterministic, so
-    re-writing any missing dir reproduces identical content and
-    `atomic_write_parquet` keeps whatever already committed)."""
+    Deterministic => (r8) the trained model persists as the
+    fingerprint-keyed ``MODEL`` artifact, and c1/pq1-pq4/ivfpq1 cold
+    sessions read the model instead of re-running ``n_iter`` corpus
+    passes; pq3's residual path composes (its input frame is
+    fingerprinted like any corpus)."""
     codes_df, codebooks, _ = _train(emb, m, ksub, n_iter, cache, fingerprint)
     return codes_df, codebooks
+
+
+class _ModelKind(artifacts.Kind):
+    """The trained Lloyd model: three parquet dirs under one key
+    (codes, codebooks, per-iteration costs). A half-written model
+    self-heals: the trainer is deterministic, so re-writing any
+    missing dir reproduces identical content and
+    ``atomic_write_parquet`` keeps whatever already committed. A
+    model does not merge by shard, so it is never advanced: a grown
+    corpus trains under its new key."""
+
+    def fetch(self, emb, root, fp, train, m, ksub, n_iter):
+        import os
+
+        spark = emb.sparkSession
+        base = os.path.join(
+            root, self.dirname(fp, m=m, ksub=ksub, n_iter=n_iter)
+        )
+        paths = (base + "_codes", base + "_cb", base + "_cost")
+        if not all(os.path.exists(p) for p in paths):
+            codes_df, cbs, costs = train()
+            artifacts.atomic_write_parquet(codes_df, paths[0])
+            artifacts.atomic_write_parquet(
+                spark.createDataFrame(
+                    [
+                        (s, c, [int(x) for x in vec])
+                        for s, book in enumerate(cbs)
+                        for c, vec in enumerate(book)
+                    ],
+                    "subspace long, cluster_id long, c array<long>",
+                ),
+                paths[1],
+            )
+            artifacts.atomic_write_parquet(
+                spark.createDataFrame(
+                    [(i, float(c)) for i, c in enumerate(costs)],
+                    "iter long, cost double",
+                ),
+                paths[2],
+            )
+        for p in paths:
+            artifacts.touch(p)
+        rows = sorted(
+            spark.read.parquet(paths[1]).collect(),
+            key=lambda r: (r["subspace"], r["cluster_id"]),
+        )
+        cbs = [
+            [list(r["c"]) for r in rows if r["subspace"] == s]
+            for s in range(m)
+        ]
+        costs = [
+            r["cost"]
+            for r in sorted(
+                spark.read.parquet(paths[2]).collect(),
+                key=lambda r: r["iter"],
+            )
+        ]
+        codes_df = spark.read.parquet(paths[0]).select(
+            "vec_id", "codes", "qerr"
+        )
+        return codes_df, cbs, costs
+
+
+MODEL = _ModelKind(
+    "pq_v2_n{n}_h{h}_m{m}_k{ksub}_i{n_iter}",
+    _MODEL_ARTIFACT_MIN,
+    artifacts.EMB_COLS,
+    None,
+)
 
 
 def _train(
@@ -283,79 +336,28 @@ def _train(
     cache: str | None,
     fingerprint: tuple[int, int] | None,
 ) -> tuple[DataFrame, list, list[float]]:
-    """:func:`_lloyd_train` behind the model artifact: at or above
+    """:func:`_lloyd_train` behind the ``MODEL`` artifact: at or above
     ``_MODEL_ARTIFACT_MIN`` vectors (or under an explicit ``cache``
-    root) read the model, writing it first if missing; any artifact
-    error falls back to training."""
-    n_known = fingerprint[0] if fingerprint else None
-    if cache is not None:
-        try:
-            if n_known is None and cache == "auto":
-                from .memo import memoized_count
+    root) read the model, training and writing it first if missing
+    (``artifacts.Kind.lookup``). Training runs at most once: when the
+    artifact write or read-back fails after training, the fallback
+    returns the model already trained."""
+    trained: list = []
 
-                n_known = memoized_count(emb)
-            if cache != "auto" or n_known >= _MODEL_ARTIFACT_MIN:
-                import os
+    def train():
+        if not trained:
+            trained.append(
+                _lloyd_train(
+                    emb, m, ksub, n_iter,
+                    n=fingerprint[0] if fingerprint else None,
+                )
+            )
+        return trained[0]
 
-                from .artifacts import atomic_write_parquet, cache_root
-                from .memo import plan_scalar
-                from .similarity import corpus_fingerprint
-
-                n, h = fingerprint or plan_scalar(
-                    emb, "emb_fp", lambda: corpus_fingerprint(emb)
-                )
-                base = os.path.join(
-                    cache_root(None if cache == "auto" else cache),
-                    f"pq_v2_n{n}_h{h}_m{m}_k{ksub}_i{n_iter}",
-                )
-                spark = emb.sparkSession
-                paths = (base + "_codes", base + "_cb", base + "_cost")
-                if not _model_paths_ok(*paths):
-                    codes_df, cbs, costs = _lloyd_train(
-                        emb, m, ksub, n_iter, n=n_known
-                    )
-                    atomic_write_parquet(codes_df, paths[0])
-                    atomic_write_parquet(
-                        spark.createDataFrame(
-                            [
-                                (s, c, [int(x) for x in vec])
-                                for s, book in enumerate(cbs)
-                                for c, vec in enumerate(book)
-                            ],
-                            "subspace long, cluster_id long,"
-                            " c array<long>",
-                        ),
-                        paths[1],
-                    )
-                    atomic_write_parquet(
-                        spark.createDataFrame(
-                            [(i, float(c)) for i, c in enumerate(costs)],
-                            "iter long, cost double",
-                        ),
-                        paths[2],
-                    )
-                rows = sorted(
-                    spark.read.parquet(paths[1]).collect(),
-                    key=lambda r: (r["subspace"], r["cluster_id"]),
-                )
-                cbs = [
-                    [list(r["c"]) for r in rows if r["subspace"] == s]
-                    for s in range(m)
-                ]
-                costs = [
-                    r["cost"]
-                    for r in sorted(
-                        spark.read.parquet(paths[2]).collect(),
-                        key=lambda r: r["iter"],
-                    )
-                ]
-                codes_df = spark.read.parquet(paths[0]).select(
-                    "vec_id", "codes", "qerr"
-                )
-                return codes_df, cbs, costs
-        except Exception:
-            pass
-    return _lloyd_train(emb, m, ksub, n_iter, n=n_known)
+    model = MODEL.lookup(
+        emb, cache, fingerprint, train=train, m=m, ksub=ksub, n_iter=n_iter
+    )
+    return model if model is not None else train()
 
 
 def _lloyd_train(
@@ -773,9 +775,14 @@ def pq_train_encode_residual(
     # chain (r13: ~5 redundant upstream recomputes inside pq3's
     # construction). Cached, the chain runs once (guide §5: reused
     # and expensive to recompute).
+    # Released once training has consumed it: the driver tier's codes
+    # are a local frame, and the distributed tier's lazy encode pass
+    # re-derives the deterministic chain rather than pin the cache.
     from pyspark.storagelevel import StorageLevel
 
     res_df = joined.mapInPandas(residuals, schema=res_schema).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    return pq_train_encode(res_df, m, ksub, n_iter)
+    codes_df, codebooks = pq_train_encode(res_df, m, ksub, n_iter)
+    res_df.unpersist()
+    return codes_df, codebooks

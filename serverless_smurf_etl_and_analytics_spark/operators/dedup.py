@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from .artifacts import DOC_COLS, Kind
 from .textops import token_rows
 
 N_MINHASH = 8
@@ -59,59 +60,40 @@ BROADCAST_MAX_BAND_ROWS = 2_000_000
 _DOC_ARTIFACT_MIN = 10_000
 
 
-def _doc_artifact(
-    docs: DataFrame,
-    cache: str | None,
-    key_fmt: str,
-    build,
-    select_cols: list[str],
-    fingerprint: tuple[int, int] | None = None,
-) -> DataFrame | None:
-    """Shared find-or-build for per-doc pure-stage artifacts: returns
-    the artifact-backed frame, or None when caching is disabled/gated
-    off (caller falls back to its inline plan). ``key_fmt`` formats
-    (n_docs, content_hash) into the dirname; ``build`` is a thunk
-    producing the full table for the corpus.
-
-    ``fingerprint``: a precomputed ``(n_docs, content_hash)`` pair —
-    normally ``tablelog.ledger_fingerprint(table_dir, ["doc_id",
-    "text"])`` from a maintained corpus's commit log. When given, the
-    gate count AND the cache key come from it, so a cache HIT runs
-    zero corpus-scan jobs before the artifact read (at 100 TB the
-    per-session fingerprint scan is otherwise the dominant cost of a
-    cached cold query)."""
-    import os
-
-    from .artifacts import atomic_write_parquet, cache_root
-    from .textops import text_corpus_fingerprint
-
-    if cache is None:
-        return None
-    from .memo import memoized_count, plan_scalar
-
-    # both gate scalars are memoized per (application, plan) — every
-    # shingle/simhash-gated query paid a corpus-scan job (or two) at
-    # each plan build for values invariant within the session
-    # (operators/memo.py, r14)
-    n_docs = fingerprint[0] if fingerprint else memoized_count(docs)
-    if cache == "auto" and n_docs < _DOC_ARTIFACT_MIN:
-        return None
-    # the artifact is an OPTIMIZATION: if the cache root is unwritable,
-    # the disk is full, or a read-back fails at plan time, fall back to
-    # the inline plan rather than failing the query (atomic writes mean
-    # a half-built artifact is never visible, so the only errors here
-    # are environmental)
-    try:
-        root = cache_root(None if cache == "auto" else cache)
-        n, h = fingerprint or plan_scalar(
-            docs, "text_fp", lambda: text_corpus_fingerprint(docs)
-        )
-        path = atomic_write_parquet(
-            build(), os.path.join(root, key_fmt.format(n=n, h=h))
-        )
-        return docs.sparkSession.read.parquet(path).select(*select_cols)
-    except Exception:
-        return None
+# the per-doc pure stages as artifact kinds (``artifacts.Kind``): one
+# row per doc (or per doc and shingle), so shards merge by plain union
+SHINGLE = Kind(
+    "sh_v1_n{n}_h{h}_g{g}",
+    _DOC_ARTIFACT_MIN,
+    DOC_COLS,
+    lambda docs, g: _shingle_rows_inline(docs, g),
+    read=lambda frame, g: frame.select("doc_id", "sh"),
+)
+MINHASH = Kind(
+    f"mh_v1_n{{n}}_h{{h}}_g2_k{{k}}b{BAND_SIZE}",
+    _DOC_ARTIFACT_MIN,
+    DOC_COLS,
+    lambda docs, k: _minhash_signatures_from(
+        docs, _shingle_rows_inline(docs, 2), k
+    ),
+    read=lambda frame, k: frame.select(
+        "doc_id",
+        *[f"mh_{i}" for i in range(k)],
+        *[f"band_{b}" for b in range(k // BAND_SIZE)],
+    ),
+    # a full build CHAINS on the shingle artifact, so a cold miss
+    # never repeats the tokenize stage
+    build=lambda docs, root, fp, k: _minhash_signatures_from(
+        docs, shingle_rows(docs, 2, root, fp), k
+    ),
+)
+SIMHASH = Kind(
+    "simh_v1_n{n}_h{h}_b{bits}",
+    _DOC_ARTIFACT_MIN,
+    DOC_COLS,
+    lambda docs, bits: _simhash_inline(docs, bits),
+    read=lambda frame, bits: frame.select("doc_id", "simhash", "block"),
+)
 
 
 def shingle_rows(
@@ -128,72 +110,13 @@ def shingle_rows(
     fingerprint-keyed corpus artifact exactly like the LSH band bits
     and winnow fingerprints: ``cache="auto"`` reads the artifact at
     ``_DOC_ARTIFACT_MIN``+ docs (building on first contact), shards
-    merge by plain union (:func:`append_shingle_artifact`, law-tested),
+    merge by plain union (``SHINGLE.append``, law-tested),
     and every consumer — MinHash signatures, Jaccard verify sets, d8
     decontamination, d11 containment — shares ONE artifact per (corpus,
     n). Below the gate (all driver scales, the pinned bench) the plan
     is byte-identical to the r7 inline form."""
-    backed = _doc_artifact(
-        docs,
-        cache,
-        f"sh_v1_n{{n}}_h{{h}}_g{n}",
-        lambda: _shingle_rows_inline(docs, n),
-        ["doc_id", "sh"],
-        fingerprint,
-    )
+    backed = SHINGLE.lookup(docs, cache, fingerprint, g=n)
     return backed if backed is not None else _shingle_rows_inline(docs, n)
-
-
-def materialize_shingle_artifact(
-    docs: DataFrame, root: str | None = None, n: int = 2
-) -> str:
-    """Pipeline-managed build of the shingle artifact; see
-    :func:`shingle_rows`. Returns the artifact path."""
-    import os
-
-    from .artifacts import atomic_write_parquet, cache_root
-    from .textops import text_corpus_fingerprint
-
-    nn, h = text_corpus_fingerprint(docs)
-    return atomic_write_parquet(
-        _shingle_rows_inline(docs, n),
-        os.path.join(cache_root(root), f"sh_v1_n{nn}_h{h}_g{n}"),
-    )
-
-
-def advance_shingle_artifact(
-    new_docs: DataFrame,
-    old_fp: tuple[int, int],
-    new_fp: tuple[int, int],
-    root: str | None = None,
-    n: int = 2,
-) -> str | None:
-    """Advance the fingerprint-keyed shingle artifact from a corpus at
-    ``old_fp`` to the grown corpus at ``new_fp`` in O(shard): the
-    ingest pipeline calls this right after committing a shard (both
-    pairs come free from ``tablelog.ledger_fingerprint`` before/after
-    the commit), and the next session's find-or-build HITS the new
-    key instead of re-shingling the whole corpus. Old artifact stays
-    immutable (hard-linked files, not moved). None = no old artifact
-    to advance (fall back to a full build or let first contact do
-    it)."""
-    from .artifacts import advance_artifact
-
-    return advance_artifact(
-        root,
-        f"sh_v1_n{old_fp[0]}_h{old_fp[1]}_g{n}",
-        f"sh_v1_n{new_fp[0]}_h{new_fp[1]}_g{n}",
-        lambda p: append_shingle_artifact(new_docs, p, n),
-    )
-
-
-def append_shingle_artifact(
-    new_docs: DataFrame, path: str, n: int = 2
-) -> None:
-    """Merge a NEW document shard into a pipeline-managed shingle
-    artifact (per-doc pure function => plain union; fingerprint-keyed
-    auto-cache dirs are immutable — a grown corpus gets a new key)."""
-    _shingle_rows_inline(new_docs, n).write.mode("append").parquet(path)
 
 
 def _shingle_rows_inline(docs: DataFrame, n: int) -> DataFrame:
@@ -274,54 +197,12 @@ def minhash_signatures(
     artifact: a cold miss builds signatures from the cached shingle
     rows, so the tokenize stage is never repeated either way. Same
     gate/merge/staleness rules as :func:`shingle_rows`."""
-    backed = _doc_artifact(
-        docs,
-        cache,
-        f"mh_v1_n{{n}}_h{{h}}_g2_k{n_hashes}b{BAND_SIZE}",
-        lambda: _minhash_signatures_from(
-            docs, shingle_rows(docs, 2, cache, fingerprint), n_hashes
-        ),
-        ["doc_id"]
-        + [f"mh_{i}" for i in range(n_hashes)]
-        + [f"band_{b}" for b in range(n_hashes // BAND_SIZE)],
-        fingerprint,
-    )
+    backed = MINHASH.lookup(docs, cache, fingerprint, k=n_hashes)
     if backed is not None:
         return backed
     return _minhash_signatures_from(
         docs, shingle_rows(docs, 2, cache, fingerprint), n_hashes
     )
-
-
-def advance_minhash_artifact(
-    new_docs: DataFrame,
-    old_fp: tuple[int, int],
-    new_fp: tuple[int, int],
-    root: str | None = None,
-    n_hashes: int = N_MINHASH,
-) -> str | None:
-    """O(shard) key advance for the MinHash signature artifact — see
-    :func:`advance_shingle_artifact`."""
-    from .artifacts import advance_artifact
-
-    key = "mh_v1_n{n}_h{h}_g2_k" + f"{n_hashes}b{BAND_SIZE}"
-    return advance_artifact(
-        root,
-        key.format(n=old_fp[0], h=old_fp[1]),
-        key.format(n=new_fp[0], h=new_fp[1]),
-        lambda p: append_minhash_artifact(new_docs, p, n_hashes),
-    )
-
-
-def append_minhash_artifact(
-    new_docs: DataFrame, path: str, n_hashes: int = N_MINHASH
-) -> None:
-    """Merge a NEW document shard's signature rows into a
-    pipeline-managed signature artifact (per-doc rows => plain union).
-    Computes shingles only for the new shard."""
-    _minhash_signatures_from(
-        new_docs, _shingle_rows_inline(new_docs, 2), n_hashes
-    ).write.mode("append").parquet(path)
 
 
 def _minhash_signatures_from(
@@ -533,44 +414,10 @@ def simhash(
     fingerprint-keyed corpus artifact per ``bits`` tier — both d6
     packing tiers read it instead of re-running the tokenize + vote
     aggregation cold. Same gate/merge/staleness rules as
-    :func:`shingle_rows`; :func:`append_simhash_artifact` merges new
-    shards by union."""
-    backed = _doc_artifact(
-        docs,
-        cache,
-        f"simh_v1_n{{n}}_h{{h}}_b{bits}",
-        lambda: _simhash_inline(docs, bits),
-        ["doc_id", "simhash", "block"],
-        fingerprint,
-    )
+    :func:`shingle_rows`; ``SIMHASH.append`` merges new shards by
+    union."""
+    backed = SIMHASH.lookup(docs, cache, fingerprint, bits=bits)
     return backed if backed is not None else _simhash_inline(docs, bits)
-
-
-def advance_simhash_artifact(
-    new_docs: DataFrame,
-    old_fp: tuple[int, int],
-    new_fp: tuple[int, int],
-    root: str | None = None,
-    bits: int = 32,
-) -> str | None:
-    """O(shard) key advance for the SimHash signature artifact — see
-    :func:`advance_shingle_artifact`."""
-    from .artifacts import advance_artifact
-
-    return advance_artifact(
-        root,
-        f"simh_v1_n{old_fp[0]}_h{old_fp[1]}_b{bits}",
-        f"simh_v1_n{new_fp[0]}_h{new_fp[1]}_b{bits}",
-        lambda p: append_simhash_artifact(new_docs, p, bits),
-    )
-
-
-def append_simhash_artifact(
-    new_docs: DataFrame, path: str, bits: int = 32
-) -> None:
-    """Merge a NEW document shard's SimHash rows into a
-    pipeline-managed signature artifact (per-doc rows => union)."""
-    _simhash_inline(new_docs, bits).write.mode("append").parquet(path)
 
 
 def _simhash_inline(docs: DataFrame, bits: int) -> DataFrame:

@@ -73,8 +73,8 @@ def _export_store_summaries_from_daily(
     wide_daily: DataFrame, start: str, end: str
 ) -> DataFrame:
     """x1's serving shape off the WIDE store-day daily partial
-    (``history.store_daily_metrics_cents`` / the maintained ``sdc_v2``
-    artifact) — the same integer-cents math ``metrics.
+    (``history.store_daily_metrics_cents`` / the maintained
+    ``history.STORE_DAILY`` artifact) — the same integer-cents math ``metrics.
     store_day_metrics`` applies to its own aggregation, so the result
     equals :func:`export_store_summaries` exactly (sale_date is a
     group key, so filtering the full-history daily table to the range

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .artifacts import TXN_COLS, Kind
+
 
 def store_daily_cents(txns: DataFrame) -> DataFrame:
     """Per-(store, day) gross sales in integer cents + line count —
@@ -63,7 +65,7 @@ def store_daily_metrics_cents(txns: DataFrame) -> DataFrame:
     the export/insight consumers need — gross cents, discount cents,
     line count, item count. Each column is a plain sum/count, so the
     union-append advance stays exact under ANY shard split (the same
-    decomposability claim :func:`cached_store_daily_cents` carries;
+    decomposability claim the ``STORE_DAILY`` artifact carries;
     countDistinct(transaction_id) is deliberately NOT here — it does
     not decompose and no artifact consumer needs it). x1's serving
     shape (``export-to-quicksight/lambda_function.py:180-214``) is a
@@ -87,101 +89,30 @@ def store_daily_metrics_cents(txns: DataFrame) -> DataFrame:
 _DAILY_ARTIFACT_MIN = 1_000_000
 
 
-def cached_store_daily_cents(
-    txns: DataFrame,
-    cache: str | None = "auto",
-    fingerprint: tuple[int, int] | None = None,
-) -> DataFrame | None:
-    """find-or-build the store-day daily artifact and return it in
-    :func:`store_daily_cents`'s shape, or None when gated off /
-    disabled / environmentally failed (caller falls back to the
-    inline aggregation).
-
-    The stored artifact is the WIDE partial
-    (:func:`store_daily_metrics_cents`, key ``sdc_v2_n{n}_h{h}`` —
-    r13 widened from the v1 two-sum form so x1's item/discount sums
-    ride the same family; a v1-keyed corpus simply misses once and
-    rebuilds wide). The read-back RE-AGGREGATES by (store_id,
-    sale_date): ledger advances (:func:`advance_daily_artifact`)
-    append the new shard's own daily partial, so an advanced artifact
-    may hold several partial rows per key. Every column is a sum, so
-    the union-append is exact for ANY split of the fact rows into
-    shards — no complete-group caveat at all, unlike
-    ``co_pair_daily``'s complete-basket requirement. The re-agg runs
-    over |stores|x|days| rows (tiny at every scale), never the
-    facts."""
-    wide = cached_store_daily_metrics(txns, cache, fingerprint)
-    if wide is None:
-        return None
-    return wide.select("store_id", "sale_date", "sales_c", "txn_count")
-
-
-def cached_store_daily_metrics(
-    txns: DataFrame,
-    cache: str | None = "auto",
-    fingerprint: tuple[int, int] | None = None,
-) -> DataFrame | None:
-    """The wide form of :func:`cached_store_daily_cents`: the same
-    ``sdc_v2`` artifact, re-aggregated and returned with all four
-    decomposable sums — the input x1's serving shape derives from."""
-    import os
-
-    from .artifacts import atomic_write_parquet, cache_root
-    from .joins import txn_corpus_fingerprint
-
-    if cache is None:
-        return None
-    n_rows = fingerprint[0] if fingerprint else txns.count()
-    if cache == "auto" and n_rows < _DAILY_ARTIFACT_MIN:
-        return None
-    try:
-        root = cache_root(None if cache == "auto" else cache)
-        n, h = fingerprint or txn_corpus_fingerprint(txns)
-        path = atomic_write_parquet(
-            store_daily_metrics_cents(txns),
-            os.path.join(root, f"sdc_v2_n{n}_h{h}"),
-        )
-        return (
-            txns.sparkSession.read.parquet(path)
-            .groupBy("store_id", "sale_date")
-            .agg(
-                F.sum("sales_c").alias("sales_c"),
-                F.sum("disc_c").alias("disc_c"),
-                F.sum("txn_count").alias("txn_count"),
-                F.sum("item_count").alias("item_count"),
-            )
-        )
-    except AssertionError:
-        # the test suite's scan/build ban hooks raise AssertionError
-        # from inside this try (ADVICE r12): a banned lookup must fail
-        # the test, never degrade to the silent inline fallback
-        raise
-    except Exception:
-        return None
-
-
-def advance_daily_artifact(
-    new_txns: DataFrame,
-    old_fp: tuple[int, int],
-    new_fp: tuple[int, int],
-    root: str | None = None,
-) -> str | None:
-    """O(shard) key advance for the daily-aggregate artifact — see
-    ``dedup.advance_shingle_artifact``. Appends the SHARD's own wide
-    daily partial under the grown corpus's key; consumers
-    re-aggregate (:func:`cached_store_daily_cents` /
-    :func:`cached_store_daily_metrics`), and because every column is
-    a sum the result is exact under any shard split."""
-    from .artifacts import advance_artifact
-
-    return advance_artifact(
-        root,
-        f"sdc_v2_n{old_fp[0]}_h{old_fp[1]}",
-        f"sdc_v2_n{new_fp[0]}_h{new_fp[1]}",
-        lambda p: store_daily_metrics_cents(new_txns)
-        .write.mode("append")
-        .parquet(p),
-    )
+# The store-day daily artifact kind (``artifacts.Kind``): it stores the
+# WIDE partial (:func:`store_daily_metrics_cents` — r13 widened it from
+# the v1 two-sum form so x1's item/discount sums ride the same family;
+# a v1-keyed corpus simply misses once and rebuilds wide). The read-back
+# RE-AGGREGATES by (store_id, sale_date): ledger advances append the
+# new shard's own daily partial, so an advanced artifact may hold
+# several partial rows per key. Every column is a sum, so the
+# union-append is exact for ANY split of the fact rows into shards —
+# no complete-group caveat at all, unlike ``joins.co_pair_daily``'s
+# complete-basket requirement. The re-agg runs over |stores|x|days|
+# rows (tiny at every scale), never the facts. Consumers that need
+# :func:`store_daily_cents`'s shape select its two sums.
+STORE_DAILY = Kind(
+    "sdc_v2_n{n}_h{h}",
+    _DAILY_ARTIFACT_MIN,
+    TXN_COLS,
+    store_daily_metrics_cents,
+    read=lambda frame: frame.groupBy("store_id", "sale_date").agg(
+        F.sum("sales_c").alias("sales_c"),
+        F.sum("disc_c").alias("disc_c"),
+        F.sum("txn_count").alias("txn_count"),
+        F.sum("item_count").alias("item_count"),
+    ),
+)
 
 
 def _trailing(df: DataFrame, lo: int, hi: int, prefix: str) -> DataFrame:

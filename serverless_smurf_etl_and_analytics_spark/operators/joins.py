@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from .. import tables
+from .artifacts import TXN_COLS, Kind
 from .history import store_daily_cents
 
 
@@ -402,85 +403,23 @@ def co_merge_topk(daily: DataFrame, k: int = 3) -> DataFrame:
 _CO_ARTIFACT_MIN = 1_000_000
 
 
-def txn_corpus_fingerprint(txns: DataFrame) -> tuple[int, int]:
-    """(n_rows, order-insensitive content hash) of a transaction-line
-    corpus over the co-occurrence-relevant columns — the staleness key
-    for cached co-purchase partials; same decimal-summed xxhash64
-    scheme as ``textops.text_corpus_fingerprint``, and the same
-    ``tablelog.ledger_fingerprint(dir, ["transaction_id", "item_sku",
-    "sale_date"])`` pair a maintained pipeline reads for free."""
-    row = txns.select(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.xxhash64("transaction_id", "item_sku", "sale_date").cast(
-                "decimal(38,0)"
-            )
-        ).alias("h"),
-    ).first()
-    return int(row["n"]), int(row["h"] or 0) % (1 << 64)
-
-
-def cached_co_pair_daily(
-    txns: DataFrame,
-    cache: str | None = "auto",
-    fingerprint: tuple[int, int] | None = None,
-) -> DataFrame | None:
-    """find-or-build the co-purchase daily partial table as a
-    fingerprint-keyed corpus artifact (key ``co_v1_n{n}_h{h}``), or
-    None when gated off / disabled / environmentally failed (caller
-    falls back to the inline build). Unlike the per-doc pure stages,
-    shards here must be partitions of ORDERS (see
-    :func:`co_pair_daily`), and appended shards may repeat a
-    (order_date, sku, partner) key — every consumer re-aggregates
-    (:func:`co_merge_topk` sums co_count), so union-append stays
-    exact."""
-    import os
-
-    from .artifacts import atomic_write_parquet, cache_root
-
-    if cache is None:
-        return None
-    n_rows = fingerprint[0] if fingerprint else txns.count()
-    if cache == "auto" and n_rows < _CO_ARTIFACT_MIN:
-        return None
-    try:
-        root = cache_root(None if cache == "auto" else cache)
-        n, h = fingerprint or txn_corpus_fingerprint(txns)
-        path = atomic_write_parquet(
-            co_pair_daily(txns), os.path.join(root, f"co_v1_n{n}_h{h}")
-        )
-        return txns.sparkSession.read.parquet(path).select(
-            "order_date", "item_sku", "partner_sku", "co_count"
-        )
-    except AssertionError:
-        # test-suite scan/build ban hooks must propagate, never
-        # degrade to the silent inline fallback (ADVICE r12)
-        raise
-    except Exception:
-        return None
-
-
-def advance_co_artifact(
-    new_txns: DataFrame,
-    old_fp: tuple[int, int],
-    new_fp: tuple[int, int],
-    root: str | None = None,
-) -> str | None:
-    """O(shard) key advance for the co-purchase partial artifact —
-    see ``dedup.advance_shingle_artifact``. The shard must consist of
-    COMPLETE new baskets (co_pair_daily's order-partition caveat): a
-    late line appended to an old order changes that order's basket,
-    so its shard must instead be recomputed under a fresh key."""
-    from .artifacts import advance_artifact
-
-    return advance_artifact(
-        root,
-        f"co_v1_n{old_fp[0]}_h{old_fp[1]}",
-        f"co_v1_n{new_fp[0]}_h{new_fp[1]}",
-        lambda p: co_pair_daily(new_txns)
-        .write.mode("append")
-        .parquet(p),
-    )
+# The co-purchase daily partial table as an artifact kind
+# (``artifacts.Kind``). Unlike the per-doc pure stages, shards here
+# must be partitions of ORDERS (see :func:`co_pair_daily`: a late line
+# appended to an old order changes that order's basket, so such a
+# shard must restate under a fresh key), and appended shards may
+# repeat an (order_date, sku, partner) key — every consumer
+# re-aggregates (:func:`co_merge_topk` sums co_count), so union-append
+# stays exact.
+CO_DAILY = Kind(
+    "co_v1_n{n}_h{h}",
+    _CO_ARTIFACT_MIN,
+    TXN_COLS,
+    co_pair_daily,
+    read=lambda frame: frame.select(
+        "order_date", "item_sku", "partner_sku", "co_count"
+    ),
+)
 
 
 def co_range_topk(
@@ -499,7 +438,7 @@ def co_range_topk(
 
     At ``_CO_ARTIFACT_MIN``+ fact rows the partial table itself comes
     from the fingerprint-keyed artifact cache (built on first
-    contact, advanced per shard by :func:`advance_co_artifact`), so a
+    contact, advanced per shard by ``CO_DAILY.advance``), so a
     cold session merges persisted pair rows instead of paying the
     inline partial build — measured at sf10 (60M fact rows): inline
     composition ~40 s; artifact hit 13.0 s, of which ~10 s is the
@@ -512,7 +451,7 @@ def co_range_topk(
     whole thing against the semantic definition (co1 over exactly the
     qualifying orders, ALL their lines kept whatever date they
     ship)."""
-    daily = cached_co_pair_daily(txns, cache, fingerprint)
+    daily = CO_DAILY.lookup(txns, cache, fingerprint)
     if daily is None:
         daily = _co_daily_shared(txns)
     return co_merge_topk(

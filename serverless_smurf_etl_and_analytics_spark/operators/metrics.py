@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.money import cents, dollars
+from .artifacts import TXN_COLS, Kind
 
 
 def store_day_metrics(txns: DataFrame) -> DataFrame:
@@ -275,73 +276,26 @@ def product_day_rollup(txns: DataFrame) -> DataFrame:
 _PSD_ARTIFACT_MIN = 1_000_000
 
 
-def cached_product_day_rollup(
-    txns: DataFrame,
-    cache: str | None = "auto",
-    fingerprint: tuple[int, int] | None = None,
-) -> DataFrame | None:
-    """find-or-build :func:`product_day_partial` as a
-    fingerprint-keyed corpus artifact (key ``psd_v1_n{n}_h{h}``) and
-    return it re-aggregated in :func:`product_day_rollup`'s shape, or
-    None when gated off / disabled / environmentally failed (caller
-    falls back to the inline rollup). Feeds the x2 export (top-5 per
-    (store, day)) off the maintained corpus: ranks are computed within
-    each (store, day) group over the re-aggregated per-SKU sums, so
-    top-k off the artifact equals top-k off the facts exactly."""
-    import os
-
-    from .artifacts import atomic_write_parquet, cache_root
-    from .joins import txn_corpus_fingerprint
-
-    if cache is None:
-        return None
-    n_rows = fingerprint[0] if fingerprint else txns.count()
-    if cache == "auto" and n_rows < _PSD_ARTIFACT_MIN:
-        return None
-    try:
-        root = cache_root(None if cache == "auto" else cache)
-        n, h = fingerprint or txn_corpus_fingerprint(txns)
-        path = atomic_write_parquet(
-            product_day_partial(txns),
-            os.path.join(root, f"psd_v1_n{n}_h{h}"),
+# The product-store-day artifact kind (``artifacts.Kind``): stores
+# :func:`product_day_partial` and reads it back re-aggregated in
+# :func:`product_day_rollup`'s shape (advances append each shard's own
+# per-SKU partial). Feeds the x2 export (top-5 per (store, day)) off
+# the maintained corpus: ranks are computed within each (store, day)
+# group over the re-aggregated per-SKU sums, so top-k off the artifact
+# equals top-k off the facts exactly.
+PRODUCT_DAILY = Kind(
+    "psd_v1_n{n}_h{h}",
+    _PSD_ARTIFACT_MIN,
+    TXN_COLS,
+    product_day_partial,
+    read=lambda frame: _rollup_shape(
+        frame.groupBy("store_id", "sale_date", "item_sku").agg(
+            F.sum("units").alias("units"),
+            F.sum("sales_c").alias("sales_c"),
+            F.sum("disc_c").alias("disc_c"),
         )
-        return _rollup_shape(
-            txns.sparkSession.read.parquet(path)
-            .groupBy("store_id", "sale_date", "item_sku")
-            .agg(
-                F.sum("units").alias("units"),
-                F.sum("sales_c").alias("sales_c"),
-                F.sum("disc_c").alias("disc_c"),
-            )
-        )
-    except AssertionError:
-        # test-suite scan/build ban hooks must propagate, never
-        # degrade to the silent inline fallback (ADVICE r12)
-        raise
-    except Exception:
-        return None
-
-
-def advance_product_day_artifact(
-    new_txns: DataFrame,
-    old_fp: tuple[int, int],
-    new_fp: tuple[int, int],
-    root: str | None = None,
-) -> str | None:
-    """O(shard) key advance for the product-store-day partial — see
-    ``dedup.advance_shingle_artifact``. Appends the SHARD's own
-    per-SKU partial under the grown corpus's key; consumers
-    re-aggregate (:func:`cached_product_day_rollup`)."""
-    from .artifacts import advance_artifact
-
-    return advance_artifact(
-        root,
-        f"psd_v1_n{old_fp[0]}_h{old_fp[1]}",
-        f"psd_v1_n{new_fp[0]}_h{new_fp[1]}",
-        lambda p: product_day_partial(new_txns)
-        .write.mode("append")
-        .parquet(p),
-    )
+    ),
+)
 
 
 def top_products_per_store_day(txns: DataFrame, k: int = 5) -> DataFrame:
@@ -366,7 +320,7 @@ def top_products_from_rollup(per_sku: DataFrame, k: int = 5) -> DataFrame:
     """The rank step of :func:`top_products_per_store_day` over an
     already-aggregated per-(store, day, sku) rollup — shared by the
     inline path above and the maintained-corpus x2 export, which feeds
-    it :func:`cached_product_day_rollup`'s artifact read-back."""
+    it the ``PRODUCT_DAILY`` artifact's read-back."""
     key = F.struct(
         (-F.col("revenue_cents")).alias("neg_rev"),
         F.col("item_sku").alias("sku_tb"),

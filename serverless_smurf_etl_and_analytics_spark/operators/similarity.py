@@ -50,6 +50,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from .artifacts import EMB_COLS, Kind, cache_root, touch
+
 SCALE = 10_000_000  # fixed-point scale for float32 -> long
 DIM = 64
 N_PLANES = 8
@@ -293,35 +295,19 @@ def band_table(emb: DataFrame, n_bands: int, band_planes: int) -> DataFrame:
     (vector, band): :func:`band_bits` computed inline for this config's
     ``n_bands * band_planes`` planes, sliced and exploded by
     :func:`_explode_bands`. The recompute-every-session form; sessions
-    that maintain the corpus artifact use :func:`cached_band_bits` /
-    :func:`load_band_bits` instead and skip the matmul stage entirely."""
+    that maintain the corpus artifact read ``BAND`` instead and skip
+    the matmul stage entirely."""
     return _explode_bands(
         band_bits(emb, n_bands * band_planes), n_bands, band_planes
     )
 
 
-def corpus_fingerprint(emb: DataFrame) -> tuple[int, int]:
-    """(n_vectors, order-insensitive content hash) of an embedding
-    corpus — the staleness key for cached band artifacts. One
-    aggregate scan: count + sum(xxhash64(vec_id, embedding)), so ANY
-    added/removed/mutated vector changes the key and a stale artifact
-    can never be silently reused. The count doubles as the input to
-    :func:`adaptive_band_config` (no second job). The hash sum runs in
-    decimal(38,0) — the _edge_checksum pattern — because a long sum of
-    uniform 64-bit hashes overflows ANSI mode after a handful of rows;
-    the decimal is folded to 64 bits for the key."""
-    row = emb.select(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64("vec_id", "embedding").cast("decimal(38,0)"))
-        .alias("h"),
-    ).first()
-    return int(row["n"]), int(row["h"] or 0) % (1 << 64)
+# corpus-size floor below which "auto" band caching is skipped: the
+# fingerprint hash scan costs more than recomputing the projection on
+# dimension-table corpora (all driver-verified scales are below this;
+# the sf1/sf10 rehearsal corpora are above).
+_BAND_CACHE_MIN = 10_000
 
-
-def _band_cache_root(root: str | None) -> str:
-    from .artifacts import cache_root
-
-    return cache_root(root)
 
 
 def artifact_n_planes(path: str) -> int:
@@ -331,131 +317,66 @@ def artifact_n_planes(path: str) -> int:
     return int(os.path.basename(path).rsplit("_p", 1)[1])
 
 
-def materialize_band_artifact(
-    emb: DataFrame,
-    root: str | None = None,
-    n_planes: int | None = None,
-    fingerprint: tuple[int, int] | None = None,
-) -> str:
-    """Write the :func:`band_bits` table as an on-disk corpus artifact
-    and return its path — the across-session form of the LSH pipeline's
-    most expensive stage. At 100 TB the band table is maintained by the
-    ingest pipeline (built once per shard, appended via
-    :func:`append_band_artifact`), not recomputed per query session:
-    the r7 rehearsal measured the sf10 cold sim2 run at 62.5 s of which
-    ~34 s was rebuilding this table the warm runs already had.
+class _BandKind(Kind):
+    """The LSH band artifact: the :func:`band_bits` table at a stored
+    plane width ``n_planes``, which rides the dirname — the
+    across-session form of the LSH pipeline's most expensive stage.
+    At 100 TB it is maintained by the ingest pipeline (built once,
+    advanced per shard), not recomputed per query session: the r7
+    rehearsal measured the sf10 cold sim2 run at 62.5 s of which
+    ~34 s was rebuilding this table the warm runs already had. Any
+    config needing ``<= n_planes`` planes slices it (prefix-stable
+    md5 plane stream), so only the width search differs from a
+    one-dir kind."""
 
-    Layout: ``{root}/n{count}_h{hash}_p{n_planes}`` — the corpus
-    fingerprint keys the dirname, so lookups are exact-match and a
-    changed corpus simply misses (no invalidation protocol needed);
-    the stored plane width rides the dirname too, and any config
-    needing ``<= n_planes`` planes slices it (prefix-stable stream).
-    Default width: the corpus's adaptive config rounded up to the next
-    multiple of 32 — headroom so moderate corpus growth re-reads the
-    same artifact. The write is atomic (tmp dir + os.rename): a
-    concurrent or crashed builder can never expose a partial artifact.
-    """
-    import os
+    def _stored(self, root: str, fp: tuple[int, int]) -> list[str]:
+        """The published artifacts of ``fp`` at every stored width —
+        a builder's in-flight (or crashed) ``.tmp-`` dir is not one."""
+        import glob
+        import os
 
-    from .artifacts import atomic_write_parquet
+        pattern = os.path.join(root, self.dirname(fp, n_planes="*"))
+        return [p for p in sorted(glob.glob(pattern)) if ".tmp-" not in p]
 
-    root = _band_cache_root(root)
-    n, h = fingerprint or corpus_fingerprint(emb)
-    if n_planes is None:
-        nb, bp = adaptive_band_config(n)
-        n_planes = ((nb * bp + 31) // 32) * 32
-    return atomic_write_parquet(
-        band_bits(emb, n_planes),
-        os.path.join(root, f"band_v1_n{n}_h{h}_p{n_planes}"),
-    )
+    def fetch(self, emb, root, fp, n_bands=None, band_planes=None):
+        """A hit must cover the requested config's plane count
+        (default: the corpus's adaptive config); wider artifacts are
+        sliced, narrower ones are misses. A miss builds at that width
+        rounded up to a multiple of 32 (never below the adaptive
+        config) — headroom so moderate corpus growth re-reads the same
+        artifact."""
+        nb, bp = adaptive_band_config(fp[0])
+        need = n_bands * band_planes if n_bands else nb * bp
+        for path in self._stored(root, fp):
+            if artifact_n_planes(path) >= need:
+                touch(path)
+                return self.read(emb.sparkSession.read.parquet(path))
+        width = ((max(need, nb * bp) + 31) // 32) * 32
+        return super().fetch(emb, root, fp, n_planes=width)
 
-
-def advance_band_artifact(
-    new_emb: DataFrame,
-    old_fp: tuple[int, int],
-    new_fp: tuple[int, int],
-    root: str | None = None,
-) -> str | None:
-    """O(shard) key advance for the LSH band artifact — see
-    ``dedup.advance_shingle_artifact``. Carries the WIDEST stored
-    plane width forward (prefix-stable planes: every config the old
-    artifact served, the advanced one serves too)."""
-    import glob
-    import os
-
-    from .artifacts import advance_artifact
-
-    base = _band_cache_root(root)
-    cands = glob.glob(
-        os.path.join(base, f"band_v1_n{old_fp[0]}_h{old_fp[1]}_p*")
-    )
-    if not cands:
-        return None
-    old = max(cands, key=artifact_n_planes)
-    p = artifact_n_planes(old)
-    return advance_artifact(
-        base,
-        os.path.basename(old),
-        f"band_v1_n{new_fp[0]}_h{new_fp[1]}_p{p}",
-        lambda tmp: band_bits(new_emb, p)
-        .write.mode("append")
-        .parquet(tmp),
-    )
+    def advance(self, new_emb, old_fp, new_fp, root=None):
+        """Carries the WIDEST stored plane width forward: every config
+        the old artifact served, the advanced one serves too."""
+        widths = [
+            artifact_n_planes(p)
+            for p in self._stored(cache_root(root), old_fp)
+        ]
+        if not widths:
+            return None
+        return super().advance(
+            new_emb, old_fp, new_fp, root, n_planes=max(widths)
+        )
 
 
-def append_band_artifact(new_emb: DataFrame, path: str) -> None:
-    """Merge a NEW corpus shard into a pipeline-managed artifact: band
-    rows are a row-wise pure function of the vector, so the merge law
-    is plain union — compute bits only for the new vectors (at the
-    artifact's stored plane width) and append. Existing rows are never
-    read or rewritten; this is what keeps the 100 TB maintenance cost
-    proportional to the DELTA, like the daily-sketch layers in
-    stats.py. (Pipeline-managed paths only: the fingerprint-keyed
-    cache dirs of :func:`materialize_band_artifact` are immutable —
-    a grown corpus gets a new key and a fresh build.)"""
-    band_bits(new_emb, artifact_n_planes(path)).write.mode(
-        "append"
-    ).parquet(path)
-
-
-def load_band_bits(spark, path: str) -> DataFrame:
-    """Read a band artifact back as the :func:`band_bits` shape."""
-    return spark.read.parquet(path).select(
+BAND = _BandKind(
+    "band_v1_n{n}_h{h}_p{n_planes}",
+    _BAND_CACHE_MIN,
+    EMB_COLS,
+    band_bits,
+    read=lambda frame, **cfg: frame.select(
         "vec_id", "n2", "bits", "embedding"
-    )
-
-
-def cached_band_bits(
-    emb: DataFrame,
-    n_bands: int,
-    band_planes: int,
-    root: str | None = None,
-    fingerprint: tuple[int, int] | None = None,
-) -> DataFrame:
-    """find-or-build: return band_bits for ``emb`` from the artifact
-    cache, building (and caching) it on miss. A hit must cover the
-    requested config's plane count; wider artifacts are sliced
-    (prefix-stable planes), narrower ones are treated as misses."""
-    import glob
-    import os
-
-    root = _band_cache_root(root)
-    n, h = fingerprint or corpus_fingerprint(emb)
-    need = n_bands * band_planes
-    for p in sorted(glob.glob(os.path.join(root, f"band_v1_n{n}_h{h}_p*"))):
-        if artifact_n_planes(p) >= need:
-            from .artifacts import touch
-
-            touch(p)
-            return load_band_bits(emb.sparkSession, p)
-    nb, bp = adaptive_band_config(n)
-    width = ((max(need, nb * bp) + 31) // 32) * 32
-    return load_band_bits(
-        emb.sparkSession,
-        materialize_band_artifact(
-            emb, root, n_planes=width, fingerprint=(n, h)
-        ),
-    )
+    ),
+)
 
 
 def fixed_point(emb: DataFrame) -> DataFrame:
@@ -579,12 +500,6 @@ def cosine_topk(
         )
     )
 
-
-# corpus-size floor below which "auto" band caching is skipped: the
-# fingerprint hash scan costs more than recomputing the projection on
-# dimension-table corpora (all driver-verified scales are below this;
-# the sf1/sf10 rehearsal corpora are above).
-_BAND_CACHE_MIN = 10_000
 
 # corpus-size window for the gather-verify tier of cosine_neardup_pairs.
 # Upper bound: the fixed-point matrix is 512 B/vector (64-dim int64)
@@ -870,16 +785,16 @@ def cosine_neardup_pairs(
     byte-identical to the fixed form the oracle hardcodes.
 
     ``band_cache`` (default "auto") reads the projection stage from
-    the fingerprint-keyed band artifact, building and caching it on
-    first contact with a corpus (see
-    :func:`materialize_band_artifact`) — the bits are a deterministic
-    pure function of the vectors, so cached and inline plans yield
-    byte-identical pairs (law-tested) and a cold session skips the
-    pipeline's most expensive stage. "auto" engages only at
+    the ``BAND`` artifact, building and caching it on first contact
+    with a corpus (``artifacts.Kind.lookup``) — the bits are a
+    deterministic pure function of the vectors, so cached and inline
+    plans yield byte-identical pairs (law-tested) and a cold session
+    skips the pipeline's most expensive stage. "auto" engages only at
     ``_BAND_CACHE_MIN`` (10k) vectors and above — below that the
-    fingerprint scan outweighs the recompute. None disables (always
-    recompute inline); any other string is used as the cache root
-    unconditionally.
+    fingerprint scan (a full hash scan; measured +0.2 s on the sf0.1
+    bench pin for zero cold-path benefit) outweighs the recompute.
+    None disables (always recompute inline); any other string is used
+    as the cache root unconditionally.
 
     Verification is TIERED by corpus size (both tiers byte-identical,
     law-tested):
@@ -909,7 +824,7 @@ def cosine_neardup_pairs(
     # (corpus size for the adaptive config/gates, content hash for the
     # cache key) without a single corpus scan — the maintained-
     # pipeline cold path (tablelog.ledger_fingerprint)
-    from .memo import memoized_count, plan_scalar
+    from .memo import memoized_count
 
     n = fingerprint[0] if fingerprint else memoized_count(emb)
     if n > _GATHER_VERIFY_MAX:
@@ -923,36 +838,9 @@ def cosine_neardup_pairs(
         n_bands = auto[0] if n_bands is None else n_bands
         band_planes = auto[1] if band_planes is None else band_planes
     gather = n >= _GATHER_VERIFY_MIN
-    # "auto" caching gates on corpus size: the content fingerprint is
-    # a full hash scan, which at dimension-table scales costs more
-    # than recomputing the projection (measured +0.2 s on the sf0.1
-    # bench pin for zero cold-path benefit). An EXPLICIT root is
-    # caller intent and always caches (the law tests run tiny corpora
-    # through the artifact path on purpose).
-    use_cache = (
-        band_cache is not None
-        and n > 0
-        and (band_cache != "auto" or n >= _BAND_CACHE_MIN)
+    bt = BAND.lookup(
+        emb, band_cache, fingerprint, n_bands=n_bands, band_planes=band_planes
     )
-    bt = None
-    if use_cache:
-        # optimization only: an unwritable cache root / full disk /
-        # failed read-back falls back to the inline plan (atomic
-        # writes mean a partial artifact is never visible)
-        try:
-            root = None if band_cache == "auto" else band_cache
-            bt = cached_band_bits(
-                emb,
-                n_bands,
-                band_planes,
-                root=root,
-                fingerprint=fingerprint
-                or plan_scalar(
-                    emb, "emb_fp", lambda: corpus_fingerprint(emb)
-                ),
-            )
-        except Exception:
-            bt = None
     if bt is None:
         # inline projection; persisted because the self-join reads it
         # twice (and the gather tier a third time for the matrix)

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .artifacts import DOC_COLS, Kind
+
 STOPWORDS = ("the", "a", "and", "of", "to", "in")
 
 # tiny per-language marker lexicons for the n-gram/stopword heuristic
@@ -200,102 +202,15 @@ def rolling_fingerprint(docs: DataFrame, n: int = 4) -> DataFrame:
 _WINNOW_ARTIFACT_MIN = 10_000
 
 
-def text_corpus_fingerprint(docs: DataFrame) -> tuple[int, int]:
-    """(n_docs, order-insensitive content hash) of a document corpus —
-    the staleness key for cached winnow-fingerprint artifacts, the
-    textops twin of similarity.corpus_fingerprint. One aggregate scan;
-    the hash sum rides in decimal(38,0) (a long sum of uniform 64-bit
-    hashes overflows ANSI mode) and folds to 64 bits for the key."""
-    row = docs.select(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64("doc_id", "text").cast("decimal(38,0)"))
-        .alias("h"),
-    ).first()
-    return int(row["n"]), int(row["h"] or 0) % (1 << 64)
-
-
-def materialize_winnow_artifact(
-    docs: DataFrame,
-    root: str | None = None,
-    k: int = 4,
-    w: int = 4,
-    fingerprint: tuple[int, int] | None = None,
-) -> str:
-    """Write the winnow fingerprint table as an on-disk corpus
-    artifact and return its path — the across-session form of the
-    wn1/wn2 pipeline's dominant stage (the md5-per-gram pass). The
-    fingerprint set is a row-wise pure function of each document, so
-    the table merges by plain union: :func:`append_winnow_artifact`
-    computes fingerprints only for a NEW corpus shard and appends,
-    keeping 100 TB decontamination maintenance proportional to the
-    delta (the same algebra as the LSH band artifact and the
-    daily-sketch layers). Dirname carries the corpus content key and
-    the (k, w) config; writes are atomic."""
-    import os
-
-    from .artifacts import atomic_write_parquet, cache_root
-
-    from .memo import plan_scalar
-
-    n, h = fingerprint or plan_scalar(
-        docs, "text_fp", lambda: text_corpus_fingerprint(docs)
-    )
-    return atomic_write_parquet(
-        _winnow_fps_inline(docs, k, w),
-        os.path.join(cache_root(root), f"wn_v1_n{n}_h{h}_k{k}_w{w}"),
-    )
-
-
-def advance_winnow_artifact(
-    new_docs: DataFrame,
-    old_fp: tuple[int, int],
-    new_fp: tuple[int, int],
-    root: str | None = None,
-    k: int = 4,
-    w: int = 4,
-) -> str | None:
-    """O(shard) key advance for the winnow fingerprint artifact — the
-    textops twin of ``dedup.advance_shingle_artifact``."""
-    from .artifacts import advance_artifact
-
-    return advance_artifact(
-        root,
-        f"wn_v1_n{old_fp[0]}_h{old_fp[1]}_k{k}_w{w}",
-        f"wn_v1_n{new_fp[0]}_h{new_fp[1]}_k{k}_w{w}",
-        lambda p: append_winnow_artifact(new_docs, p, k, w),
-    )
-
-
-def append_winnow_artifact(
-    new_docs: DataFrame, path: str, k: int = 4, w: int = 4
-) -> None:
-    """Merge a NEW document shard into a pipeline-managed winnow
-    artifact (pipeline-managed paths only — the fingerprint-keyed
-    cache dirs are immutable; a grown corpus gets a new key)."""
-    _winnow_fps_inline(new_docs, k, w).write.mode("append").parquet(
-        path
-    )
-
-
-def cached_winnow_fps(
-    docs: DataFrame,
-    k: int = 4,
-    w: int = 4,
-    root: str | None = None,
-    fingerprint: tuple[int, int] | None = None,
-) -> DataFrame:
-    """find-or-build: the (doc_id, fp) winnow table for ``docs`` from
-    the artifact cache, building (and caching) on first contact. A
-    precomputed ``fingerprint`` (e.g. ``tablelog.ledger_fingerprint``)
-    makes a HIT zero-scan: the key is formed without touching the
-    corpus."""
-    from .artifacts import cache_root
-
-    return docs.sparkSession.read.parquet(
-        materialize_winnow_artifact(
-            docs, cache_root(root), k, w, fingerprint
-        )
-    ).select("doc_id", "fp")
+# the winnow fingerprint table as an artifact kind (``artifacts.Kind``):
+# a row-wise pure function of each document, so shards merge by union
+WINNOW = Kind(
+    "wn_v1_n{n}_h{h}_k{k}_w{w}",
+    _WINNOW_ARTIFACT_MIN,
+    DOC_COLS,
+    lambda docs, k, w: _winnow_fps_inline(docs, k, w),
+    read=lambda frame, k, w: frame.select("doc_id", "fp"),
+)
 
 
 def winnow_fingerprints(
@@ -332,38 +247,22 @@ def winnow_fingerprints(
     manager substitutes the materialization into any logically-equal
     subtree across queries.
 
-    ``cache`` (default "auto") reads the table from the
-    fingerprint-keyed winnow artifact instead (building and caching on
-    first contact with a corpus — :func:`materialize_winnow_artifact`)
-    so a cold session skips the md5-per-gram pass; the rows are a
-    deterministic pure function of each document, so cached and inline
-    forms are row-identical (law-tested). "auto" only engages at
-    ``_WINNOW_ARTIFACT_MIN``+ docs — below the gate (all
-    driver-verified scales, the pinned bench) the plan is the inline
-    form, identical to the pre-artifact rounds. None forces inline;
-    any other string is the cache root (bypassing the gate)."""
+    ``cache`` (default "auto") reads the table from the ``WINNOW``
+    artifact instead (building and caching it on first contact with a
+    corpus — ``artifacts.Kind.lookup``) so a cold session skips the
+    md5-per-gram pass; the rows are a deterministic pure function of
+    each document, so cached and inline forms are row-identical
+    (law-tested). "auto" only engages at ``_WINNOW_ARTIFACT_MIN``+
+    docs — below the gate (all driver-verified scales, the pinned
+    bench) the plan is the inline form, identical to the pre-artifact
+    rounds. None forces inline; any other string is the cache root
+    (bypassing the gate)."""
     from pyspark.storagelevel import StorageLevel
 
-    from .memo import memoized_count
-
-    n_docs = fingerprint[0] if fingerprint else None
-    if cache is not None and (
-        cache != "auto"
-        or (n_docs if n_docs is not None else memoized_count(docs))
-        >= _WINNOW_ARTIFACT_MIN
-    ):
-        # optimization only: environmental failures (unwritable root,
-        # full disk, failed read-back) fall back to the inline plan
-        try:
-            root = None if cache == "auto" else cache
-            return cached_winnow_fps(
-                docs, k, w, root=root, fingerprint=fingerprint
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-        except Exception:
-            pass
-    return _winnow_fps_inline(docs, k, w).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    fps = WINNOW.lookup(docs, cache, fingerprint, k=k, w=w)
+    if fps is None:
+        fps = _winnow_fps_inline(docs, k, w)
+    return fps.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def _winnow_fps_inline(docs: DataFrame, k: int, w: int) -> DataFrame:

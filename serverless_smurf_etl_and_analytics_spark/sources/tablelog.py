@@ -180,8 +180,7 @@ def commit_version(
     ``fingerprint_cols``: when set, the manifest carries the table's
     CUMULATIVE content fingerprint over those columns — the same
     ``(count, sum(xxhash64(cols)) mod 2^64)`` pair the artifact cache
-    keys on (``similarity.corpus_fingerprint`` /
-    ``textops.text_corpus_fingerprint``). Both components are
+    keys on (``artifacts.corpus_fingerprint``). Both components are
     mergeable sums, so an append scans ONLY the staged shard and adds
     onto the previous head's pair; an overwrite resets to the shard's
     own pair. :func:`ledger_fingerprint` then answers the cache-key
@@ -322,10 +321,9 @@ def ledger_fingerprint(
     or None when the requested version doesn't carry one (table
     predates fingerprint recording, or was fingerprinted over
     different columns). Equals the full-scan pair
-    (``corpus_fingerprint`` / ``text_corpus_fingerprint``) exactly,
-    by the modular-sum merge law (tested), so it is a drop-in
-    ``fingerprint=`` argument for every ``cached_*`` /
-    artifact-gated operator: a maintained-pipeline session gets
+    (``artifacts.corpus_fingerprint``) exactly, by the modular-sum
+    merge law (tested), so it is a drop-in ``fingerprint=`` argument
+    for every artifact-gated operator: a maintained-pipeline session gets
     artifact cache HITS without a single corpus scan. Column order
     matters (xxhash64 is positional) — pass the same list the
     commits used.

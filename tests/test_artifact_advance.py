@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from serverless_smurf_etl_and_analytics_spark import tables
 from serverless_smurf_etl_and_analytics_spark.operators import (
+    artifacts,
     dedup,
     similarity,
     textops,
@@ -34,6 +35,14 @@ from serverless_smurf_etl_and_analytics_spark.operators import (
 from serverless_smurf_etl_and_analytics_spark.sources import tablelog
 
 from conftest import SF_DIR
+
+
+def _doc_fp(df):
+    return artifacts.corpus_fingerprint(df, artifacts.DOC_COLS)
+
+
+def _emb_fp(df):
+    return artifacts.corpus_fingerprint(df, artifacts.EMB_COLS)
 
 
 def _rows(df):
@@ -76,12 +85,10 @@ def _check_advance(old_path, new_path, old_rows, full_rows, read):
 def test_shingle_advance_laws(spark, split_docs, tmp_path):
     docs, old_docs, shard = split_docs
     root = str(tmp_path)
-    fp_old = textops.text_corpus_fingerprint(old_docs)
-    fp_full = textops.text_corpus_fingerprint(docs)
-    old_path = dedup.materialize_shingle_artifact(old_docs, root=root)
-    new_path = dedup.advance_shingle_artifact(
-        shard, fp_old, fp_full, root=root
-    )
+    fp_old = _doc_fp(old_docs)
+    fp_full = _doc_fp(docs)
+    old_path = dedup.SHINGLE.materialize(old_docs, root, g=2)
+    new_path = dedup.SHINGLE.advance(shard, fp_old, fp_full, root, g=2)
     _check_advance(
         old_path,
         new_path,
@@ -97,7 +104,7 @@ def test_shingle_advance_laws(spark, split_docs, tmp_path):
     import unittest.mock as mock
 
     with mock.patch.object(DataFrame, "count", boom), mock.patch.object(
-        textops, "text_corpus_fingerprint", boom
+        artifacts, "corpus_fingerprint", boom
     ):
         got = _rows(
             dedup.shingle_rows(docs, 2, cache=root, fingerprint=fp_full)
@@ -108,8 +115,8 @@ def test_shingle_advance_laws(spark, split_docs, tmp_path):
 def test_minhash_and_simhash_advance_laws(spark, split_docs, tmp_path):
     docs, old_docs, shard = split_docs
     root = str(tmp_path)
-    fp_old = textops.text_corpus_fingerprint(old_docs)
-    fp_full = textops.text_corpus_fingerprint(docs)
+    fp_old = _doc_fp(old_docs)
+    fp_full = _doc_fp(docs)
 
     dedup.minhash_signatures(old_docs, cache=root).count()
     mh_old = next(
@@ -117,7 +124,9 @@ def test_minhash_and_simhash_advance_laws(spark, split_docs, tmp_path):
         for n in os.listdir(root)
         if n.startswith("mh_")
     )
-    mh_new = dedup.advance_minhash_artifact(shard, fp_old, fp_full, root)
+    mh_new = dedup.MINHASH.advance(
+        shard, fp_old, fp_full, root, k=dedup.N_MINHASH
+    )
     _check_advance(
         mh_old,
         mh_new,
@@ -142,9 +151,7 @@ def test_minhash_and_simhash_advance_laws(spark, split_docs, tmp_path):
         for n in os.listdir(root)
         if n.startswith("simh_")
     )
-    sx_new = dedup.advance_simhash_artifact(
-        shard, fp_old, fp_full, root, 32
-    )
+    sx_new = dedup.SIMHASH.advance(shard, fp_old, fp_full, root, bits=32)
     _check_advance(
         sx_old,
         sx_new,
@@ -157,12 +164,10 @@ def test_minhash_and_simhash_advance_laws(spark, split_docs, tmp_path):
 def test_winnow_advance_laws(spark, split_docs, tmp_path):
     docs, old_docs, shard = split_docs
     root = str(tmp_path)
-    fp_old = textops.text_corpus_fingerprint(old_docs)
-    fp_full = textops.text_corpus_fingerprint(docs)
-    old_path = textops.materialize_winnow_artifact(old_docs, root=root)
-    new_path = textops.advance_winnow_artifact(
-        shard, fp_old, fp_full, root
-    )
+    fp_old = _doc_fp(old_docs)
+    fp_full = _doc_fp(docs)
+    old_path = textops.WINNOW.materialize(old_docs, root, k=4, w=4)
+    new_path = textops.WINNOW.advance(shard, fp_old, fp_full, root, k=4, w=4)
     _check_advance(
         old_path,
         new_path,
@@ -179,21 +184,21 @@ def test_band_advance_laws_and_width_carry(spark, tmp_path):
     old_emb = emb.filter(F.col("vec_id") % 2 == 0)
     shard = emb.filter(F.col("vec_id") % 2 == 1)
     root = str(tmp_path)
-    fp_old = similarity.corpus_fingerprint(old_emb)
-    fp_full = similarity.corpus_fingerprint(emb)
-    old_path = similarity.materialize_band_artifact(
-        old_emb, root=root, n_planes=64, fingerprint=fp_old
+    fp_old = _emb_fp(old_emb)
+    fp_full = _emb_fp(emb)
+    old_path = similarity.BAND.materialize(
+        old_emb, root, fp_old, n_planes=64
     )
-    new_path = similarity.advance_band_artifact(
-        shard, fp_old, fp_full, root
-    )
+    # a crashed builder's leftover tmp dir is not a stored width
+    os.makedirs(old_path.replace("_p64", "_p96") + ".tmp-deadbeef")
+    new_path = similarity.BAND.advance(shard, fp_old, fp_full, root)
     assert new_path and similarity.artifact_n_planes(new_path) == 64
     _check_advance(
         old_path,
         new_path,
         _rows(similarity.band_bits(old_emb, 64)),
         _rows(similarity.band_bits(emb, 64)),
-        lambda p: similarity.load_band_bits(spark, p),
+        lambda p: similarity.BAND.read(spark.read.parquet(p)),
     )
     # the grown corpus's near-dup pairs off the advanced artifact ==
     # the inline build (first-matching-band pipeline end to end)
@@ -210,10 +215,10 @@ def test_band_advance_laws_and_width_carry(spark, tmp_path):
 
 def test_advance_without_old_artifact_returns_none(spark, split_docs, tmp_path):
     _, old_docs, shard = split_docs
-    fp_old = textops.text_corpus_fingerprint(old_docs)
+    fp_old = _doc_fp(old_docs)
     assert (
-        dedup.advance_shingle_artifact(
-            shard, fp_old, (fp_old[0] + 1, fp_old[1]), str(tmp_path)
+        dedup.SHINGLE.advance(
+            shard, fp_old, (fp_old[0] + 1, fp_old[1]), str(tmp_path), g=2
         )
         is None
     )
@@ -248,7 +253,7 @@ def test_pipeline_ledger_to_advance_end_to_end(spark, tmp_path):
         spark, t, b, mode="append", fingerprint_cols=cols
     )
     fp_b = tablelog.ledger_fingerprint(t, cols)
-    assert dedup.advance_shingle_artifact(b, fp_a, fp_b, root)
+    assert dedup.SHINGLE.advance(b, fp_a, fp_b, root, g=2)
 
     current = tablelog.read_version(spark, t)
 
@@ -256,7 +261,7 @@ def test_pipeline_ledger_to_advance_end_to_end(spark, tmp_path):
         raise AssertionError("corpus scan in maintained-pipeline query")
 
     with mock.patch.object(DataFrame, "count", boom), mock.patch.object(
-        textops, "text_corpus_fingerprint", boom
+        artifacts, "corpus_fingerprint", boom
     ):
         got = _rows(
             dedup.shingle_rows(current, 2, cache=root, fingerprint=fp_b)
@@ -272,12 +277,8 @@ def test_advance_failure_returns_none_and_cleans_tmp(tmp_path):
     files in the cache (ADVICE r10)."""
     import os
 
-    from serverless_smurf_etl_and_analytics_spark.operators import (
-        artifacts,
-    )
-
     root = str(tmp_path)
-    old = os.path.join(root, "stage_old")
+    old = os.path.join(root, "stage_n1_h1")
     os.makedirs(old)
     with open(os.path.join(old, "part-0.parquet"), "w") as f:
         f.write("x")
@@ -291,7 +292,9 @@ def test_advance_failure_returns_none_and_cleans_tmp(tmp_path):
         raise FakeSparkError("py4j analysis boom")
 
     assert (
-        artifacts.advance_artifact(root, "stage_old", "stage_new", bad_append)
+        artifacts.advance(
+            root, "stage_n{n}_h{h}", (1, 1), (2, 2), bad_append
+        )
         is None
     )
     leftovers = [n for n in os.listdir(root) if ".tmp-" in n]

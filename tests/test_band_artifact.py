@@ -38,11 +38,9 @@ def test_band_artifact_merge_law(spark, emb, tmp_path):
     maintenance proportional to the delta."""
     a = emb.filter(F.col("vec_id") % 2 == 0)
     b = emb.filter(F.col("vec_id") % 2 == 1)
-    path = similarity.materialize_band_artifact(
-        a, root=str(tmp_path), n_planes=64
-    )
-    similarity.append_band_artifact(b, path)
-    merged = _rows(similarity.load_band_bits(spark, path))
+    path = similarity.BAND.materialize(a, str(tmp_path), n_planes=64)
+    similarity.BAND.append(b, path, n_planes=64)
+    merged = _rows(similarity.BAND.read(spark.read.parquet(path)))
     direct = _rows(similarity.band_bits(emb, 64))
     assert merged == direct and len(merged) > 0
 
@@ -72,11 +70,9 @@ def test_prefix_slice_covers_narrower_configs(spark, emb, tmp_path):
     inline band_table at (8, 8) — the md5 plane stream is
     prefix-stable, so sim3's single band and sim2's adaptive bands
     read the SAME artifact."""
-    path = similarity.materialize_band_artifact(
-        emb, root=str(tmp_path), n_planes=96
-    )
+    path = similarity.BAND.materialize(emb, str(tmp_path), n_planes=96)
     sliced = similarity._explode_bands(
-        similarity.load_band_bits(spark, path), 8, 8
+        similarity.BAND.read(spark.read.parquet(path)), 8, 8
     )
     inline = similarity.band_table(emb, 8, 8)
     cols = ["vec_id", "band_idx", "bucket"]
@@ -93,27 +89,27 @@ def test_cache_hit_reuses_and_stale_corpus_misses(spark, emb, tmp_path):
     changes the fingerprint and builds a fresh artifact rather than
     silently reusing stale bits."""
     root = str(tmp_path)
-    similarity.cached_band_bits(emb, 8, 8, root=root).count()
+    similarity.BAND.lookup(emb, root, n_bands=8, band_planes=8).count()
     assert len(os.listdir(root)) == 1
     first = os.listdir(root)[0]
-    similarity.cached_band_bits(emb, 8, 8, root=root).count()
+    similarity.BAND.lookup(emb, root, n_bands=8, band_planes=8).count()
     assert os.listdir(root) == [first]
     # wider-config request treated as a miss only when not covered:
     # the default build width (>= 64 planes) covers (1, 8) too
-    similarity.cached_band_bits(emb, 1, 8, root=root).count()
+    similarity.BAND.lookup(emb, root, n_bands=1, band_planes=8).count()
     assert os.listdir(root) == [first]
     shrunk = emb.filter(F.col("vec_id") != 0)
-    similarity.cached_band_bits(shrunk, 8, 8, root=root).count()
+    similarity.BAND.lookup(shrunk, root, n_bands=8, band_planes=8).count()
     assert len(os.listdir(root)) == 2
     # and the stale artifact's rows were not mixed in
-    n_art = similarity.cached_band_bits(shrunk, 8, 8, root=root).count()
+    n_art = similarity.BAND.lookup(
+        shrunk, root, n_bands=8, band_planes=8
+    ).count()
     assert n_art == shrunk.count()
 
 
 def test_artifact_dirname_encodes_width(tmp_path, emb):
-    path = similarity.materialize_band_artifact(
-        emb, root=str(tmp_path), n_planes=64
-    )
+    path = similarity.BAND.materialize(emb, str(tmp_path), n_planes=64)
     assert similarity.artifact_n_planes(path) == 64
     assert glob.glob(os.path.join(str(tmp_path), "band_v1_n*_h*_p64"))
 

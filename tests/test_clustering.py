@@ -357,6 +357,36 @@ def test_model_artifact_gate_keeps_inline_below_min(spark):
     assert auto_c == inline_c
 
 
+def test_failed_model_write_trains_once(spark, tmp_path, monkeypatch):
+    """An OSError from the model-artifact write falls back to the model
+    already trained: the trainer runs exactly once, and the result
+    equals inline training."""
+    from serverless_smurf_etl_and_analytics_spark.operators import artifacts
+
+    emb = tables.load(spark, SF_DIR, "embeddings")
+    ia, ic, icost = clustering._as_kmeans(
+        *clustering._lloyd_train(emb, 1, 16, 5)
+    )
+    real_train = clustering._lloyd_train
+    calls = []
+
+    def counted_train(*a, **k):
+        calls.append(1)
+        return real_train(*a, **k)
+
+    def failed_write(*a, **k):
+        raise OSError("no space left on device")
+
+    monkeypatch.setattr(clustering, "_lloyd_train", counted_train)
+    monkeypatch.setattr(artifacts, "atomic_write_parquet", failed_write)
+    ca, cc, ccost = clustering.kmeans_train(emb, cache=str(tmp_path))
+    assert len(calls) == 1
+    assert cc == ic and ccost == icost
+    assert {tuple(r) for r in ca.collect()} == {
+        tuple(r) for r in ia.collect()
+    }
+
+
 def test_driver_tier_equals_distributed_tier(spark, monkeypatch):
     """r13 tier law: the driver-numpy trainer tier (small corpora —
     one collect, in-process Lloyd) must produce BIT-IDENTICAL models,

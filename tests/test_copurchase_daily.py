@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from serverless_smurf_etl_and_analytics_spark import tables
-from serverless_smurf_etl_and_analytics_spark.operators import joins
+from serverless_smurf_etl_and_analytics_spark.operators import artifacts, joins
 
 from conftest import SF_DIR
 
@@ -148,8 +148,8 @@ def test_co_artifact_explicit_root_and_advance_laws(spark, tmp_path):
         "transaction_id",
     )
     root = str(tmp_path)
-    fp_early = joins.txn_corpus_fingerprint(early)
-    fp_full = joins.txn_corpus_fingerprint(txns)
+    fp_early = artifacts.corpus_fingerprint(early, artifacts.TXN_COLS)
+    fp_full = artifacts.corpus_fingerprint(txns, artifacts.TXN_COLS)
 
     got = _rows(joins.co_range_topk(early, "1990-01-01", "2099-01-01",
                                     cache=root, fingerprint=fp_early))
@@ -160,7 +160,7 @@ def test_co_artifact_explicit_root_and_advance_laws(spark, tmp_path):
         if n.startswith("co_v1_")
     )
 
-    assert joins.advance_co_artifact(late, fp_early, fp_full, root)
+    assert joins.CO_DAILY.advance(late, fp_early, fp_full, root)
     new_dir = next(
         os.path.join(root, n)
         for n in os.listdir(root)
@@ -187,7 +187,7 @@ def test_co_artifact_explicit_root_and_advance_laws(spark, tmp_path):
 
 
 def test_txn_fingerprint_matches_ledger(spark, tmp_path):
-    """joins.txn_corpus_fingerprint == the tablelog ledger pair over
+    """The transaction scan fingerprint == the tablelog ledger pair over
     the same columns, so a maintained fact table feeds co2/tri2's
     artifact gate with zero scans."""
     from serverless_smurf_etl_and_analytics_spark.sources import tablelog
@@ -205,4 +205,4 @@ def test_txn_fingerprint_matches_ledger(spark, tmp_path):
     )
     assert tablelog.ledger_fingerprint(
         t, cols
-    ) == joins.txn_corpus_fingerprint(tablelog.read_version(spark, t))
+    ) == artifacts.corpus_fingerprint(tablelog.read_version(spark, t), cols)

@@ -17,10 +17,12 @@ from pyspark.sql import functions as F
 from serverless_smurf_etl_and_analytics_spark import corpus, tables
 from serverless_smurf_etl_and_analytics_spark.operators import (
     artifacts,
+    clustering,
     dedup,
     export,
     history,
     joins,
+    memo,
     metrics,
     similarity,
     textops,
@@ -34,21 +36,25 @@ def _rows(df):
     return {tuple(r) for r in df.collect()}
 
 
-def _ban_scans_and_builds(monkeypatch):
+def _ban_scans_and_builds(monkeypatch, spark):
     """From here on: any corpus-scan job (count, fingerprint
     aggregate) or any artifact BUILD (atomic_write_parquet on a
     missing path) fails the test. Artifact reads and result collects
-    stay allowed — a maintained-corpus cold query is exactly those."""
+    stay allowed — a maintained-corpus cold query is exactly those.
+    This application's memoized gate scalars are dropped first, so a
+    count or fingerprint memoized before the ban cannot stand in for
+    the ledger pair."""
 
     def boom(*a, **k):
         raise AssertionError(
             "corpus scan during maintained-corpus cold query"
         )
 
+    app = spark.sparkContext.applicationId
+    for key in [k for k in memo._MEMO if k[0] == app]:
+        monkeypatch.delitem(memo._MEMO, key)
     monkeypatch.setattr(DataFrame, "count", boom)
-    monkeypatch.setattr(textops, "text_corpus_fingerprint", boom)
-    monkeypatch.setattr(similarity, "corpus_fingerprint", boom)
-    monkeypatch.setattr(joins, "txn_corpus_fingerprint", boom)
+    monkeypatch.setattr(artifacts, "corpus_fingerprint", boom)
 
     real_write = artifacts.atomic_write_parquet
 
@@ -66,12 +72,8 @@ def _open_gates(monkeypatch):
     exercise the artifact lookup path the production scales use (the
     gates exist to keep tiny inline plans byte-identical, not to
     protect correctness — law-tested elsewhere)."""
-    monkeypatch.setattr(dedup, "_DOC_ARTIFACT_MIN", 0)
-    monkeypatch.setattr(textops, "_WINNOW_ARTIFACT_MIN", 0)
-    monkeypatch.setattr(similarity, "_BAND_CACHE_MIN", 0)
-    monkeypatch.setattr(joins, "_CO_ARTIFACT_MIN", 0)
-    monkeypatch.setattr(history, "_DAILY_ARTIFACT_MIN", 0)
-    monkeypatch.setattr(metrics, "_PSD_ARTIFACT_MIN", 0)
+    for kind in artifacts.KINDS.values():
+        monkeypatch.setattr(kind, "floor", 0)
 
 
 def test_document_corpus_ingest_then_zero_scan_queries(
@@ -99,12 +101,12 @@ def test_document_corpus_ingest_then_zero_scan_queries(
     assert [s1[f] for f in corpus.DOC_FAMILIES] == ["built"] * 4
     assert [s2[f] for f in corpus.DOC_FAMILIES] == ["advanced"] * 4
     # the recorded ledger pair equals the scan pair over the table
-    assert s2["fingerprint"] == textops.text_corpus_fingerprint(
-        corpus.snapshot_documents(spark, t)[0]
+    assert s2["fingerprint"] == artifacts.corpus_fingerprint(
+        corpus.snapshot_documents(spark, t)[0], artifacts.DOC_COLS
     )
 
     _open_gates(monkeypatch)
-    _ban_scans_and_builds(monkeypatch)
+    _ban_scans_and_builds(monkeypatch, spark)
     assert _rows(
         corpus.minhash_neardup(spark, t, 0.5).select("doc_a", "doc_b")
     ) == d4_inline
@@ -136,7 +138,7 @@ def test_embedding_corpus_ingest_then_zero_scan_query(
     assert s1["band"] == "built" and s2["band"] == "advanced"
 
     _open_gates(monkeypatch)
-    _ban_scans_and_builds(monkeypatch)
+    _ban_scans_and_builds(monkeypatch, spark)
     assert _rows(corpus.cosine_neardup(spark, t, 0.3)) == sim2_inline
 
 
@@ -162,7 +164,7 @@ def test_transaction_corpus_ingest_then_zero_scan_copurchase(
     assert s2["co_pair_daily"] == "advanced"
 
     _open_gates(monkeypatch)
-    _ban_scans_and_builds(monkeypatch)
+    _ban_scans_and_builds(monkeypatch, spark)
     assert (
         _rows(corpus.copurchase_range_topk(spark, t, start, end))
         == co2_inline
@@ -208,7 +210,7 @@ def test_transaction_corpus_daily_artifact_feeds_insight_exports(
     assert os.path.isdir(os.path.join(root, f"psd_v1_n{n}_h{h}"))
 
     _open_gates(monkeypatch)
-    _ban_scans_and_builds(monkeypatch)
+    _ban_scans_and_builds(monkeypatch, spark)
     assert _rows(corpus.store_daily(spark, t)) == daily_inline
     assert (
         _rows(corpus.export_store_summaries(spark, t, start, end))
@@ -244,15 +246,15 @@ def test_keys_only_transaction_shard_skips_daily_family(
 def test_failed_family_build_is_recorded_not_claimed(
     spark, tmp_path, monkeypatch
 ):
-    """ADVICE r12: when a family builder returns None (the cached_*
-    builders swallow environmental errors to None), the ingest stats
+    """ADVICE r12: when a family's lookup returns None (the artifact
+    lookup falls back to None on environmental errors), the ingest stats
     must record ``build-failed`` — never claim ``built`` for an
     artifact that was not published."""
     monkeypatch.setenv("SMURF_ARTIFACT_CACHE", str(tmp_path / "cache"))
     t = str(tmp_path / "txns")
     txns = tables.transactions(spark, SF_DIR)
     monkeypatch.setattr(
-        history, "cached_store_daily_metrics", lambda *a, **k: None
+        history.STORE_DAILY, "lookup", lambda *a, **k: None
     )
     s1 = corpus.ingest_transactions(spark, t, txns)
     assert s1["store_daily"] == "build-failed"
@@ -263,14 +265,15 @@ def test_failed_family_build_is_recorded_not_claimed(
 def test_banned_lookup_failure_propagates(spark, tmp_path, monkeypatch):
     """ADVICE r12: an AssertionError raised INSIDE the cached lookup
     (the suite's scan/build ban hooks patch atomic_write_parquet and
-    the fingerprint aggregates in that try block) must propagate, not
-    degrade to the silent inline fallback."""
+    the fingerprint aggregate inside ``artifacts.Kind.lookup``) must
+    propagate, not degrade to the silent inline fallback — for every
+    artifact kind."""
     import pytest
-
-    from serverless_smurf_etl_and_analytics_spark.operators import artifacts
 
     monkeypatch.setenv("SMURF_ARTIFACT_CACHE", str(tmp_path / "cache"))
     txns = tables.transactions(spark, SF_DIR)
+    docs = tables.load(spark, SF_DIR, "documents")
+    emb = tables.load(spark, SF_DIR, "embeddings")
 
     def boom(*a, **k):
         raise AssertionError("banned build")
@@ -278,11 +281,25 @@ def test_banned_lookup_failure_propagates(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(artifacts, "atomic_write_parquet", boom)
     root = str(tmp_path / "cache")
     with pytest.raises(AssertionError, match="banned build"):
-        history.cached_store_daily_metrics(txns, cache=root)
+        history.STORE_DAILY.lookup(txns, root)
     with pytest.raises(AssertionError, match="banned build"):
-        metrics.cached_product_day_rollup(txns, cache=root)
+        metrics.PRODUCT_DAILY.lookup(txns, root)
     with pytest.raises(AssertionError, match="banned build"):
-        joins.cached_co_pair_daily(txns, cache=root)
+        joins.CO_DAILY.lookup(txns, root)
+    with pytest.raises(AssertionError, match="banned build"):
+        dedup.shingle_rows(docs, 2, cache=root)
+    with pytest.raises(AssertionError, match="banned build"):
+        dedup.minhash_signatures(docs, cache=root)
+    with pytest.raises(AssertionError, match="banned build"):
+        dedup.simhash(docs, 128, cache=root)
+    with pytest.raises(AssertionError, match="banned build"):
+        textops.winnow_fingerprints(docs, cache=root)
+    with pytest.raises(AssertionError, match="banned build"):
+        similarity.cosine_neardup_pairs(emb, 0.3, band_cache=root)
+    with pytest.raises(AssertionError, match="banned build"):
+        clustering.kmeans_train(emb, cache=root)
+    with pytest.raises(AssertionError, match="banned build"):
+        clustering.pq_train_encode(emb, cache=root)
 
 
 def test_ingest_advance_survives_nondeterministic_shard(
@@ -318,16 +335,14 @@ def test_ingest_advance_survives_nondeterministic_shard(
     shard = spark.read.parquet(scratch)
 
     seen: dict = {}
-    real_advance = dedup.advance_shingle_artifact
+    real_advance = dedup.SHINGLE.advance
 
     def capture_then_mutate(new_docs, *args, **kw):
         seen["files"] = new_docs.inputFiles()
         shutil.rmtree(scratch)  # the caller's plan is now unreadable
         return real_advance(new_docs, *args, **kw)
 
-    monkeypatch.setattr(
-        dedup, "advance_shingle_artifact", capture_then_mutate
-    )
+    monkeypatch.setattr(dedup.SHINGLE, "advance", capture_then_mutate)
     s2 = corpus.ingest_documents(spark, t, shard)
     assert [s2[f] for f in corpus.DOC_FAMILIES] == ["advanced"] * 4
 
@@ -340,7 +355,7 @@ def test_ingest_advance_survives_nondeterministic_shard(
 
     # (b) the maintained query over the advanced artifacts is exact
     _open_gates(monkeypatch)
-    _ban_scans_and_builds(monkeypatch)
+    _ban_scans_and_builds(monkeypatch, spark)
     assert _rows(
         corpus.minhash_neardup(spark, t, 0.5).select("doc_a", "doc_b")
     ) == d4_inline
@@ -390,7 +405,7 @@ def test_custom_root_corpus_queries_hit_without_rebuild(
     )
 
     _open_gates(monkeypatch)
-    _ban_scans_and_builds(monkeypatch)
+    _ban_scans_and_builds(monkeypatch, spark)
     assert _rows(
         corpus.minhash_neardup(spark, t, 0.5, cache=root).select(
             "doc_a", "doc_b"

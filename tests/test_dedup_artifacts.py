@@ -36,8 +36,8 @@ def test_shingle_artifact_merge_and_equivalence(spark, docs, tmp_path):
     assert cached == inline and len(cached) > 0
     a = docs.filter(F.col("doc_id") % 2 == 0)
     b = docs.filter(F.col("doc_id") % 2 == 1)
-    path = dedup.materialize_shingle_artifact(a, root=root)
-    dedup.append_shingle_artifact(b, path)
+    path = dedup.SHINGLE.materialize(a, root, g=2)
+    dedup.SHINGLE.append(b, path, g=2)
     assert _rows(spark.read.parquet(path)) == inline
 
 
@@ -69,7 +69,7 @@ def test_minhash_artifact_merge_law(spark, docs, tmp_path):
         for n in os.listdir(root)
         if n.startswith("mh_")
     )
-    dedup.append_minhash_artifact(b, path)
+    dedup.MINHASH.append(b, path, k=dedup.N_MINHASH)
     merged = _rows(spark.read.parquet(path))
     direct = _rows(
         dedup._minhash_signatures_from(
@@ -93,7 +93,7 @@ def test_simhash_artifact_equivalence_and_merge(spark, docs, tmp_path):
         for n in os.listdir(root)
         if n.startswith("simh_") and n.endswith("_b32")
     )
-    dedup.append_simhash_artifact(b, path, 32)
+    dedup.SIMHASH.append(b, path, bits=32)
     assert _rows(spark.read.parquet(path)) == _rows(
         dedup._simhash_inline(docs, 32)
     )
@@ -123,22 +123,28 @@ def test_d4_and_d6_pipelines_unchanged_by_gate(spark, docs, tmp_path):
     # force artifacts by pre-building, then lower the gate
     import serverless_smurf_etl_and_analytics_spark.operators.dedup as dd
 
+    doc_kinds = (dd.SHINGLE, dd.MINHASH, dd.SIMHASH)
+
+    def set_floor(floor):
+        for kind in doc_kinds:
+            kind.floor = floor
+
     old = dd._DOC_ARTIFACT_MIN
     os.environ["SMURF_ARTIFACT_CACHE"] = root
     try:
-        dd._DOC_ARTIFACT_MIN = 0
+        set_floor(0)
         arte_pairs = _rows(
             dedup.minhash_neardup_pairs(docs, 0.5).select(
                 "doc_a", "doc_b"
             )
         )
         inline_d6 = None
-        dd._DOC_ARTIFACT_MIN = 10**9
+        set_floor(10**9)
         inline_d6 = _rows(dedup.simhash_neardup_pairs(docs, 6, 128))
-        dd._DOC_ARTIFACT_MIN = 0
+        set_floor(0)
         arte_d6 = _rows(dedup.simhash_neardup_pairs(docs, 6, 128))
     finally:
-        dd._DOC_ARTIFACT_MIN = old
+        set_floor(old)
         del os.environ["SMURF_ARTIFACT_CACHE"]
     assert arte_pairs == inline_pairs and len(inline_pairs) > 0
     assert arte_d6 == inline_d6 and len(inline_d6) > 0

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from serverless_smurf_etl_and_analytics_spark import tables
 from serverless_smurf_etl_and_analytics_spark.operators import (
+    artifacts,
     dedup,
     similarity,
     textops,
@@ -23,6 +24,14 @@ from conftest import SF_DIR
 
 DOC_COLS = ["doc_id", "text"]
 EMB_COLS = ["vec_id", "embedding"]
+
+
+def _doc_fp(df):
+    return artifacts.corpus_fingerprint(df, DOC_COLS)
+
+
+def _emb_fp(df):
+    return artifacts.corpus_fingerprint(df, EMB_COLS)
 
 
 def _rows(df):
@@ -45,7 +54,7 @@ def test_ledger_fingerprint_equals_scan_across_commits(spark, tmp_path):
     )
     assert tablelog.ledger_fingerprint(
         t, DOC_COLS
-    ) == textops.text_corpus_fingerprint(a)
+    ) == _doc_fp(a)
 
     tablelog.commit_version(
         spark, t, b, mode="append", fingerprint_cols=DOC_COLS
@@ -56,7 +65,7 @@ def test_ledger_fingerprint_equals_scan_across_commits(spark, tmp_path):
     current = tablelog.read_version(spark, t)
     assert tablelog.ledger_fingerprint(
         t, DOC_COLS
-    ) == textops.text_corpus_fingerprint(current)
+    ) == _doc_fp(current)
 
     # merge (row-level upsert) commits as overwrite: recomputed pair
     updates = a.limit(5).withColumn("text", F.concat("text", F.lit(" x")))
@@ -66,11 +75,11 @@ def test_ledger_fingerprint_equals_scan_across_commits(spark, tmp_path):
     merged = tablelog.read_version(spark, t)
     assert tablelog.ledger_fingerprint(
         t, DOC_COLS
-    ) == textops.text_corpus_fingerprint(merged)
+    ) == _doc_fp(merged)
 
     # time travel: old versions keep their own recorded pair
     assert tablelog.ledger_fingerprint(t, DOC_COLS, version=0) == (
-        textops.text_corpus_fingerprint(a)
+        _doc_fp(a)
     )
 
 
@@ -78,7 +87,7 @@ def test_ledger_fingerprint_embedding_cols_match_similarity_scan(
     spark, tmp_path
 ):
     """The same ledger pair, over the embedding corpus and checked
-    against similarity.corpus_fingerprint (the band-artifact key)."""
+    against the embedding scan fingerprint (the band-artifact key)."""
     t = str(tmp_path / "emb")
     emb = tables.load(spark, SF_DIR, "embeddings").select(
         "vec_id", "embedding"
@@ -93,7 +102,7 @@ def test_ledger_fingerprint_embedding_cols_match_similarity_scan(
     )
     assert tablelog.ledger_fingerprint(
         t, EMB_COLS
-    ) == similarity.corpus_fingerprint(tablelog.read_version(spark, t))
+    ) == _emb_fp(tablelog.read_version(spark, t))
 
 
 def test_ledger_fingerprint_unknowable_cases_return_none(
@@ -120,14 +129,14 @@ def test_ledger_fingerprint_unknowable_cases_return_none(
     )
     assert tablelog.ledger_fingerprint(
         t, DOC_COLS
-    ) == textops.text_corpus_fingerprint(docs)
+    ) == _doc_fp(docs)
     # column-list mismatch (xxhash64 is positional)
     assert tablelog.ledger_fingerprint(t, ["text", "doc_id"]) is None
 
 
 def _ban_corpus_scans(monkeypatch):
     """Fail the test if anything scans a corpus from here on:
-    DataFrame.count and both fingerprint aggregates raise. Artifact
+    DataFrame.count and the fingerprint aggregate raise. Artifact
     parquet reads and collect() of results stay allowed — the law is
     about PRE-read work, and the collected frames read only the
     artifact."""
@@ -136,8 +145,7 @@ def _ban_corpus_scans(monkeypatch):
         raise AssertionError("corpus scan during ledger-fed cache hit")
 
     monkeypatch.setattr(DataFrame, "count", boom)
-    monkeypatch.setattr(textops, "text_corpus_fingerprint", boom)
-    monkeypatch.setattr(similarity, "corpus_fingerprint", boom)
+    monkeypatch.setattr(artifacts, "corpus_fingerprint", boom)
 
 
 def test_ledger_fed_cache_hit_runs_zero_corpus_scans(
@@ -152,7 +160,7 @@ def test_ledger_fed_cache_hit_runs_zero_corpus_scans(
     )
     root = str(tmp_path)
     # pre-build artifacts (the maintained-pipeline warm state)
-    fp = textops.text_corpus_fingerprint(docs)
+    fp = _doc_fp(docs)
     inline_sh = _rows(dedup.shingle_rows(docs, 2, cache=root))
     dedup.minhash_signatures(docs, cache=root).count()
     dedup.simhash(docs, 32, cache=root).count()
@@ -190,7 +198,7 @@ def test_ledger_fed_band_cache_hit_runs_zero_corpus_scans(
         "vec_id", "embedding"
     )
     root = str(tmp_path)
-    fp = similarity.corpus_fingerprint(emb)
+    fp = _emb_fp(emb)
     expected = _rows(
         similarity.cosine_neardup_pairs(emb, 0.3, band_cache=root)
     )
@@ -218,7 +226,7 @@ def test_ledger_fed_composites_run_zero_plan_time_scans(
 
     os.environ["SMURF_ARTIFACT_CACHE"] = root
     try:
-        fp = textops.text_corpus_fingerprint(docs)
+        fp = _doc_fp(docs)
         d4_inline = _rows(
             dedup.minhash_neardup_pairs(docs, 0.5).select(
                 "doc_a", "doc_b"
@@ -271,18 +279,18 @@ def test_fingerprint_cols_inherited_on_default_commits(spark, tmp_path):
     tablelog.commit_version(spark, t, b, mode="append")
     assert tablelog.ledger_fingerprint(
         t, DOC_COLS
-    ) == textops.text_corpus_fingerprint(tablelog.read_version(spark, t))
+    ) == _doc_fp(tablelog.read_version(spark, t))
     # merge_upsert at its None default inherits too
     updates = a.limit(4).withColumn("text", F.concat("text", F.lit(" y")))
     tablelog.merge_upsert(spark, t, updates, "doc_id")
     assert tablelog.ledger_fingerprint(
         t, DOC_COLS
-    ) == textops.text_corpus_fingerprint(tablelog.read_version(spark, t))
+    ) == _doc_fp(tablelog.read_version(spark, t))
     # compact rewrites content unchanged: pair carries through
     tablelog.compact(spark, t, n_files=1)
     assert tablelog.ledger_fingerprint(
         t, DOC_COLS
-    ) == textops.text_corpus_fingerprint(tablelog.read_version(spark, t))
+    ) == _doc_fp(tablelog.read_version(spark, t))
     # restore: byte-identical content, fingerprint carried verbatim
     v_before = tablelog.latest_version(t)
     tablelog.commit_version(
@@ -323,7 +331,7 @@ def test_stream_batches_keep_ledger_chain(spark, tmp_path):
     ) is None
     assert tablelog.ledger_fingerprint(
         t, DOC_COLS
-    ) == textops.text_corpus_fingerprint(tablelog.read_version(spark, t))
+    ) == _doc_fp(tablelog.read_version(spark, t))
 
 
 def test_read_snapshot_pins_one_head(spark, tmp_path):
@@ -340,11 +348,11 @@ def test_read_snapshot_pins_one_head(spark, tmp_path):
     )
     df, fp, version = tablelog.read_snapshot(spark, t, DOC_COLS)
     assert version == 0
-    assert fp == textops.text_corpus_fingerprint(a)
+    assert fp == _doc_fp(a)
     # a commit after the snapshot: the pinned triple still agrees with
     # itself (df is version-0 rows, fp is version-0's pair)
     tablelog.commit_version(
         spark, t, docs.limit(7), mode="append"
     )
-    assert fp == textops.text_corpus_fingerprint(df)
+    assert fp == _doc_fp(df)
     assert df.count() == a.count()

@@ -92,6 +92,21 @@ def test_one_shot_consumers_pin_no_cache(spark):
     assert cache_manager.isEmpty()
 
 
+def test_pq3_residual_pins_no_cache(spark):
+    """pq3 persists its residual frame only while training reads it
+    several times, and releases it once training has consumed it."""
+    from serverless_smurf_etl_and_analytics_spark.operators import (
+        clustering,
+    )
+
+    emb = tables.load(spark, SF_DIR, "embeddings")
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    codes, _ = clustering.pq_train_encode_residual(emb)
+    assert codes.collect()
+    assert cache_manager.isEmpty()
+
+
 def test_table_loaders_memoized_per_path(spark):
     """r14: the testdata loaders hand back ONE constructed frame per
     (application, directory[, table]) — repeat calls skip the parquet

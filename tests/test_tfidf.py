@@ -144,8 +144,8 @@ def test_winnow_artifact_merge_and_cache_laws(spark, tmp_path):
     root = str(tmp_path)
     a = docs.filter(F.col("doc_id") % 2 == 0)
     b = docs.filter(F.col("doc_id") % 2 == 1)
-    path = textops.materialize_winnow_artifact(a, root=root)
-    textops.append_winnow_artifact(b, path)
+    path = textops.WINNOW.materialize(a, root, k=4, w=4)
+    textops.WINNOW.append(b, path, k=4, w=4)
     merged = {
         (r["doc_id"], r["fp"])
         for r in spark.read.parquet(path).collect()
