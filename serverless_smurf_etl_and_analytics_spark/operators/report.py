@@ -1,8 +1,8 @@
 """Daily-report formatter (SURVEY.md §2.6 O5/O9, §2.8 string layer):
 the reference's ``generate-report/lambda_function.py:51-147`` builds a
 formatted text report from company metrics, payment breakdown (sorted
-by amount desc, title-cased — O9 + ``initcap``, ``:83-84``), top
-products, and priority-sorted recommendations (O5, ``:210-211``).
+by amount desc, title-cased — O9, ``:83-84``), top products, and
+priority-sorted recommendations (O5, ``:210-211``).
 
 Here the report is DATA: one row per line with (section_rank, line_no,
 line), so the text layer is an oracle-checkable query; rendering to a
@@ -12,9 +12,22 @@ single string (the reference's ``textwrap.fill`` presentation,
 All numbers are formatted with C-style ``format_string`` — DuckDB's
 ``printf`` produces byte-identical text, and every value is an exact
 integer-cents-derived double, so no cross-engine rounding drift.
+
+Payment methods are title-cased with ASCII ``translate`` tables (first
+character upper-cased, the rest lower-cased), which equals the oracle's
+``upper(substring(pm, 1, 1)) || lower(substring(pm, 2))`` on the closed
+payment enum and on the A/N/R flags. Not ``initcap``: Spark 4.1 maps
+``initcap``, ``upper`` and ``lower`` through ICU
+(``spark.sql.icu.caseMappings.enabled``), and the first such call in a
+process pays the ICU load (in a fresh ``local[4]`` C1-only JVM on a
+4-core host, the first ``upper`` over three rows took 3.4 s and the
+second 0.4 s; the first ``translate`` 0.4 s), which made the report the
+longest write of the daily pipeline's phase B.
 """
 
 from __future__ import annotations
+
+import string
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -22,6 +35,16 @@ from pyspark.storagelevel import StorageLevel
 
 from .insights import recommendations, shared_insight_frames
 from .metrics import company_daily, payment_breakdown, store_day_metrics
+
+
+def ascii_title(c: F.Column) -> F.Column:
+    """``c`` with its first character upper-cased and the rest
+    lower-cased, ASCII letters only (no ICU case mapping)."""
+    lower, upper = string.ascii_lowercase, string.ascii_uppercase
+    return F.concat(
+        F.translate(F.substr(c, F.lit(1), F.lit(1)), lower, upper),
+        F.translate(F.substr(c, F.lit(2)), upper, lower),
+    )
 
 
 def _section(df: DataFrame, rank: int, line: F.Column, order: list) -> DataFrame:
@@ -34,7 +57,10 @@ def _section(df: DataFrame, rank: int, line: F.Column, order: list) -> DataFrame
 
 
 def daily_report_lines(
-    txns: DataFrame, date: str, recs: DataFrame | None = None
+    txns: DataFrame,
+    date: str,
+    recs: DataFrame | None = None,
+    company: DataFrame | None = None,
 ) -> DataFrame:
     """The report body for one date as (section_rank, line_no, line)
     rows — header, company KPIs (+ best/worst store), payment methods
@@ -42,11 +68,20 @@ def daily_report_lines(
 
     ``recs``: optionally a precomputed recommendations DataFrame (the
     pipeline passes its persisted anomaly-derived set so the report
-    does not re-run the window chain over the fact table)."""
+    does not re-run the window chain over the fact table).
+
+    ``company``: optionally a ``metrics.company_daily`` frame covering
+    ``date`` (the pipeline passes the rollup of its cached store_daily,
+    so the header and KPIs do not re-aggregate the day's facts). The
+    payment section always reads the facts: store_daily's
+    ``payment_breakdown`` map carries no line count."""
     day = txns.filter(F.col("sale_date") == date)
 
-    daily = store_day_metrics(day)
-    company = company_daily(daily)
+    company = (
+        company_daily(store_day_metrics(day))
+        if company is None
+        else company.filter(F.col("sale_date") == date)
+    )
     header = _section(
         company,
         1,
@@ -78,7 +113,7 @@ def daily_report_lines(
         3,
         F.format_string(
             "%s: $%.2f (%d lines)",
-            F.initcap(F.col("payment_method")),
+            ascii_title(F.col("payment_method")),
             F.col("net_amount"),
             F.col("line_count"),
         ),

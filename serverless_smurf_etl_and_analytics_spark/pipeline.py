@@ -48,11 +48,22 @@ one driver thread per write) and waits for all of them:
 - C: the five NDJSON exports. ``manifest.json`` is written after all
   five commit, and the ledger row after that.
 
-Every DataFrame is built on the calling thread; only the write action
-runs on a worker. A failed write raises after the running writes
-finish. The ``finally`` then waits until no job of the caller's job
-group is active before releasing the cache, so a job still running
-cannot re-cache a released frame. The manifest and the ledger row are
+Each write's DataFrame is built on that write's own thread, so the
+py4j composition and Catalyst analysis of one plan overlap the others
+and the jobs already running (``concurrent_writes`` gives the
+serial-vs-thread build times). Only the frames several writes share
+are built on the calling thread, before their phase starts: the run's
+fact slice (``mv_input``), the persisted store_daily read-back, the
+persisted daily cents and anomaly set, and the recommendations derived
+from them. They are persisted or shared, so building one per thread
+would build (and cache) it more than once. Phase A's store_daily write
+returns the schema the barrier reads the table back with, and each
+phase-B write returns the schema phase C reads its table back with.
+
+A failed write raises after the running writes finish. The
+``finally`` then waits until no job of the caller's job group is
+active before releasing the cache, so a job still running cannot
+re-cache a released frame. The manifest and the ledger row are
 written only when every write succeeded.
 """
 
@@ -61,7 +72,9 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Callable
 from functools import partial
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -84,6 +97,8 @@ from .operators.insights import (
     recommendations_from,
     trend_insights_from_daily,
 )
+
+T = TypeVar("T")
 
 LEDGER_DIR = "run_ledger"
 LEDGER_COLUMNS = ("run_date", "status", "stats", "recorded_at")
@@ -145,15 +160,25 @@ def record_run(
     row.write.mode("append").parquet(_ledger_path(out_dir))
 
 
-def _write_counted(df: DataFrame, path: str) -> int:
-    """Overwrite ``path`` with ``df`` and return the rows written, taken
-    from an observation on the write itself: no read-back, no extra
-    job."""
+def _built(
+    write: Callable[[DataFrame, str], T],
+    build: Callable[[], DataFrame],
+    path: str,
+) -> Callable[[], T]:
+    """A ``write_all`` thunk that builds its DataFrame on the write's
+    own thread, then writes it to ``path``."""
+    return lambda: write(build(), path)
+
+
+def _write_counted(df: DataFrame, path: str) -> tuple[int, StructType]:
+    """Overwrite ``path`` with ``df``; return the rows written, taken
+    from an observation on the write itself (no read-back, no extra
+    job), and the schema written."""
     obs = Observation()
     df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
         "overwrite"
     ).parquet(path)
-    return obs.get["rows"]
+    return obs.get["rows"], df.schema
 
 
 def _read_partitioned(
@@ -192,7 +217,7 @@ def _drain_jobs(sc) -> None:
         time.sleep(0.01)
 
 
-def materialize_store_daily(df: DataFrame, path: str) -> None:
+def materialize_store_daily(df: DataFrame, path: str) -> StructType:
     """Write the store_daily MV in its SERVING layout: one directory
     per sale_date (directory-level partition pruning serves the date
     axis — P4 range scans and the incremental rewrite) with rows
@@ -209,7 +234,10 @@ def materialize_store_daily(df: DataFrame, path: str) -> None:
 
     The repartition ALSO fixes small-file pressure: hash-placing each
     date's rows into one task yields one file per partition directory
-    instead of one per (task x date)."""
+    instead of one per (task x date).
+
+    Returns ``df``'s schema, which reads the table back without a
+    footer-inference job (:func:`_read_partitioned`)."""
     (
         df.repartition("sale_date")
         .sortWithinPartitions("sale_date", "store_id")
@@ -217,6 +245,42 @@ def materialize_store_daily(df: DataFrame, path: str) -> None:
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("sale_date")
         .parquet(path)
+    )
+    return df.schema
+
+
+def _top_products_long(store_daily: DataFrame) -> DataFrame:
+    """store_daily's nested top_products lists, one row per (store,
+    day, sku)."""
+    return store_daily.select(
+        "store_id", "sale_date", F.explode("top_products").alias("tp")
+    ).select(
+        "store_id",
+        "sale_date",
+        F.col("tp.item_sku").alias("item_sku"),
+        F.col("tp.units").alias("units"),
+        F.col("tp.revenue").alias("revenue"),
+    )
+
+
+def _product_daily(store_daily: DataFrame) -> DataFrame:
+    """product_daily: the top-5 parity rollup of store_daily's nested
+    top_products lists (see phase B of :func:`run_daily_pipeline`)."""
+    return (
+        _top_products_long(store_daily)
+        .groupBy("sale_date", "item_sku")
+        .agg(
+            F.sum("units").alias("units_sold"),
+            (
+                F.sum(F.round(F.col("revenue") * 100).cast("long"))
+                .cast("long")
+                / 100.0
+            ).cast("double").alias("revenue"),
+            F.countDistinct("store_id").alias("store_count"),
+            F.concat_ws(
+                ",", F.sort_array(F.collect_set("store_id"))
+            ).alias("stores_sold_at"),
+        )
     )
 
 
@@ -286,22 +350,25 @@ def run_daily_pipeline(
             txns if bootstrap else txns.filter(F.col("sale_date") == run_date)
         )
         stats["store_daily_mode"] = "bootstrap" if bootstrap else "incremental"
-        sd_new = metrics.store_daily_nested(mv_input)
         sketches = {
-            "sku_sketch_rows": (kmv_daily_sketches(mv_input), "sku_sketches"),
-            "hll_register_rows": (
-                hll_daily_registers(mv_input), "hll_registers"
-            ),
+            "sku_sketch_rows": (kmv_daily_sketches, "sku_sketches"),
+            "hll_register_rows": (hll_daily_registers, "hll_registers"),
             "cents_histogram_rows": (
-                daily_log2_histograms(mv_input), "cents_histograms"
+                daily_log2_histograms, "cents_histograms"
             ),
         }
         phase_a = {
-            stat: partial(_overwrite_partitions, df, os.path.join(out_dir, t))
-            for stat, (df, t) in sketches.items()
+            stat: _built(
+                _overwrite_partitions,
+                partial(build, mv_input),
+                os.path.join(out_dir, t),
+            )
+            for stat, (build, t) in sketches.items()
         }
-        phase_a["store_daily"] = partial(
-            materialize_store_daily, sd_new, sd_path
+        phase_a["store_daily"] = _built(
+            materialize_store_daily,
+            partial(metrics.store_daily_nested, mv_input),
+            sd_path,
         )
         written = write_all(phase_a)
         stats.update({stat: written[stat] for stat in sketches})
@@ -310,7 +377,9 @@ def run_daily_pipeline(
         # incremental run rewrote one partition of it) and persist it.
         # The table-level count fills the cache, and every later
         # consumer reads the cached frame.
-        store_daily = keep(_read_partitioned(spark, sd_path, sd_new.schema))
+        store_daily = keep(
+            _read_partitioned(spark, sd_path, written["store_daily"])
+        )
         stats["store_daily_rows"] = store_daily.count()
 
         # Phase B. Every rollup, insight set and the report, at once.
@@ -329,29 +398,12 @@ def run_daily_pipeline(
         #    rescanning raw transactions (detect-anomalies reads the
         #    persisted summaries too, lambda_function.py:64-135).
         #  - the daily report for run_date (O5/O9 string layer); its
-        #    recommendations section reuses the persisted anomaly set
-        #    instead of re-running the window chain over the fact table.
-        top_long = store_daily.select(
-            "store_id", "sale_date", F.explode("top_products").alias("tp")
-        ).select(
-            "store_id",
-            "sale_date",
-            F.col("tp.item_sku").alias("item_sku"),
-            F.col("tp.units").alias("units"),
-            F.col("tp.revenue").alias("revenue"),
-        )
-        product_daily = top_long.groupBy("sale_date", "item_sku").agg(
-            F.sum("units").alias("units_sold"),
-            (
-                F.sum(F.round(F.col("revenue") * 100).cast("long"))
-                .cast("long")
-                / 100.0
-            ).cast("double").alias("revenue"),
-            F.countDistinct("store_id").alias("store_count"),
-            F.concat_ws(",", F.sort_array(F.collect_set("store_id"))).alias(
-                "stores_sold_at"
-            ),
-        )
+        #    header and KPIs read the company rollup of the cached
+        #    store_daily, and its recommendations section reuses the
+        #    persisted anomaly set, so neither re-aggregates the facts.
+        #    Only the payment section reads the day's fact slice.
+        #  Each write builds its own plan on its thread; the frames the
+        #  writes share (daily, anomalies, recs) are built here.
         daily = keep(
             store_daily.select(
                 "store_id",
@@ -364,44 +416,50 @@ def run_daily_pipeline(
         recs = recommendations_from(anomalies)
         ins_path = os.path.join(out_dir, "insights")
         insights = {
-            "anomalies": anomalies,
-            "trends": trend_insights_from_daily(daily),
-            "recommendations": recs,
+            "anomalies": lambda: anomalies,
+            "trends": partial(trend_insights_from_daily, daily),
+            "recommendations": lambda: recs,
         }
         phase_b = {
             "company_daily_rows": (
-                metrics.company_daily(store_daily),
+                partial(metrics.company_daily, store_daily),
                 os.path.join(out_dir, "company_daily"),
             ),
             "product_daily_rows": (
-                product_daily, os.path.join(out_dir, "product_daily")
+                partial(_product_daily, store_daily),
+                os.path.join(out_dir, "product_daily"),
             ),
             **{
-                f"{name}_rows": (df, os.path.join(ins_path, name))
-                for name, df in insights.items()
+                f"{name}_rows": (build, os.path.join(ins_path, name))
+                for name, build in insights.items()
             },
             "report_lines": (
-                report.daily_report_lines(txns, run_date, recs=recs)
-                .coalesce(1),
+                lambda: report.daily_report_lines(
+                    txns,
+                    run_date,
+                    recs=recs,
+                    company=metrics.company_daily(store_daily),
+                ).coalesce(1),
                 os.path.join(out_dir, "report"),
             ),
         }
-        stats.update(
-            write_all(
-                {
-                    stat: partial(_write_counted, df, path)
-                    for stat, (df, path) in phase_b.items()
-                }
-            )
+        written = write_all(
+            {
+                stat: _built(_write_counted, build, path)
+                for stat, (build, path) in phase_b.items()
+            }
         )
+        stats.update({stat: rows for stat, (rows, _) in written.items()})
 
         # Phase C. The five BI exports (S7) from the MATERIALIZED tables,
         #    written together; the insight tables are read with the
-        #    schemas they were written with. manifest.json is written
-        #    after all five commit, and the ledger row after that.
+        #    schemas their phase-B writes returned. manifest.json is
+        #    written after all five commit, and the ledger row after that.
         an_mv, tr_mv, re_mv = (
-            spark.read.schema(df.schema).parquet(os.path.join(ins_path, name))
-            for name, df in insights.items()
+            spark.read.schema(written[f"{name}_rows"][1]).parquet(
+                os.path.join(ins_path, name)
+            )
+            for name in insights
         )
         start = export_start or run_date
         end = export_end or run_date
@@ -419,7 +477,7 @@ def run_daily_pipeline(
                 F.col("item_count").alias("items_sold"),
                 F.col("avg_transaction").alias("average_transaction"),
             ),
-            "top_products": top_long.filter(
+            "top_products": _top_products_long(store_daily).filter(
                 F.col("sale_date").between(start, end)
             ),
             "anomalies": export._export_anomalies_from(an_mv),

@@ -12,7 +12,10 @@ import pyarrow.parquet as pq
 import pytest
 
 from serverless_smurf_etl_and_analytics_spark import pipeline, tables
-from serverless_smurf_etl_and_analytics_spark.operators import metrics
+from serverless_smurf_etl_and_analytics_spark.operators import (
+    metrics,
+    report,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 RUN_DATE = "2001-06-15"
@@ -203,6 +206,21 @@ def test_company_daily_matches_direct_computation(spark, out_dir):
         for r in direct.select("sale_date", "total_sales").collect()
     }
     assert got == want
+
+
+def test_pipeline_report_equals_fact_built_report(spark, out_dir):
+    """The report the run writes, whose header and KPIs come from the
+    cached store_daily, equals the report built from the facts alone
+    (the r1 registry path), row for row."""
+    d, _ = out_dir
+    cols = ("section_rank", "line_no", "line")
+    got = spark.read.parquet(os.path.join(d, "report")).select(*cols)
+    want = report.daily_report_lines(
+        tables.transactions(spark, SF_DIR), RUN_DATE
+    ).select(*cols)
+    got_rows = sorted(got.collect())
+    assert got_rows
+    assert got_rows == sorted(want.collect())
 
 
 def test_rerun_is_noop(spark, out_dir):

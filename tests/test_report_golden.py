@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import pathlib
 
+from pyspark.sql import functions as F
+
 from serverless_smurf_etl_and_analytics_spark import tables
 from serverless_smurf_etl_and_analytics_spark.operators import report
 
@@ -51,9 +53,59 @@ def test_rendered_report_empty_insights_path(spark):
     """The first trading day has no trailing history, so no insight
     rows exist -> the reference's empty-insights sentinel line."""
     txns = tables.transactions(spark, SF_DIR)
-    from pyspark.sql import functions as F
-
     first = txns.agg(F.min("sale_date")).collect()[0][0]
     got = report.render_report(txns, first, expected_stores=10)
     assert "No significant insights detected for today." in got
     assert "ANOMALIES DETECTED" not in got
+
+
+# Spark 4.1 maps these through ICU, whose first call in a process
+# costs seconds; the report must not pay it
+_ICU_CASE_FUNCTIONS = ("initcap(", "upper(", "lower(")
+
+
+def _analyzed(df):
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def test_report_plan_has_no_icu_case_mapping(spark):
+    """Neither the fact-built report (r1) nor the one the pipeline
+    builds from a company rollup calls initcap, upper or lower."""
+    from serverless_smurf_etl_and_analytics_spark.operators import metrics
+
+    txns = tables.transactions(spark, SF_DIR)
+    company = metrics.company_daily(metrics.store_day_metrics(txns))
+    for df in (
+        report.daily_report_lines(txns, "2001-11-04"),
+        report.daily_report_lines(txns, "2001-11-04", company=company),
+    ):
+        plan = _analyzed(df)
+        for fn in _ICU_CASE_FUNCTIONS:
+            assert fn not in plan, fn
+        assert "translate(" in plan
+
+
+def test_ascii_title_matches_duckdb(spark, duck):
+    """The ASCII title-case equals the r1 oracle's
+    ``upper(substring(x, 1, 1)) || lower(substring(x, 2))`` on every
+    payment method and on the A/N/R flags the fixtures carry."""
+    from serverless_smurf_etl_and_analytics_spark.schema import (
+        PAYMENT_METHODS,
+    )
+
+    values = [*PAYMENT_METHODS, "A", "N", "R"]
+    got = {
+        r["x"]: r["t"]
+        for r in spark.createDataFrame([(v,) for v in values], "x string")
+        .select("x", report.ascii_title(F.col("x")).alias("t"))
+        .collect()
+    }
+    want = dict(
+        duck.execute(
+            "SELECT x, upper(substring(x, 1, 1)) || lower(substring(x, 2))"
+            " FROM unnest(?) AS t(x)",
+            [values],
+        ).fetchall()
+    )
+    assert got == want
+    assert len(got) == len(values)
