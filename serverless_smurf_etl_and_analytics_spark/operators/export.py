@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..concurrent_writes import write_all
-from ..functions.money import dollars
 from .insights import (
     classify_anomalies,
     recommendations,
@@ -53,11 +52,19 @@ def export_store_summaries(
     1.2% in range), 30.2 s -> 2.6 s. At 100 TB the difference is a
     full fact scan vs a date-pruned one; a pipeline deployment serves
     this from the PERSISTED store_daily MV instead
-    (``pipeline.run_daily_pipeline`` step 6), which its sale_date
+    (``pipeline.run_daily_pipeline`` phase C), which its sale_date
     partitioning prunes the same way."""
-    daily = store_day_metrics(
-        txns.filter(F.col("sale_date").between(start, end))
+    return _export_store_summaries_from(
+        store_day_metrics(txns.filter(F.col("sale_date").between(start, end)))
     )
+
+
+def _export_store_summaries_from(daily: DataFrame) -> DataFrame:
+    """x1's serving shape of an A1-shaped store-day frame already cut
+    to the export window: ``metrics.store_day_metrics`` over the
+    range's facts, the pipeline's store_daily, or
+    ``metrics.store_day_dollars`` of the ``history.STORE_DAILY``
+    artifact."""
     return daily.select(
         F.col("sale_date").alias("date"),
         "store_id",
@@ -66,35 +73,6 @@ def export_store_summaries(
         F.col("transaction_count").alias("transactions"),
         F.col("item_count").alias("items_sold"),
         F.col("avg_transaction").alias("average_transaction"),
-    )
-
-
-def _export_store_summaries_from_daily(
-    wide_daily: DataFrame, start: str, end: str
-) -> DataFrame:
-    """x1's serving shape off the WIDE store-day daily partial
-    (``history.store_daily_metrics_cents`` / the maintained
-    ``history.STORE_DAILY`` artifact) — the same integer-cents math ``metrics.
-    store_day_metrics`` applies to its own aggregation, so the result
-    equals :func:`export_store_summaries` exactly (sale_date is a
-    group key, so filtering the full-history daily table to the range
-    yields precisely the range-filtered facts' groups)."""
-    net_c = F.col("sales_c") - F.col("disc_c")
-    return wide_daily.filter(
-        F.col("sale_date").between(start, end)
-    ).select(
-        F.col("sale_date").alias("date"),
-        "store_id",
-        F.concat(F.lit("Store "), F.col("store_id")).alias("store_name"),
-        dollars(F.col("sales_c")).alias("total_sales"),
-        F.col("txn_count").alias("transactions"),
-        F.col("item_count").alias("items_sold"),
-        (
-            F.round(net_c / F.col("txn_count")).cast("long")
-            / F.lit(100.0)
-        )
-        .cast("double")
-        .alias("average_transaction"),
     )
 
 
@@ -124,6 +102,9 @@ def export_top_products(txns: DataFrame, start: str, end: str) -> DataFrame:
 
 
 def _export_top_products_from(top5: DataFrame) -> DataFrame:
+    """x2's serving shape of per-(store, day) top-5 rank rows already
+    cut to the export window: the facts' rank step or store_daily's
+    nested lists (``metrics.top_products_long``)."""
     return top5.select(
         F.col("sale_date").alias("date"),
         "store_id",

@@ -6,6 +6,9 @@ loops (7 point-queries per trailing window,
 ``analyze-trends/lambda_function.py:107-229``;
 ``get-trends/lambda_function.py:170-324``). Here each one is a single
 window function over the materialized store_daily — one scan, no loops.
+The store-day input, :func:`store_daily_cents`, and the ``STORE_DAILY``
+artifact's shards are projections of ``metrics.store_day_partial``, the
+package's one (store, day) aggregation of fact rows.
 
 Parity traps (SURVEY §7.4) preserved:
 - trailing averages divide by **days present** (<=7), not 7 — a
@@ -29,11 +32,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .artifacts import TXN_COLS, Kind
+from .metrics import store_day_partial
 
 
 def store_daily_cents(txns: DataFrame) -> DataFrame:
     """Per-(store, day) gross sales in integer cents + line count —
-    the minimal input every window op consumes.
+    the minimal input every window op consumes: a projection of
+    ``metrics.store_day_partial``, whose other aggregates column pruning
+    drops (no ``count(DISTINCT)`` in the optimized plan).
 
     The grain is emitted hash-clustered by store_id and sorted by
     (store_id, sale_date) (r13, guide §2.4 "establish the partitioning
@@ -50,31 +56,10 @@ def store_daily_cents(txns: DataFrame) -> DataFrame:
     spark.sql.shuffle.partitions, so the layout stays scale-adaptive
     rather than tuned to local mode."""
     return (
-        txns.groupBy("store_id", "sale_date")
-        .agg(
-            F.sum("line_cents").alias("sales_c"),
-            F.count(F.lit(1)).alias("txn_count"),
-        )
+        store_day_partial(txns)
+        .select("store_id", "sale_date", "sales_c", "txn_count")
         .repartition("store_id")
         .sortWithinPartitions("store_id", "sale_date")
-    )
-
-
-def store_daily_metrics_cents(txns: DataFrame) -> DataFrame:
-    """The WIDE per-(store, day) daily partial: every decomposable sum
-    the export/insight consumers need — gross cents, discount cents,
-    line count, item count. Each column is a plain sum/count, so the
-    union-append advance stays exact under ANY shard split (the same
-    decomposability claim the ``STORE_DAILY`` artifact carries;
-    countDistinct(transaction_id) is deliberately NOT here — it does
-    not decompose and no artifact consumer needs it). x1's serving
-    shape (``export-to-quicksight/lambda_function.py:180-214``) is a
-    pure per-row function of these four sums."""
-    return txns.groupBy("store_id", "sale_date").agg(
-        F.sum("line_cents").alias("sales_c"),
-        F.sum("discount_cents").alias("disc_c"),
-        F.count(F.lit(1)).alias("txn_count"),
-        F.sum("quantity").alias("item_count"),
     )
 
 
@@ -89,23 +74,24 @@ def store_daily_metrics_cents(txns: DataFrame) -> DataFrame:
 _DAILY_ARTIFACT_MIN = 1_000_000
 
 
-# The store-day daily artifact kind (``artifacts.Kind``): it stores the
-# WIDE partial (:func:`store_daily_metrics_cents` — r13 widened it from
-# the v1 two-sum form so x1's item/discount sums ride the same family;
-# a v1-keyed corpus simply misses once and rebuilds wide). The read-back
-# RE-AGGREGATES by (store_id, sale_date): ledger advances append the
-# new shard's own daily partial, so an advanced artifact may hold
-# several partial rows per key. Every column is a sum, so the
-# union-append is exact for ANY split of the fact rows into shards —
-# no complete-group caveat at all, unlike ``joins.co_pair_daily``'s
-# complete-basket requirement. The re-agg runs over |stores|x|days|
-# rows (tiny at every scale), never the facts. Consumers that need
-# :func:`store_daily_cents`'s shape select its two sums.
+# The store-day daily artifact kind (``artifacts.Kind``): its shard is
+# ``metrics.store_day_partial`` minus ``distinct_transactions``, which
+# does not decompose (r13 widened it from the v1 two-sum form so x1's
+# item/discount sums ride the same family; a v1-keyed corpus simply
+# misses once and rebuilds wide). The read-back RE-AGGREGATES by
+# (store_id, sale_date): ledger advances append the new shard's own
+# daily partial, so an advanced artifact may hold several partial rows
+# per key. Every column is a sum, so the union-append is exact for ANY
+# split of the fact rows into shards — no complete-group caveat at
+# all, unlike ``joins.co_pair_daily``'s complete-basket requirement.
+# The re-agg runs over |stores|x|days| rows (tiny at every scale),
+# never the facts. Consumers that need :func:`store_daily_cents`'s
+# shape select its two sums.
 STORE_DAILY = Kind(
     "sdc_v2_n{n}_h{h}",
     _DAILY_ARTIFACT_MIN,
     TXN_COLS,
-    store_daily_metrics_cents,
+    lambda txns: store_day_partial(txns).drop("distinct_transactions"),
     read=lambda frame: frame.groupBy("store_id", "sale_date").agg(
         F.sum("sales_c").alias("sales_c"),
         F.sum("disc_c").alias("disc_c"),

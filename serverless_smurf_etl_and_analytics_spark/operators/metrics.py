@@ -6,11 +6,16 @@ Re-expresses the reference's hand-coded per-file Python loops
 ``calc-product-metrics/lambda_function.py:77-113``) as declarative
 DataFrame aggregations.
 
+:func:`store_day_partial` is the package's only (store, day)
+aggregation of fact rows; every store-day shape is a projection of it,
+and the nested store_daily shapes, the company payment map and the
+daily report read store_daily, never the facts.
+
 Scale notes:
-- A1 is one hash aggregation on (store_id, sale_date); Catalyst plans it
-  as partial (map-side) + final HashAggregate, so the shuffle carries one
-  row per group, not per line item — at 100 TB the shuffle is bounded by
-  |stores| x |days|, tiny.
+- The partial is one hash aggregation on (store_id, sale_date); Catalyst
+  plans it as partial (map-side) + final HashAggregate, so the shuffle
+  carries one row per group, not per line item — at 100 TB the shuffle
+  is bounded by |stores| x |days|, tiny.
 - A4 company rollup consumes the *materialized* store_daily (one row per
   store-day), mirroring the reference's pre-aggregation design — it never
   rescans the fact table.
@@ -28,8 +33,27 @@ from ..functions.money import cents, dollars
 from .artifacts import TXN_COLS, Kind
 
 
-def store_day_metrics(txns: DataFrame) -> DataFrame:
-    """A1: per-(store, day) grand totals.
+def store_day_partial(txns: DataFrame) -> DataFrame:
+    """The one (store, day) aggregation of fact rows: gross and
+    discount cents, line count, distinct transaction ids and items. A1,
+    ``history.store_daily_cents``, the ``history.STORE_DAILY`` shards
+    and P4 project it; column pruning drops the aggregates a projection
+    does not use (no ``count(DISTINCT)`` under ``store_daily_cents``),
+    but a persisted plan that keeps all five, like A1, computes them."""
+    return txns.groupBy("store_id", "sale_date").agg(
+        F.sum("line_cents").alias("sales_c"),
+        F.sum("discount_cents").alias("disc_c"),
+        F.count(F.lit(1)).alias("txn_count"),
+        F.countDistinct("transaction_id").alias("distinct_transactions"),
+        F.sum("quantity").alias("item_count"),
+    )
+
+
+def store_day_dollars(partial: DataFrame) -> DataFrame:
+    """A1's dollar shape of a :func:`store_day_partial`-shaped frame.
+    A partial without ``distinct_transactions`` (the ``STORE_DAILY``
+    artifact's, which keeps only decomposable sums) gives the same
+    shape without that column.
 
     Parity trap (SURVEY §7.4): the reference's ``transaction_count`` is
     ``len(transactions)`` — a *line-item* count
@@ -37,29 +61,28 @@ def store_day_metrics(txns: DataFrame) -> DataFrame:
     transaction ids. We keep both: ``transaction_count`` (parity) and
     ``distinct_transactions`` (the correct business metric).
     ``avg_transaction`` = net / count rounded to cents
-    (``calculate-metrics/lambda_function.py:152``).
-    """
-    g = txns.groupBy("store_id", "sale_date").agg(
-        F.sum("line_cents").alias("sales_c"),
-        F.sum("discount_cents").alias("disc_c"),
-        F.count(F.lit(1)).alias("transaction_count"),
-        F.countDistinct("transaction_id").alias("distinct_transactions"),
-        F.sum("quantity").alias("item_count"),
-    )
+    (``calculate-metrics/lambda_function.py:152``)."""
     net_c = F.col("sales_c") - F.col("disc_c")
-    return g.select(
+    distinct = [c for c in ("distinct_transactions",) if c in partial.columns]
+    return partial.select(
         "store_id",
         "sale_date",
         dollars(F.col("sales_c")).alias("total_sales"),
         dollars(F.col("disc_c")).alias("total_discount"),
         dollars(net_c).alias("net_sales"),
-        "transaction_count",
-        "distinct_transactions",
+        F.col("txn_count").alias("transaction_count"),
+        *distinct,
         "item_count",
-        (F.round(net_c / F.col("transaction_count")).cast("long") / F.lit(100.0))
+        (F.round(net_c / F.col("txn_count")).cast("long") / F.lit(100.0))
         .cast("double")
         .alias("avg_transaction"),
     )
+
+
+def store_day_metrics(txns: DataFrame) -> DataFrame:
+    """A1: per-(store, day) grand totals (:func:`store_day_dollars` of
+    :func:`store_day_partial`)."""
+    return store_day_dollars(store_day_partial(txns))
 
 
 def payment_breakdown(txns: DataFrame) -> DataFrame:
@@ -78,17 +101,27 @@ def payment_breakdown(txns: DataFrame) -> DataFrame:
 
 
 def payment_breakdown_per_store_day(txns: DataFrame) -> DataFrame:
-    """A2 at the reference's real grain: one row per
-    (store, day, method); the serving layer pivots this to a map."""
+    """A2 at the reference's real grain: one row per (store, day,
+    method) with its net amount and line count; store_daily nests both
+    as maps."""
     g = txns.groupBy("store_id", "sale_date", "payment_method").agg(
         F.sum("line_cents").alias("sales_c"),
         F.sum("discount_cents").alias("disc_c"),
+        F.count(F.lit(1)).alias("line_count"),
     )
     return g.select(
         "store_id",
         "sale_date",
         "payment_method",
         dollars(F.col("sales_c") - F.col("disc_c")).alias("net_amount"),
+        "line_count",
+    )
+
+
+def _method_map(value: str) -> F.Column:
+    """payment_method -> ``value``, entries in method order."""
+    return F.map_from_entries(
+        F.sort_array(F.collect_list(F.struct("payment_method", value)))
     )
 
 
@@ -97,17 +130,17 @@ def store_daily_nested(txns: DataFrame, k: int = 5) -> DataFrame:
     shape (``write-metrics/lambda_function.py:77-104``): one row per
     (store, day) with A1 grand totals plus
     ``top_products array<struct<rank,item_sku,units,revenue>>``
-    (``calculate-metrics/lambda_function.py:155-167``) and
+    (``calculate-metrics/lambda_function.py:155-167``),
     ``payment_breakdown map<payment_method, net_amount>``
-    (``calculate-metrics/lambda_function.py:170-173``).
+    (``calculate-metrics/lambda_function.py:170-173``) and
+    ``payment_lines map<payment_method, line count>``, which lets the
+    daily report's payment section read store_daily instead of facts.
 
-    Scale notes: three hash aggregations over the fact table at
-    different grains, joined at (store, day) — each shuffle carries one
-    row per group. The collected arrays/maps are bounded (k products,
-    <=5 payment enum values), so the nested row stays small at any
-    corpus size. sd_nested (registry) is the stringified parity twin
-    whose values the DuckDB oracle hash-checks."""
-    daily = store_day_metrics(txns)
+    Scale notes: the store-day partial, the top-k rank step and the
+    payment grain are three hash aggregations over the fact table,
+    joined at (store, day) — each shuffle carries one row per group.
+    The collected arrays/maps are bounded (k products, <=5 payment enum
+    values), so the nested row stays small at any corpus size."""
     top = (
         top_products_per_store_day(txns, k)
         .groupBy("store_id", "sale_date")
@@ -123,97 +156,63 @@ def store_daily_nested(txns: DataFrame, k: int = 5) -> DataFrame:
         payment_breakdown_per_store_day(txns)
         .groupBy("store_id", "sale_date")
         .agg(
-            F.map_from_entries(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct("payment_method", "net_amount")
-                    )
-                )
-            ).alias("payment_breakdown")
+            _method_map("net_amount").alias("payment_breakdown"),
+            _method_map("line_count").alias("payment_lines"),
         )
     )
     return (
-        daily.join(top, ["store_id", "sale_date"], "left")
+        store_day_metrics(txns)
+        .join(top, ["store_id", "sale_date"], "left")
         .join(pay, ["store_id", "sale_date"], "left")
     )
 
 
 def store_daily_nested_flat(txns: DataFrame, k: int = 5) -> DataFrame:
-    """Oracle-hashable projection of store_daily_nested: the nested
-    columns serialized to deterministic strings pre-aggregation
-    (format_string per row, then sorted collect + join — plain codegen,
-    no higher-order functions), because the driver's value hash cannot
-    canonicalize map/struct columns across engines."""
-    daily = store_day_metrics(txns)
-    top_s = (
-        top_products_per_store_day(txns, k)
-        .groupBy("store_id", "sale_date")
-        .agg(
-            F.array_join(
-                F.sort_array(
-                    F.collect_list(
-                        F.format_string(
-                            "%d:%s:%d:%.2f",
-                            F.col("rank"),
-                            F.col("item_sku").cast("string"),
-                            F.col("units"),
-                            F.col("revenue"),
-                        )
-                    )
-                ),
-                ";",
-            ).alias("top_products_str")
-        )
+    """Oracle-hashable projection of :func:`store_daily_nested`: the
+    nested columns serialized to strings, because the driver's value
+    hash cannot canonicalize map/struct columns across engines. The
+    struct order (rank first, single-digit) and the map's method order
+    are the sorted-string orders the oracle joins in."""
+    nested = store_daily_nested(txns, k)
+    top_s = F.transform(
+        "top_products",
+        lambda t: F.format_string(
+            "%d:%s:%d:%.2f",
+            t["rank"],
+            t["item_sku"].cast("string"),
+            t["units"],
+            t["revenue"],
+        ),
     )
-    pay_s = (
-        payment_breakdown_per_store_day(txns)
-        .groupBy("store_id", "sale_date")
-        .agg(
-            F.array_join(
-                F.sort_array(
-                    F.collect_list(
-                        F.format_string(
-                            "%s=%.2f",
-                            F.col("payment_method"),
-                            F.col("net_amount"),
-                        )
-                    )
-                ),
-                ",",
-            ).alias("payment_breakdown_str")
-        )
+    pay_s = F.transform(
+        F.map_entries("payment_breakdown"),
+        lambda e: F.format_string("%s=%.2f", e["key"], e["value"]),
     )
-    return (
-        daily.join(top_s, ["store_id", "sale_date"], "left")
-        .join(pay_s, ["store_id", "sale_date"], "left")
-    )
+    return nested.select(
+        "*",
+        F.array_join(top_s, ";").alias("top_products_str"),
+        F.array_join(pay_s, ",").alias("payment_breakdown_str"),
+    ).drop("top_products", "payment_breakdown", "payment_lines")
 
 
 def company_payment_map(txns: DataFrame) -> DataFrame:
     """A4's payment-map re-aggregation
     (``calc-company-metrics/lambda_function.py:88-95``): each store-day
-    carries a payment_breakdown MAP; the company rollup explodes the
-    map entries, sums per (date, method), and rebuilds the map. The
-    registered form serializes the final map to a sorted entry string
-    (deterministic hash), exactly like sd_nested.
+    carries a payment_breakdown MAP (:func:`store_daily_nested`); the
+    company rollup explodes the map entries, sums per (date, method),
+    and rebuilds the map. The registered form serializes the final map
+    to a sorted entry string (deterministic hash), exactly like
+    sd_nested.
 
     Scale: explode emits <=5 rows per store-day (bounded enum), the
     re-agg shuffles one row per (date, method) — both tiny at any
     corpus size."""
-    pay = payment_breakdown_per_store_day(txns)
-    nested = pay.groupBy("store_id", "sale_date").agg(
-        F.map_from_entries(
-            F.sort_array(
-                F.collect_list(F.struct("payment_method", "net_amount"))
-            )
-        ).alias("payment_breakdown")
-    )
-    exploded = nested.select(
+    exploded = store_daily_nested(txns).select(
         "sale_date",
         F.explode("payment_breakdown").alias("method", "net"),
     )
     per_method = exploded.groupBy("sale_date", "method").agg(
-        F.sum(F.round(F.col("net") * 100).cast("long")).alias("net_c")
+        F.sum(cents(F.col("net"))).alias("net_c")
     )
     return per_method.groupBy("sale_date").agg(
         F.array_join(
@@ -242,7 +241,7 @@ def product_day_partial(txns: DataFrame) -> DataFrame:
     """The per-(store, day, sku) decomposable sums — the stored form
     of the ``psd`` corpus artifact (r13). Pure sums, so shard-wise
     union-append re-aggregated by the three keys is exact under any
-    shard split (same claim as ``history.store_daily_metrics_cents``;
+    shard split (same claim as ``history.STORE_DAILY``;
     no basket caveat — nothing here crosses rows)."""
     return txns.groupBy("store_id", "sale_date", "item_sku").agg(
         F.sum("quantity").alias("units"),
@@ -411,12 +410,26 @@ def product_daily_exact(txns: DataFrame) -> DataFrame:
     )
 
 
-def product_daily_top5_parity(txns: DataFrame, k: int = 5) -> DataFrame:
-    """A6 parity mode: rollup computed from each store's top-K list only —
-    intentionally lossy, bug-for-bug with
-    ``calc-product-metrics/lambda_function.py:79-103`` (products outside
-    any store's top-5 are undercounted)."""
-    top = top_products_per_store_day(txns, k)
+def top_products_long(store_daily: DataFrame) -> DataFrame:
+    """store_daily's nested top_products lists, one row per (store,
+    day, rank) — the rows :func:`top_products_per_store_day` returns."""
+    return store_daily.select(
+        "store_id", "sale_date", F.explode("top_products").alias("tp")
+    ).select(
+        "store_id",
+        "sale_date",
+        F.col("tp.item_sku").alias("item_sku"),
+        F.col("tp.units").alias("units"),
+        F.col("tp.revenue").alias("revenue"),
+        F.col("tp.rank").alias("rank"),
+    )
+
+
+def product_daily_from_top(top: DataFrame) -> DataFrame:
+    """A6 parity rollup of per-(store, day) top-K rows
+    (store_id, sale_date, item_sku, units, revenue): the facts' rank
+    step (:func:`product_daily_top5_parity`) or store_daily's nested
+    lists (:func:`top_products_long`, the daily pipeline)."""
     g = top.groupBy("sale_date", "item_sku").agg(
         F.sum("units").alias("units_sold"),
         F.sum(cents(F.col("revenue"))).alias("rev_c"),
@@ -431,3 +444,11 @@ def product_daily_top5_parity(txns: DataFrame, k: int = 5) -> DataFrame:
         F.size("stores_set").cast("long").alias("store_count"),
         F.concat_ws(",", "stores_set").alias("stores_sold_at"),
     )
+
+
+def product_daily_top5_parity(txns: DataFrame, k: int = 5) -> DataFrame:
+    """A6 parity mode: rollup computed from each store's top-K list only —
+    intentionally lossy, bug-for-bug with
+    ``calc-product-metrics/lambda_function.py:79-103`` (products outside
+    any store's top-5 are undercounted)."""
+    return product_daily_from_top(top_products_per_store_day(txns, k))

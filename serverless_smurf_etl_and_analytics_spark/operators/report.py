@@ -7,7 +7,10 @@ priority-sorted recommendations (O5, ``:210-211``).
 Here the report is DATA: one row per line with (section_rank, line_no,
 line), so the text layer is an oracle-checkable query; rendering to a
 single string (the reference's ``textwrap.fill`` presentation,
-``:170-175``) is a driver-side join over the collected lines.
+``:170-175``) is a driver-side join over the collected lines. Its one
+input is a store_daily-shaped frame (plus the recommendations), as the
+reference's report reads the persisted summaries: the daily pipeline
+passes its cached store_daily, so the report reads no fact row.
 
 All numbers are formatted with C-style ``format_string`` — DuckDB's
 ``printf`` produces byte-identical text, and every value is an exact
@@ -33,7 +36,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .insights import recommendations, shared_insight_frames
+from ..functions.money import cents, dollars
+from .insights import shared_insight_frames
 from .metrics import company_daily, payment_breakdown, store_day_metrics
 
 
@@ -57,31 +61,22 @@ def _section(df: DataFrame, rank: int, line: F.Column, order: list) -> DataFrame
 
 
 def daily_report_lines(
-    txns: DataFrame,
-    date: str,
-    recs: DataFrame | None = None,
-    company: DataFrame | None = None,
+    store_daily: DataFrame, date: str, recs: DataFrame
 ) -> DataFrame:
     """The report body for one date as (section_rank, line_no, line)
     rows — header, company KPIs (+ best/worst store), payment methods
     by amount desc, and recommendations by priority rank.
 
-    ``recs``: optionally a precomputed recommendations DataFrame (the
-    pipeline passes its persisted anomaly-derived set so the report
-    does not re-run the window chain over the fact table).
+    ``store_daily``: a ``metrics.store_daily_nested``-shaped frame
+    covering ``date`` — the pipeline's cached store_daily, or the
+    nested shape of the date's facts (r1). The header and KPIs are its
+    company rollup; the payment lines sum its ``payment_breakdown`` and
+    ``payment_lines`` maps per method, in integer cents, so they are
+    exact. ``recs``: recommendations covering ``date`` (the pipeline
+    passes its set derived from the persisted anomalies)."""
+    day = store_daily.filter(F.col("sale_date") == date)
 
-    ``company``: optionally a ``metrics.company_daily`` frame covering
-    ``date`` (the pipeline passes the rollup of its cached store_daily,
-    so the header and KPIs do not re-aggregate the day's facts). The
-    payment section always reads the facts: store_daily's
-    ``payment_breakdown`` map carries no line count."""
-    day = txns.filter(F.col("sale_date") == date)
-
-    company = (
-        company_daily(store_day_metrics(day))
-        if company is None
-        else company.filter(F.col("sale_date") == date)
-    )
+    company = company_daily(day)
     header = _section(
         company,
         1,
@@ -107,7 +102,24 @@ def daily_report_lines(
         [F.col("sale_date")],
     )
 
-    pay = payment_breakdown(day)
+    pay = (
+        day.select(
+            F.explode("payment_breakdown").alias("payment_method", "net"),
+            "payment_lines",
+        )
+        .groupBy("payment_method")
+        .agg(
+            F.sum(cents(F.col("net"))).alias("net_c"),
+            F.sum(F.col("payment_lines")[F.col("payment_method")]).alias(
+                "line_count"
+            ),
+        )
+        .select(
+            "payment_method",
+            dollars(F.col("net_c")).alias("net_amount"),
+            "line_count",
+        )
+    )
     payments = _section(
         pay,
         3,
@@ -120,9 +132,7 @@ def daily_report_lines(
         [F.desc("net_amount"), F.asc("payment_method")],
     )
 
-    recs = (
-        recommendations(txns) if recs is None else recs
-    ).filter(F.col("sale_date") == date)
+    recs = recs.filter(F.col("sale_date") == date)
     rec_lines = _section(
         recs,
         4,

@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .metrics import top_products_per_store_day
+from ..functions.money import dollars
+from .metrics import store_day_partial, top_products_per_store_day
 
 
 def kpi_for_range(txns: DataFrame, start: str, end: str) -> DataFrame:
@@ -135,20 +136,15 @@ def point_lookup(txns: DataFrame, store_id: str, date: str) -> DataFrame:
 
 def range_filter_daily(txns: DataFrame, start: str, end: str) -> DataFrame:
     """P4: one range-filtered scan replacing the reference's day-by-day
-    query loop (``export-to-quicksight/lambda_function.py:57-94``)."""
-    g = (
+    query loop (``export-to-quicksight/lambda_function.py:57-94``): the
+    store-day partial of the range's facts, projected to two sums."""
+    return store_day_partial(
         txns.filter(F.col("sale_date").between(start, end))
-        .groupBy("store_id", "sale_date")
-        .agg(
-            F.sum("line_cents").alias("sales_c"),
-            F.count(F.lit(1)).alias("transaction_count"),
-        )
-    )
-    return g.select(
+    ).select(
         "store_id",
         "sale_date",
-        (F.col("sales_c") / 100.0).cast("double").alias("total_sales"),
-        "transaction_count",
+        dollars(F.col("sales_c")).alias("total_sales"),
+        F.col("txn_count").alias("transaction_count"),
     )
 
 

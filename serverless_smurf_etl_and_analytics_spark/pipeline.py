@@ -43,10 +43,14 @@ one driver thread per write) and waits for all of them:
   only the run's fact slice. Then the one barrier: store_daily is read
   back, persisted and counted.
 - B: company_daily, product_daily, the three insight sets and the
-  report, which read the cached store_daily, the persisted daily cents
-  and anomaly set, or the facts.
+  report, which read the cached store_daily or the persisted daily
+  cents and anomaly set. No write after phase A reads the facts.
 - C: the five NDJSON exports. ``manifest.json`` is written after all
   five commit, and the ledger row after that.
+
+store_daily's ``payment_lines`` map (line counts per method) feeds the
+report; partitions written before it existed read it as null, and the
+report reads only ``run_date``'s partition, which every run rewrites.
 
 Each write's DataFrame is built on that write's own thread, so the
 py4j composition and Catalyst analysis of one plan overlap the others
@@ -249,41 +253,6 @@ def materialize_store_daily(df: DataFrame, path: str) -> StructType:
     return df.schema
 
 
-def _top_products_long(store_daily: DataFrame) -> DataFrame:
-    """store_daily's nested top_products lists, one row per (store,
-    day, sku)."""
-    return store_daily.select(
-        "store_id", "sale_date", F.explode("top_products").alias("tp")
-    ).select(
-        "store_id",
-        "sale_date",
-        F.col("tp.item_sku").alias("item_sku"),
-        F.col("tp.units").alias("units"),
-        F.col("tp.revenue").alias("revenue"),
-    )
-
-
-def _product_daily(store_daily: DataFrame) -> DataFrame:
-    """product_daily: the top-5 parity rollup of store_daily's nested
-    top_products lists (see phase B of :func:`run_daily_pipeline`)."""
-    return (
-        _top_products_long(store_daily)
-        .groupBy("sale_date", "item_sku")
-        .agg(
-            F.sum("units").alias("units_sold"),
-            (
-                F.sum(F.round(F.col("revenue") * 100).cast("long"))
-                .cast("long")
-                / 100.0
-            ).cast("double").alias("revenue"),
-            F.countDistinct("store_id").alias("store_count"),
-            F.concat_ws(
-                ",", F.sort_array(F.collect_set("store_id"))
-            ).alias("stores_sold_at"),
-        )
-    )
-
-
 def run_daily_pipeline(
     spark: SparkSession,
     sf_dir: str,
@@ -386,9 +355,10 @@ def run_daily_pipeline(
         #  - company_daily rolls up the MATERIALIZED store_daily
         #    (calc-company-metrics consumes the persisted summaries, never
         #    the fact table).
-        #  - product_daily is the top-5 parity rollup from the
-        #    MATERIALIZED nested top_products lists (calc-product-metrics
-        #    consumes each store's top-5, SURVEY A6 parity trap).
+        #  - product_daily is the top-5 parity rollup (a6's
+        #    ``metrics.product_daily_from_top``) of the MATERIALIZED
+        #    nested top_products lists (calc-product-metrics consumes
+        #    each store's top-5, SURVEY A6 parity trap).
         #  - insights: ONE persisted daily-cents + ONE persisted anomaly
         #    set feed all three classifiers (no duplicate window chains).
         #    daily-cents is DERIVED FROM THE MATERIALIZED MV, not the fact
@@ -397,11 +367,11 @@ def run_daily_pipeline(
         #    so the window chain reads |stores| x |days| rows instead of
         #    rescanning raw transactions (detect-anomalies reads the
         #    persisted summaries too, lambda_function.py:64-135).
-        #  - the daily report for run_date (O5/O9 string layer); its
-        #    header and KPIs read the company rollup of the cached
-        #    store_daily, and its recommendations section reuses the
-        #    persisted anomaly set, so neither re-aggregates the facts.
-        #    Only the payment section reads the day's fact slice.
+        #  - the daily report for run_date (O5/O9 string layer) reads
+        #    the cached store_daily (header, KPIs, and the payment lines
+        #    from its two payment maps) and the recommendations derived
+        #    from the persisted anomaly set. No phase after A reads the
+        #    facts.
         #  Each write builds its own plan on its thread; the frames the
         #  writes share (daily, anomalies, recs) are built here.
         daily = keep(
@@ -426,7 +396,9 @@ def run_daily_pipeline(
                 os.path.join(out_dir, "company_daily"),
             ),
             "product_daily_rows": (
-                partial(_product_daily, store_daily),
+                lambda: metrics.product_daily_from_top(
+                    metrics.top_products_long(store_daily)
+                ),
                 os.path.join(out_dir, "product_daily"),
             ),
             **{
@@ -435,10 +407,7 @@ def run_daily_pipeline(
             },
             "report_lines": (
                 lambda: report.daily_report_lines(
-                    txns,
-                    run_date,
-                    recs=recs,
-                    company=metrics.company_daily(store_daily),
+                    store_daily, run_date, recs
                 ).coalesce(1),
                 os.path.join(out_dir, "report"),
             ),
@@ -452,9 +421,12 @@ def run_daily_pipeline(
         stats.update({stat: rows for stat, (rows, _) in written.items()})
 
         # Phase C. The five BI exports (S7) from the MATERIALIZED tables,
-        #    written together; the insight tables are read with the
-        #    schemas their phase-B writes returned. manifest.json is
-        #    written after all five commit, and the ledger row after that.
+        #    written together, each through its registry builder's
+        #    shape function (x1-x5); store_summaries and top_products
+        #    read the export window of the cached store_daily, and the
+        #    insight tables are read with the schemas their phase-B
+        #    writes returned. manifest.json is written after all five
+        #    commit, and the ledger row after that.
         an_mv, tr_mv, re_mv = (
             spark.read.schema(written[f"{name}_rows"][1]).parquet(
                 os.path.join(ins_path, name)
@@ -463,22 +435,11 @@ def run_daily_pipeline(
         )
         start = export_start or run_date
         end = export_end or run_date
+        in_window = store_daily.filter(F.col("sale_date").between(start, end))
         datasets = {
-            "store_summaries": store_daily.filter(
-                F.col("sale_date").between(start, end)
-            ).select(
-                F.col("sale_date").alias("date"),
-                "store_id",
-                F.concat(F.lit("Store "), F.col("store_id")).alias(
-                    "store_name"
-                ),
-                "total_sales",
-                F.col("transaction_count").alias("transactions"),
-                F.col("item_count").alias("items_sold"),
-                F.col("avg_transaction").alias("average_transaction"),
-            ),
-            "top_products": _top_products_long(store_daily).filter(
-                F.col("sale_date").between(start, end)
+            "store_summaries": export._export_store_summaries_from(in_window),
+            "top_products": export._export_top_products_from(
+                metrics.top_products_long(in_window)
             ),
             "anomalies": export._export_anomalies_from(an_mv),
             "trends": export._export_trends_from(tr_mv),

@@ -131,7 +131,7 @@ register(
     "a2_payment_per_store_day",
     lambda spark, sf: metrics.payment_breakdown_per_store_day(
         tables.transactions(spark, sf)
-    ),
+    ).drop("line_count"),
     f"""
 WITH {TXN}
 SELECT
@@ -162,8 +162,9 @@ FROM ranked WHERE rank <= 5
 # 77-104): A1 totals + top_products list + payment_breakdown map. The
 # registered form serializes the nested columns to deterministic
 # strings (sorted entry lists) so the oracle hash covers their VALUES;
-# metrics.store_daily_nested is the truly-nested (array<struct> + map)
-# twin used by entry() and the pipeline materialization.
+# it is a string projection of metrics.store_daily_nested, the
+# truly-nested (array<struct> + map) table used by entry() and the
+# pipeline materialization.
 register(
     "sd_nested_store_daily",
     lambda spark, sf: metrics.store_daily_nested_flat(

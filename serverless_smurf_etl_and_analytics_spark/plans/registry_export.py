@@ -6,8 +6,11 @@ Spark (``format_string``) and DuckDB (``printf``).
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from .. import tables
-from ..operators import export, report
+from ..operators import export, metrics, report
+from ..operators.insights import recommendations
 from .registry import (
     R_END,
     R_START,
@@ -176,10 +179,17 @@ SELECT 'recommendations', count(*), cast(6 AS int) FROM x_recs
 
 # --- daily report (O5/O9 + §2.8 string formatting) ------------------------
 
+
 register(
     "r1_daily_report_lines",
     lambda spark, sf: report.daily_report_lines(
-        tables.transactions(spark, sf), REPORT_DATE
+        metrics.store_daily_nested(
+            tables.transactions(spark, sf).filter(
+                F.col("sale_date") == REPORT_DATE
+            )
+        ),
+        REPORT_DATE,
+        recommendations(tables.transactions(spark, sf)),
     ),
     f"""
 WITH {TXN}, {SQL_ANOMALIES}, {SQL_RECS},

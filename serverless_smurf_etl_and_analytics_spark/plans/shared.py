@@ -13,6 +13,12 @@ serving filters and the ``i*`` insight chain all read one
 materialization of each grain instead of re-aggregating the fact table
 per query.
 
+Every plan is built on ``metrics.store_day_partial``, the one store-day
+aggregation: A1 (which uses all five of its aggregates), its clustered
+two-sum projection ``history.store_daily_cents`` (the window consumers
+read its store_id layout), and the payment and top-5 grains store_daily
+nests.
+
 Scale notes:
 - ``persist()`` is lazy — warming marks the plans; the first consuming
   action materializes them. Queries that never touch transactions (the
@@ -48,10 +54,10 @@ def warm_store_day_layer(spark: SparkSession, sf_dir: str) -> None:
     txns = tables.transactions(spark, sf_dir)
     for mv in (
         # A1 grand totals — consumed by a1, sd_nested, j5 grid, p1-p6
-        # serving, x1 export, a4 company rollup.
+        # serving, a4 company rollup.
         metrics.store_day_metrics(txns),
         # A2 store-day payment grain — consumed by a2_per_store_day,
-        # a4_payment_map_rollup, sd_nested's map.
+        # a4_payment_map_rollup, sd_nested's maps.
         metrics.payment_breakdown_per_store_day(txns),
         # A3 top-5 grain — consumed by a3, a6 parity, a15 re-agg,
         # sd_nested's array, x2 export.

@@ -13,6 +13,8 @@ import pytest
 
 from serverless_smurf_etl_and_analytics_spark import pipeline, tables
 from serverless_smurf_etl_and_analytics_spark.operators import (
+    export,
+    insights,
     metrics,
     report,
 )
@@ -209,18 +211,72 @@ def test_company_daily_matches_direct_computation(spark, out_dir):
 
 
 def test_pipeline_report_equals_fact_built_report(spark, out_dir):
-    """The report the run writes, whose header and KPIs come from the
-    cached store_daily, equals the report built from the facts alone
-    (the r1 registry path), row for row."""
+    """The report the run writes, built from its cached store_daily,
+    equals the report built from the facts alone (the r1 registry
+    path), row for row. Built as the run builds it, from the store_daily
+    table and the run's recommendations, its analyzed plan reads no
+    fact relation: the run reads facts only in phase A."""
     d, _ = out_dir
     cols = ("section_rank", "line_no", "line")
     got = spark.read.parquet(os.path.join(d, "report")).select(*cols)
+    txns = tables.transactions(spark, SF_DIR)
     want = report.daily_report_lines(
-        tables.transactions(spark, SF_DIR), RUN_DATE
+        metrics.store_daily_nested(
+            txns.filter(txns.sale_date == RUN_DATE)
+        ),
+        RUN_DATE,
+        insights.recommendations(txns),
     ).select(*cols)
     got_rows = sorted(got.collect())
     assert got_rows
     assert got_rows == sorted(want.collect())
+
+    from_tables = report.daily_report_lines(
+        spark.read.parquet(os.path.join(d, "store_daily")),
+        RUN_DATE,
+        spark.read.parquet(os.path.join(d, "insights", "recommendations")),
+    )
+    analyzed = from_tables._jdf.queryExecution().analyzed().toString()
+    relations = [ln for ln in analyzed.splitlines() if "Relation [" in ln]
+    assert relations
+    assert not [r for r in relations if "l_shipdate" in r], analyzed
+    files = from_tables.inputFiles()
+    assert files
+    assert all(d in f and SF_DIR not in f for f in files), files
+    assert sorted(from_tables.select(*cols).collect()) == got_rows
+
+
+def test_exports_equal_registry_builders(spark, out_dir):
+    """The run's store_summaries and top_products exports equal the
+    registry's x1 and x2 builders over the run's export window, in the
+    reference's shape (``export-to-quicksight/lambda_function.py:
+    180-248``)."""
+    d, _ = out_dir
+    txns = tables.transactions(spark, SF_DIR)
+    builders = {
+        "store_summaries": export.export_store_summaries,
+        "top_products": export.export_top_products,
+    }
+    for name, build in builders.items():
+        want = build(txns, "2001-06-01", "2001-06-30")
+        got = spark.read.json(os.path.join(d, "exports", name))
+        assert sorted(got.columns) == sorted(want.columns), name
+        rows = sorted(want.collect())
+        assert rows, name
+        assert sorted(got.select(*want.columns).collect()) == rows, name
+
+
+def test_product_daily_equals_a6_parity(spark, out_dir):
+    """The run's product_daily, rolled up from store_daily's nested
+    top-5 lists, equals a6's top-5 parity rollup of the same facts."""
+    d, _ = out_dir
+    want = metrics.product_daily_top5_parity(
+        tables.transactions(spark, SF_DIR)
+    )
+    got = spark.read.parquet(os.path.join(d, "product_daily"))
+    rows = sorted(want.collect())
+    assert rows
+    assert sorted(got.select(*want.columns).collect()) == rows
 
 
 def test_rerun_is_noop(spark, out_dir):

@@ -173,6 +173,26 @@ def test_store_day_windows_reuse_mv_layout(spark):
         assert "+- Sort" not in top, f"{name}:\n{top[:1500]}"
 
 
+def test_store_daily_cents_prunes_the_partial(spark):
+    """history.store_daily_cents is a projection of the one store-day
+    partial (metrics.store_day_partial): column pruning must drop the
+    partial's countDistinct, so the optimized plan carries no
+    count(DISTINCT) and no Expand. Built over an in-memory fact frame,
+    so no persisted MV stands in for the plan."""
+    from serverless_smurf_etl_and_analytics_spark.operators import history
+
+    facts = spark.createDataFrame(
+        [("0001", "2001-01-01", 7, 1250, 50, 2)],
+        "store_id string, sale_date string, transaction_id long, "
+        "line_cents long, discount_cents long, quantity long",
+    )
+    plan = history.store_daily_cents(facts)._jdf.queryExecution()
+    optimized = plan.optimizedPlan().toString()
+    assert "Aggregate" in optimized
+    assert "count(distinct" not in optimized.lower(), optimized
+    assert "Expand" not in optimized, optimized
+
+
 def test_heavy_hitters_single_fact_scan(spark):
     """hh1's r4 shape (re-agg + broadcast join back) planned the
     per-SKU aggregation twice — two parquet scans, zero ReusedExchange

@@ -69,17 +69,23 @@ def _analyzed(df):
 
 
 def test_report_plan_has_no_icu_case_mapping(spark):
-    """Neither the fact-built report (r1) nor the one the pipeline
-    builds from a company rollup calls initcap, upper or lower."""
-    from serverless_smurf_etl_and_analytics_spark.operators import metrics
+    """Neither the report over one date's facts (r1) nor the one built
+    from a whole store_daily table calls initcap, upper or lower."""
+    from serverless_smurf_etl_and_analytics_spark.operators import (
+        insights,
+        metrics,
+    )
 
     txns = tables.transactions(spark, SF_DIR)
-    company = metrics.company_daily(metrics.store_day_metrics(txns))
-    for df in (
-        report.daily_report_lines(txns, "2001-11-04"),
-        report.daily_report_lines(txns, "2001-11-04", company=company),
+    day = txns.filter(F.col("sale_date") == "2001-11-04")
+    recs = insights.recommendations(txns)
+    for store_daily in (
+        metrics.store_daily_nested(day),
+        metrics.store_daily_nested(txns),
     ):
-        plan = _analyzed(df)
+        plan = _analyzed(
+            report.daily_report_lines(store_daily, "2001-11-04", recs)
+        )
         for fn in _ICU_CASE_FUNCTIONS:
             assert fn not in plan, fn
         assert "translate(" in plan
